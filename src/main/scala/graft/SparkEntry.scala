@@ -4050,9 +4050,8 @@ object SparkEntry {
       val li = liTarget(T(s, dir, "lineitem"))
       val x = col("l_extendedprice")
       val mm = li.agg(min(x).cast("double"), max(x).cast("double")).head
-      val (mn, w) = (mm.getDouble(0), (mm.getDouble(1) - mm.getDouble(0)) / 10000)
       def snapOf(c: org.apache.spark.sql.Column) =
-        lit(mn) + floor((c - lit(mn)) / lit(w)) * lit(w)
+        Histograms.gridSnap(c, mm.getDouble(0), mm.getDouble(1), 10000)
       // lower weighted median over a bounded histogram: smallest
       // snapped value whose cumulative count reaches half the rows
       def histMedian(c: org.apache.spark.sql.Column): Double = {

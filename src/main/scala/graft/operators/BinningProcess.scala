@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, NumericType, StringType}
+import org.apache.spark.sql.types.{DoubleType, StringType}
 
 import scala.collection.parallel.CollectionConverters._
 
@@ -10,22 +10,35 @@ import graft.core.Prebinning
 
 /** Multi-variable binning process
   * (`optbinning/binning/binning_process.py:438`), Spark-native
-  * two-pass data plane per SURVEY §3.2:
+  * two-pass data plane per SURVEY §3.2. It is the one data plane of
+  * every binary fit and of every continuous numeric fit: a
+  * single-variable `OptimalBinning.fit` or
+  * `ContinuousOptimalBinning.fit` runs as a one-variable batch, so a
+  * `BinningConfig` parameter means the same thing in both entry points.
   *
-  *  - Pass A (class totals + range/ndv) is ALWAYS the no-shuffle
-  *    global conditional aggregate over the UN-melted table — one
-  *    partial row per partition — chunked into <= ~256-expression
-  *    aggregates that run as CONCURRENT driver actions, so each
-  *    generated method stays under HotSpot's JIT ceiling at any batch
-  *    width and each chunk's scan prunes to its own columns.
+  *  - Row preparation ([[Rows]]): each variable's class column carries
+  *    its special codes and its row filters (outlier detector,
+  *    fix_lb/fix_ub: a removed clean row gets
+  *    `Preprocess.FilteredClass`, which no aggregate reads), and its
+  *    weight carries its class weights.
+  *  - Pass A (class totals + range/ndv). Binary: the no-shuffle global
+  *    conditional aggregate over the UN-melted table — one partial row
+  *    per partition — chunked into <= ~256-expression aggregates that
+  *    run as CONCURRENT driver actions, so each generated method stays
+  *    under HotSpot's JIT ceiling at any batch width and each chunk's
+  *    scan prunes to its own columns. Continuous: one melted
+  *    `groupBy(var, cls)`.
   *  - Pass B (value histograms) melts all variables to long format via
   *    [[chunkedMelt]] (a union of small stack() generators, same JIT
   *    reasoning) and aggregates in ONE shuffle (`groupBy(variable,
   *    value)` with map-side partial aggregation, so shuffle volume is
   *    bounded by n_vars x histogram buckets per partition, not by row
-  *    count); high-cardinality variables are collapsed onto
-  *    per-variable uniform grids first, and all-pinned batches skip
-  *    Pass A entirely (`fitPinnedBatch`).
+  *    count); variables with more distinct values than their
+  *    `histogramMaxBuckets` are collapsed onto per-variable uniform
+  *    grids first (`Histograms.gridSnap`).
+  *  - Batches whose every variable has user splits skip Pass A: one
+  *    aggregate keyed by in-bin representative gives totals and
+  *    histograms at once ([[pinnedAggregate]]).
   *
   * The per-variable solve loop runs on the driver over the collected
   * aggregates in parallel (replaces the reference's joblib threading).
@@ -61,42 +74,65 @@ object BinningProcess {
           varOverrides: Map[String, BinningConfig] = Map.empty,
           selection: Selection = Selection(),
           weightCol: Option[String] = None,
-          maxGridBuckets: Int = 10000,
           /** Force these variables into the categorical batch regardless
             * of column type (`categorical_variables`,
             * `binning_process.py:559`; values are cast to string). */
           categoricalVariables: Seq[String] = Seq.empty)
       : FittedBinningProcess = {
+    require(targetType == "binary",
+            "continuous targets: use BinningProcess.fitContinuous")
     val schema = df.schema
     val forced = categoricalVariables.toSet
-    val (catVars, numVars) = variables.partition { v =>
-      forced(v) || schema(v).dataType == StringType
+    val cfgs = variables.map { v =>
+      val categorical = forced(v) || schema(v).dataType == StringType
+      v -> cfgFor(v, config, varOverrides,
+                  if (categorical) "categorical" else "numerical")
     }
-    require((catVars ++ numVars).size == variables.size)
-
-    val y = col(yCol).cast(DoubleType)
-    val w = weightCol.map(c => col(c).cast(DoubleType)).getOrElse(lit(1.0))
-
-    val numFits: Map[String, FittedOptimalBinning] =
-      if (numVars.isEmpty) Map.empty
-      else fitNumericBatch(df, numVars, y, w, targetType, config,
-                           varOverrides, maxGridBuckets)
-
-    val catFits: Map[String, FittedOptimalBinning] =
-      if (catVars.isEmpty) Map.empty
-      else fitCategoricalBatch(df, catVars, y, w, config, varOverrides)
-
-    val all = numFits ++ catFits
-    new FittedBinningProcess(variables.toArray, all, selection)
+    new FittedBinningProcess(variables.toArray,
+                             fitBinary(df, cfgs, yCol, weightCol), selection)
   }
+
+  /** Continuous-target process over numeric variables: per-variable
+    * continuous fits. */
+  def fitContinuous(df: DataFrame, variables: Seq[String], yCol: String,
+                    config: BinningConfig = BinningConfig(),
+                    varOverrides: Map[String, BinningConfig] = Map.empty,
+                    weightCol: Option[String] = None)
+      : Map[String, FittedContinuousBinning] =
+    fitContinuousVars(df, variables.map(v =>
+      v -> cfgFor(v, config, varOverrides, "numerical")), yCol, weightCol)
 
   private def cfgFor(v: String, config: BinningConfig,
                      overrides: Map[String, BinningConfig],
                      dtype: String): BinningConfig =
     overrides.getOrElse(v, config).copy(name = v, dtype = dtype)
 
-  /** Continuous-target process: same melted single-shuffle shape with the
-    * continuous per-bucket stats; returns per-variable continuous fits. */
+  /** Binary-target fits of (variable, config) pairs, each config used
+    * as given; `dtype = "categorical"` selects the categorical batch. */
+  private[graft] def fitBinary(df: DataFrame,
+                               vars: Seq[(String, BinningConfig)],
+                               yCol: String, weightCol: Option[String])
+      : Map[String, FittedOptimalBinning] = {
+    val (cat, num) = vars.partition(_._2.dtype == "categorical")
+    (if (num.isEmpty) Map.empty[String, FittedOptimalBinning]
+     else fitNumericBatch(new Rows(df, num, yCol, weightCol,
+                                   isNumeric = true))) ++
+    (if (cat.isEmpty) Map.empty
+     else fitCategoricalBatch(new Rows(df, cat, yCol, weightCol,
+                                       isNumeric = false)))
+  }
+
+  /** Continuous-target fits of numeric (variable, config) pairs, each
+    * config used as given. */
+  private[graft] def fitContinuousVars(df: DataFrame,
+                                       vars: Seq[(String, BinningConfig)],
+                                       yCol: String,
+                                       weightCol: Option[String])
+      : Map[String, FittedContinuousBinning] =
+    if (vars.isEmpty) Map.empty
+    else fitContinuousBatch(new Rows(df, vars, yCol, weightCol,
+                                     isNumeric = true))
+
   /** UNION of <= `chunkSize`-variable stack() generators over
     * pre-projected per-variable value/class columns — the one melt
     * shape every batch path uses. One monolithic stack over hundreds
@@ -107,405 +143,436 @@ object BinningProcess {
     * its own columns, and the union feeds ONE downstream aggregate.
     * Per-var value/cls expressions sit in the chunk's projection, so
     * per-row work is O(1) per (row, var) — no when(var === v) chains.
+    * Melted rows carry the variable's name as `var`, projected as a
+    * literal column so no name is ever spliced into the stack's SQL
+    * text (a `'` in a name would not parse); the expressions may read
+    * the target and weight as `__y` / `__w`.
+    * `wExpr`, when given, melts a per-variable weight column instead
+    * of the shared `w` (class weights).
     */
   private[graft] def chunkedMelt(df: DataFrame, vars: Seq[String],
                           y: Column,
                           w: Column, valExpr: String => Column,
                           clsExpr: String => Column,
+                          wExpr: Option[String => Column] = None,
                           chunkSize: Int = 16): DataFrame = {
     // a bare Nil would surface as an opaque empty.reduceLeft from the
     // final union — fail with the actual contract instead (public
     // entry points guard with an early Map.empty; this catches new
     // callers)
     require(vars.nonEmpty, "chunkedMelt requires at least one variable")
+    val (shared, fields) =
+      if (wExpr.isEmpty) (Seq("y", "w"), "(var, x, cls)")
+      else (Seq("y"), "(var, x, cls, w)")
     vars.zipWithIndex.grouped(chunkSize).map { chunk =>
       val repCols = chunk.flatMap { case (v, i) =>
-        Seq(valExpr(v).as(s"__x$i"), clsExpr(v).as(s"__c$i"))
+        Seq(lit(v).as(s"__v$i"), valExpr(v).as(s"__x$i"),
+            clsExpr(v).as(s"__c$i")) ++
+          wExpr.map(f => f(v).as(s"__w$i"))
       }
       val stackExpr = s"stack(${chunk.length}, " +
-        chunk.map { case (v, i) => s"'$v', __x$i, __c$i" }
-          .mkString(", ") + ") as (var, x, cls)"
+        chunk.map { case (_, i) =>
+          (Seq(s"__v$i", s"__x$i", s"__c$i") ++
+            wExpr.map(_ => s"__w$i")).mkString(", ")
+        }.mkString(", ") + s") as $fields"
       df.withColumn("__y", y).withColumn("__w", w)
-        .select(col("__y").as("y") +: col("__w").as("w") +: repCols: _*)
-        .selectExpr("y", "w", stackExpr)
+        .select(shared.map(c => col(s"__$c").as(c)) ++ repCols: _*)
+        .selectExpr(shared :+ stackExpr: _*)
     }.reduce(_ unionByName _)
   }
 
-  def fitContinuous(df: DataFrame, variables: Seq[String], yCol: String,
-                    config: BinningConfig = BinningConfig(),
-                    varOverrides: Map[String, BinningConfig] = Map.empty,
-                    weightCol: Option[String] = None)
-      : Map[String, FittedContinuousBinning] = {
-    if (variables.isEmpty) return Map.empty
-    val y = col(yCol).cast(DoubleType)
-    val w = weightCol.map(c => col(c).cast(DoubleType)).getOrElse(lit(1.0))
-    // class column follows each variable's OVERRIDE config (same
-    // invariant as the binary batch path): a per-var specialCodes
-    // override must class its own rows, or special rows pollute the
-    // value histogram the override's solve expects to be clean
-    def clsOf(v: String): Column =
-      Preprocess.rowClass(col(v).cast(DoubleType), isNumeric = true,
-        cfgFor(v, config, varOverrides, "numerical").specialCodes)
-    val base = chunkedMelt(df, variables, y, w,
-        v => col(v).cast(DoubleType), clsOf)
-      .select(col("var"), col("x"), col("y"), col("w"), col("cls"))
-    val aggExprs = Seq(
-      count(lit(1)).as("n"), sum(col("w")).as("wt"),
-      sum(col("w") * col("y")).as("wy"),
-      sum(col("w") * col("y") * col("y")).as("wy2"),
-      min(col("w") * col("y")).as("ymin"),
-      max(col("w") * col("y")).as("ymax"),
-      sum(when(col("w") * col("y") === 0.0, 1L).otherwise(0L)).as("zeros"),
-      stddev_pop(col("w") * col("y")).as("ystd"))
+  /** Row preparation of one batch, shared by all of its passes:
+    * per-variable value, class and weight columns. Variable i's class
+    * folds in its special codes and, for numeric batches, its row
+    * filters (the outlier detector is fitted here, on clean rows,
+    * before the bound filter applies); its weight folds in its class
+    * weights. A variable with neither keeps the plain class column and
+    * the shared weight.
+    */
+  private final class Rows(df: DataFrame,
+                           vs: Seq[(String, BinningConfig)],
+                           yCol: String, weightCol: Option[String],
+                           isNumeric: Boolean) {
+    val vars: IndexedSeq[(String, BinningConfig)] = vs.toIndexedSeq
+    private val y = col(yCol).cast(DoubleType)
+    private val w =
+      weightCol.map(c => col(c).cast(DoubleType)).getOrElse(lit(1.0))
+    val index: Map[String, Int] = vars.map(_._1).zipWithIndex.toMap
 
-    val statsRows = base.groupBy("var", "cls")
-      .agg(aggExprs.head, aggExprs.tail :+
-        approx_count_distinct(col("x")).as("ndv") :+
-        min(col("x")).as("minx") :+ max(col("x")).as("maxx"): _*)
-      .collect()
-    val totalsByVar = statsRows.groupBy(_.getString(0)).map {
-      case (v, rs) =>
-        v -> rs.map { r =>
-          r.getInt(1) -> ContClassTotals(r.getDouble(3), r.getDouble(4),
-            Option(r.get(9)).map(_.asInstanceOf[Double]).getOrElse(0.0),
-            r.getDouble(6), r.getDouble(7), r.getLong(8).toDouble)
-        }.toMap
+    /** Collected rows whose first column is `var`, by variable index. */
+    def byVar(rows: Array[Row]): Map[Int, Array[Row]] =
+      rows.groupBy(row => index(row.getString(0)))
+
+    def name(i: Int): String = vars(i)._1
+    def cfg(i: Int): BinningConfig = vars(i)._2
+    def nClasses(i: Int): Int =
+      Preprocess.missingClassIndex(cfg(i).specialCodes) + 1
+    def x(i: Int): Column =
+      col(name(i)).cast(if (isNumeric) DoubleType else StringType)
+    /** User splits of each variable, sorted; None when it has none. */
+    val pinned: IndexedSeq[Option[Array[Double]]] =
+      vars.map(_._2.userSplits.filter(_.nonEmpty).map(_.sorted))
+
+    val cls: IndexedSeq[Column] = vars.indices.map { i =>
+      val base = Preprocess.rowClass(x(i), isNumeric, cfg(i).specialCodes)
+      val keep = if (isNumeric) rowFilters(i, base) else Nil
+      if (keep.isEmpty) base
+      else when(keep.reduce(_ && _), base)
+        .otherwise(lit(Preprocess.FilteredClass))
     }
-    // NOTE column positions: groupBy(var, cls) -> 0 var, 1 cls, 2 n,
-    // 3 wt, 4 wy, 5 wy2, 6 ymin, 7 ymax, 8 zeros, 9 ystd, 10 ndv,
-    // 11 minx, 12 maxx
 
-    // per-var uniform grid for high-cardinality variables — the same
-    // Histograms.gridCompress semantics (and threshold) the single-var
-    // continuous path applies, so the per-var (var, x) histogram and
-    // the driver collect stay <= histogramMaxBuckets rows per variable
-    // at ANY cardinality instead of collecting every raw double
-    val gridInfo: Map[String, (Double, Double, Int)] =
-      statsRows.filter(_.getInt(1) == Preprocess.CleanClass)
-        .flatMap { r =>
-          val v = r.getString(0)
-          val cap = cfgFor(v, config, varOverrides, "numerical")
-            .histogramMaxBuckets
-          if (r.getLong(10) > cap && !r.isNullAt(11))
-            Some(v -> ((r.getDouble(11), r.getDouble(12), cap)))
-          else None
-        }.toMap
-    def repOf(v: String): Column = {
-      val x = col(v).cast(DoubleType)
-      gridInfo.get(v) match {
-        case Some((mn, mx, cap)) =>
-          val width = (mx - mn) / cap
-          if (width <= 0 || !java.lang.Double.isFinite(width)) x
-          else lit(mn) + floor((x - mn) / width) * lit(width)
-        case None => x
+    val weight: IndexedSeq[Column] = vars.indices.map { i =>
+      cfg(i).classWeight.fold(col("__w"))(_.foldLeft(col("__w")) {
+        case (acc, (label, cw)) =>
+          when(col("__y") === label, acc * cw).otherwise(acc)
+      })
+    }
+
+    /** The frame every un-melted aggregate reads: `__y`, `__w` added. */
+    def wide: DataFrame = df.withColumn("__y", y).withColumn("__w", w)
+
+    def melt(valExpr: Int => Column): DataFrame =
+      chunkedMelt(df, vars.map(_._1), y, w, v => valExpr(index(v)),
+                  v => cls(index(v)),
+                  if (vars.exists(_._2.classWeight.isDefined))
+                    Some(v => weight(index(v)))
+                  else None)
+
+    /** Pass B value of variable i: its grid representative when it is
+      * gridded, its in-bin representative when pinned, else the value.
+      * A pinned representative lies strictly inside its bin (bin 0:
+      * s_0 - 1, bin i: s_{i-1}), so re-digitizing against any subset
+      * of the splits on the driver is exact. */
+    def rep(grid: Map[Int, (Double, Double)])(i: Int): Column =
+      grid.get(i) match {
+        case Some((mn, mx)) =>
+          Histograms.gridSnap(x(i), mn, mx, cfg(i).histogramMaxBuckets)
+        case None => pinned(i) match {
+          case Some(ss) =>
+            ss.indices.foldRight(lit(ss.last): Column) { (k, e) =>
+              when(x(i) < ss(k),
+                   lit(if (k == 0) ss(0) - 1.0 else ss(k - 1)))
+                .otherwise(e)
+            }
+          case None => x(i)
+        }
       }
+
+    /** Keep-predicates of variable i's row filters
+      * (`preprocessing.py:230-261`); missing/special rows always pass.
+      * A predicate that is not TRUE removes the row, like a `where`.
+      * Note: when BOTH bounds are set the reference's if/elif chain
+      * applies only fix_lb (its both-bounds branch is unreachable); we
+      * apply both, the documented intent. */
+    private def rowFilters(i: Int, base: Column): Seq[Column] = {
+      val c = cfg(i)
+      val clean = base === Preprocess.CleanClass
+      val outlier = c.outlierDetector.map { method =>
+        val p = c.outlierParams
+        def num(key: String, dflt: Double): Double = p.get(key) match {
+          case Some(v: Number) => v.doubleValue()
+          case _ => dflt
+        }
+        // fitted on the clean rows; the predicate reads the raw column
+        // (and `__y`), so it evaluates in every pass's projection
+        val cleanDf = df.withColumn("__y", y).where(clean)
+        val drop: Column = method match {
+          case "range" =>
+            Outliers.fitRange(cleanDf, name(i),
+              intervalLength = num("interval_length", 0.5),
+              k = num("k", 1.5),
+              method = p.get("method").map(_.toString).getOrElse("ETI"))
+              .support(x(i))
+          case "zscore" =>
+            // "med"/"mad" in outlierParams skip the stats jobs (caller
+            // already derived them, e.g. for oracle pinning)
+            val pre = (p.get("med"), p.get("mad")) match {
+              case (Some(m: Number), Some(d: Number)) =>
+                Some((m.doubleValue(), d.doubleValue()))
+              case _ => None
+            }
+            Outliers.fitZScore(cleanDf, name(i), num("threshold", 3.5),
+              approx = p.get("approx").exists(_ == true),
+              precomputed = pre)
+          case "yquantile" =>
+            Outliers.fitYQuantile(cleanDf, name(i), "__y",
+              detector = p.get("detector").map(_.toString)
+                .getOrElse("zscore"),
+              nBins = num("n_bins", 5).toInt)
+          case other => throw new IllegalArgumentException(
+            s"outlier_detector $other not supported")
+        }
+        !(clean && drop)
+      }
+      val bounds = (c.fixLb.map(x(i) >= _) ++ c.fixUb.map(x(i) <= _))
+        .reduceOption(_ && _).map(!clean || _)
+      outlier.toSeq ++ bounds
     }
-    val histMelt =
-      if (gridInfo.isEmpty) base
-      else chunkedMelt(df, variables, y, w, repOf, clsOf)
-    val histRows = histMelt.where(col("cls") === Preprocess.CleanClass)
-      .groupBy("var", "x")
-      .agg(aggExprs.head, aggExprs.tail: _*)
+  }
+
+  /** All-pinned fast path, shared by both targets: one
+    * `groupBy(var, cls, rep)` aggregate of `aggs` feeds BOTH the
+    * per-(var, cls) totals (margins over rep) and the exact per-prebin
+    * histogram (clean rows keyed by the in-bin representative).
+    * Non-clean rows collapse to a null rep, so the shuffle key space
+    * stays `vars x (splits + row classes)` — bounded by config, not
+    * data — and each non-clean class aggregates in ONE row. Rows:
+    * 0 var, 1 cls, 2 rep, then `aggs`; grouped by variable index,
+    * filtered rows dropped. */
+  private def pinnedAggregate(r: Rows, aggs: Seq[Column])
+      : Map[Int, Array[Row]] = {
+    val rep = when(col("cls") === Preprocess.CleanClass, col("x"))
+      .otherwise(lit(null).cast(DoubleType))
+    r.byVar(r.melt(r.rep(Map.empty))
+      .select(col("var"), col("cls"), rep.as("rep"), col("y"), col("w"))
+      .groupBy("var", "cls", "rep")
+      .agg(aggs.head, aggs.tail: _*)
       .collect()
-    val histByVar = histRows.groupBy(_.getString(0)).map { case (v, rs) =>
-      v -> rs.map { r =>
-        ContBucket(r.getDouble(1), r.getLong(2), r.getDouble(3),
-                   r.getDouble(4), r.getDouble(5), r.getDouble(6),
-                   r.getDouble(7), r.getLong(8))
-      }.sortBy(_.value)
-    }
-    variables.par.map { v =>
-      val totals = totalsByVar.getOrElse(v, Map.empty)
-      val nW = totals.values.map(_.n).sum
-      v -> ContinuousOptimalBinning.fitFromHistogram(
-        histByVar.getOrElse(v, Array.empty), totals, nW,
-        cfgFor(v, config, varOverrides, "numerical"),
+      .filter(_.getInt(1) != Preprocess.FilteredClass))
+  }
+
+  /** Pass B: the clean-row histogram shuffle for every variable at
+    * once, rows grouped by variable index (0 var, 1 x, then `aggs`). */
+  private def histogramRows(r: Rows, grid: Map[Int, (Double, Double)],
+                            aggs: Seq[Column]): Map[Int, Array[Row]] =
+    r.byVar(r.melt(r.rep(grid))
+      .where(col("cls") === Preprocess.CleanClass)
+      .groupBy("var", "x")
+      .agg(aggs.head, aggs.tail: _*)
+      .collect())
+
+  private def allPinned(r: Rows): Boolean =
+    r.pinned.forall(_.isDefined)
+
+  // binary aggregates over melted (y, w)
+  private val nAgg = count(lit(1)).as("n")
+  private val w0Agg =
+    sum(when(col("y") === 0.0, col("w")).otherwise(0.0)).as("w0")
+  private val w1Agg =
+    sum(when(col("y") =!= 0.0, col("w")).otherwise(0.0)).as("w1")
+  private val wtAgg = sum(col("w")).as("wt")
+
+  private def fitNumericBatch(r: Rows): Map[String, FittedOptimalBinning] = {
+    val (totalsByVar, histByVar) =
+      if (allPinned(r)) {
+        // one scan + one bounded shuffle replaces the two of the
+        // general path. Rows: 0 var, 1 cls, 2 rep, 3 w0, 4 w1, 5 n, 6 wt
+        val byVar = pinnedAggregate(r, Seq(w0Agg, w1Agg, nAgg, wtAgg))
+        val totals = byVar.map { case (i, rs) =>
+          i -> rs.groupBy(_.getInt(1)).map { case (c, cr) =>
+            c -> ClassTotals(cr.map(_.getDouble(3)).sum,
+                             cr.map(_.getDouble(4)).sum,
+                             cr.map(_.getLong(5)).sum,
+                             cr.map(_.getDouble(6)).sum)
+          }
+        }
+        val hist = byVar.map { case (i, rs) =>
+          i -> rs.filter(_.getInt(1) == Preprocess.CleanClass)
+            .map(row => Prebinning.HistBucket(row.getDouble(2),
+              row.getLong(5), row.getDouble(3), row.getDouble(4)))
+        }
+        (totals, hist)
+      } else {
+        val (totals, grid) = binaryPassA(r)
+        // Pass B rows: 0 var, 1 x, 2 n, 3 w0, 4 w1
+        val hist = histogramRows(r, grid, Seq(nAgg, w0Agg, w1Agg))
+          .map { case (i, rs) =>
+            i -> rs.map(row => Prebinning.HistBucket(row.getDouble(1),
+              row.getLong(2), row.getDouble(3), row.getDouble(4)))
+          }
+        (totals, hist)
+      }
+
+    // driver-side parallel solve per variable
+    r.vars.indices.par.map { i =>
+      val totals = totalsByVar.getOrElse(i, Map.empty[Int, ClassTotals])
+      r.name(i) -> OptimalBinning.fitFromHistogram(
+        histByVar.getOrElse(i, Array.empty[Prebinning.HistBucket])
+          .sortBy(_.value),
+        totals, totals.values.map(_.w).sum, r.cfg(i),
         categories = null, catOthers = null)
     }.toList.toMap
   }
 
-  private def fitNumericBatch(df: DataFrame, vars: Seq[String], y: Column,
-                              w: Column, targetType: String,
-                              config: BinningConfig,
-                              overrides: Map[String, BinningConfig],
-                              maxGridBuckets: Int)
-      : Map[String, FittedOptimalBinning] = {
-    require(targetType == "binary",
-            "continuous targets: use BinningProcess.fitContinuous")
-    // per-variable configs may override specialCodes; the class column
-    // and the class-space sizes must follow the OVERRIDE config per var
-    // (fitFromHistogram interprets class indices by cfgFor(v))
-    val cfgs: Map[String, BinningConfig] =
-      vars.map(v => v -> cfgFor(v, config, overrides, "numerical")).toMap
-    def nClassesOf(v: String): Int =
-      Preprocess.missingClassIndex(cfgs(v).specialCodes) + 1
-
-    // every melt below is a chunkedMelt (see scaladoc there) with the
-    // per-var OVERRIDE specialCodes driving each variable's class column
-    def meltedOf(valExpr: String => Column): DataFrame =
-      chunkedMelt(df, vars, y, w, valExpr,
-        v => Preprocess.rowClass(col(v).cast(DoubleType),
-                                 isNumeric = true, cfgs(v).specialCodes))
-    // variables with pinned user splits need no value histogram at all:
-    // snap each row to an in-bin representative (exact split comparisons,
-    // same rep convention as `Histograms.exactPrebinBuckets`), so the
-    // histogram holds <= splits+1 exact per-bin rows at ANY cardinality —
-    // no grid quantization drift across the pinned boundaries
-    val pinnedSplits: Map[String, Array[Double]] = vars.flatMap { v =>
-      cfgFor(v, config, overrides, "numerical").userSplits
-        .map(ss => v -> ss.sorted)
-    }.toMap
-
-    // When EVERY variable is pinned, the stats pass is redundant: the
-    // rep-level aggregate already carries the per-(var, cls) totals as
-    // its margins, and min/max/ndv (only used to build compression
-    // grids) are never needed. ONE scan + one bounded shuffle replaces
-    // the two of the general path — on a scorecard refit over pinned
-    // splits this halves the data passes at any scale.
-    // each variable's in-bin representative is baked into its own melt
-    // column (a when(var === v) rep-chain over melted rows would be
-    // O(rows x vars^2) — see chunkedMelt)
-    if (vars.nonEmpty && vars.forall(v =>
-          pinnedSplits.get(v).exists(_.nonEmpty)))
-      return fitPinnedBatch(
-        meltedOf { v =>
-          val x = col(v).cast(DoubleType)
-          val ss = pinnedSplits(v)
-          ss.indices.foldRight(lit(ss.last): Column) { (i, e) =>
-            when(x < ss(i),
-                 lit(if (i == 0) ss(0) - 1.0 else ss(i - 1))).otherwise(e)
-          }
-        }, vars, config, overrides)
-
-    // Pass A: per-(var, cls) totals + clean range/ndv. The class space is
-    // config-bounded (clean + special groups + missing), so instead of
-    // melting vars x rows through a groupBy shuffle, emit one conditional
-    // aggregate per (var, class, metric) over the UN-melted table: one
-    // data pass, no vars-fold row explosion, and a no-shuffle global
-    // aggregate (partial rows are a single row per partition) at any
-    // scale. Wide batches are the exception: past ~a thousand aggregate
-    // expressions a single generated aggregate risks Janino
-    // constant-pool exhaustion and interpreted-mode fallback, so above
-    // the cap Pass A reverts to the melted groupBy(var, cls) shape —
-    // one shuffle whose volume is bounded by partitions x vars x
-    // classes, regardless of batch width.
-    val dbg = sys.env.contains("GRAFT_DEBUG_TIMING")
-    var tMark = System.nanoTime()
-    def mark(tag: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      println(f"BPTIME $tag ${(now - tMark) / 1e9}%.3f s")
-      tMark = now
-    }
-    // Pass A is ALWAYS the un-melted no-shuffle conditional aggregate,
-    // chunked so each generated aggregate stays a JIT-compilable
-    // method: past ~256 aggregate expressions the monolithic codegen
-    // method crosses HotSpot's 8 KB ceiling and the whole stage runs
-    // interpreted (measured slower than a melted shuffle well before
-    // the old 1024-expression Janino cap). Chunks run as CONCURRENT
-    // driver actions — each is a single-stage scan whose parquet read
-    // prunes to its own variables, so wide batches cost the same bytes
-    // as one scan, split across simultaneously-running jobs.
-    val passAChunks: Seq[Seq[(String, Int)]] = {
+  /** Binary Pass A: per-(var, cls) totals + clean range/ndv, and the
+    * grid (min, max) of every variable whose approximate distinct count
+    * exceeds its `histogramMaxBuckets`. The class space is
+    * config-bounded (clean + special groups + missing), so instead of
+    * melting vars x rows through a groupBy shuffle, emit one
+    * conditional aggregate per (var, class, metric) over the UN-melted
+    * table: one data pass, no vars-fold row explosion, and a no-shuffle
+    * global aggregate (partial rows are a single row per partition) at
+    * any scale. Chunked so each generated aggregate stays a
+    * JIT-compilable method: past ~256 aggregate expressions the
+    * monolithic codegen method crosses HotSpot's 8 KB ceiling and the
+    * whole stage runs interpreted. Chunks run as CONCURRENT driver
+    * actions — each is a single-stage scan whose parquet read prunes to
+    * its own variables, so wide batches cost the same bytes as one
+    * scan, split across simultaneously-running jobs. */
+  private def binaryPassA(r: Rows)
+      : (Map[Int, Map[Int, ClassTotals]], Map[Int, (Double, Double)]) = {
+    val passAChunks: Seq[Seq[Int]] = {
       val buf = scala.collection.mutable.ArrayBuffer
-        .empty[scala.collection.mutable.ArrayBuffer[(String, Int)]]
+        .empty[scala.collection.mutable.ArrayBuffer[Int]]
       var width = 0
-      vars.zipWithIndex.foreach { case (v, i) =>
-        val w = 4 * nClassesOf(v) + 3
+      r.vars.indices.foreach { i =>
+        val w = 4 * r.nClasses(i) + 3
         if (buf.isEmpty || width + w > 256) {
-          buf += scala.collection.mutable.ArrayBuffer((v, i)); width = w
-        } else { buf.last += ((v, i)); width += w }
+          buf += scala.collection.mutable.ArrayBuffer(i); width = w
+        } else { buf.last += i; width += w }
       }
       buf.map(_.toSeq).toSeq
     }
 
-    val (totalsByVar, gridInfo):
-        (Map[String, Map[Int, ClassTotals]], Map[String, (Double, Double)]) = {
-      val wide = df.withColumn("__y", y).withColumn("__w", w)
-      val groupRows: Seq[(Seq[(String, Int)], Row)] =
-        passAChunks.par.map { group =>
-          val aggCols: Seq[Column] = group.flatMap { case (v, i) =>
-            val x = col(v).cast(DoubleType)
-            val cls = Preprocess.rowClass(x, isNumeric = true,
-                                          cfgs(v).specialCodes)
-            val perClass = (0 until nClassesOf(v)).flatMap { c =>
-              Seq(sum(when(cls === c && col("__y") === 0.0, col("__w"))
-                    .otherwise(0.0)).as(s"w0_${i}_$c"),
-                  sum(when(cls === c && col("__y") =!= 0.0, col("__w"))
-                    .otherwise(0.0)).as(s"w1_${i}_$c"),
-                  count(when(cls === c, lit(1))).as(s"n_${i}_$c"),
-                  sum(when(cls === c, col("__w")).otherwise(0.0))
-                    .as(s"wt_${i}_$c"))
-            }
-            val cleanX = when(cls === Preprocess.CleanClass, x)
-            perClass ++ Seq(min(cleanX).as(s"minx_$i"),
-                            max(cleanX).as(s"maxx_$i"),
-                            approx_count_distinct(cleanX).as(s"ndv_$i"))
+    val wide = r.wide
+    val groupRows: Seq[(Seq[Int], Row)] =
+      passAChunks.par.map { group =>
+        val aggCols: Seq[Column] = group.flatMap { i =>
+          val cls = r.cls(i)
+          val w = r.weight(i)
+          val perClass = (0 until r.nClasses(i)).flatMap { c =>
+            Seq(sum(when(cls === c && col("__y") === 0.0, w)
+                  .otherwise(0.0)).as(s"w0_${i}_$c"),
+                sum(when(cls === c && col("__y") =!= 0.0, w)
+                  .otherwise(0.0)).as(s"w1_${i}_$c"),
+                count(when(cls === c, lit(1))).as(s"n_${i}_$c"),
+                sum(when(cls === c, w).otherwise(0.0))
+                  .as(s"wt_${i}_$c"))
           }
-          group -> wide.agg(aggCols.head, aggCols.tail: _*).collect()(0)
-        }.toList
-
-      val totals: Map[String, Map[Int, ClassTotals]] =
-        groupRows.flatMap { case (group, statsRow) =>
-          group.map { case (v, i) =>
-            v -> (0 until nClassesOf(v)).flatMap { c =>
-              val n = statsRow.getAs[Long](s"n_${i}_$c")
-              if (n == 0L) None
-              else Some(c -> ClassTotals(
-                statsRow.getAs[Double](s"w0_${i}_$c"),
-                statsRow.getAs[Double](s"w1_${i}_$c"),
-                n,
-                statsRow.getAs[Double](s"wt_${i}_$c")))
-            }.toMap
-          }
-        }.toMap
-
-      // per-var uniform grid constants for high-cardinality compression
-      val grid: Map[String, (Double, Double)] =
-        groupRows.flatMap { case (group, statsRow) =>
-          group.flatMap { case (v, i) =>
-            if (statsRow.getAs[Long](s"ndv_$i") > maxGridBuckets &&
-                !pinnedSplits.contains(v) &&
-                !statsRow.isNullAt(statsRow.fieldIndex(s"minx_$i")))
-              Some(v -> (statsRow.getAs[Double](s"minx_$i"),
-                         statsRow.getAs[Double](s"maxx_$i")))
-            else None
-          }
-        }.toMap
-      (totals, grid)
-    }
-
-    mark("passA")
-    // Pass B input: the chunked melt with each variable's grid /
-    // pinned-split representative baked into its own projected column
-    // (no when(var === v) chains — see meltedOf).
-    def repOf(v: String): Column = {
-      val x = col(v).cast(DoubleType)
-      gridInfo.get(v) match {
-        case Some((mn, mx)) =>
-          val width = (mx - mn) / maxGridBuckets
-          if (width <= 0) x
-          else lit(mn) + floor((x - mn) / width) * lit(width)
-        case None => pinnedSplits.get(v) match {
-          case Some(ss) if ss.nonEmpty =>
-            ss.indices.foldRight(lit(ss.last): Column) { (i, e) =>
-              when(x < ss(i),
-                   lit(if (i == 0) ss(0) - 1.0 else ss(i - 1)))
-                .otherwise(e)
-            }
-          case _ => x
+          val cleanX = when(cls === Preprocess.CleanClass, r.x(i))
+          perClass ++ Seq(min(cleanX).as(s"minx_$i"),
+                          max(cleanX).as(s"maxx_$i"),
+                          approx_count_distinct(cleanX).as(s"ndv_$i"))
         }
+        group -> wide.agg(aggCols.head, aggCols.tail: _*).collect()(0)
+      }.toList
+
+    val totals = groupRows.flatMap { case (group, row) =>
+      group.map { i =>
+        i -> (0 until r.nClasses(i)).flatMap { c =>
+          val n = row.getAs[Long](s"n_${i}_$c")
+          if (n == 0L) None
+          else Some(c -> ClassTotals(row.getAs[Double](s"w0_${i}_$c"),
+                                     row.getAs[Double](s"w1_${i}_$c"), n,
+                                     row.getAs[Double](s"wt_${i}_$c")))
+        }.toMap
       }
-    }
-
-    // Pass B: the histogram shuffle for every variable at once
-    val histRows = meltedOf(repOf)
-      .where(col("cls") === Preprocess.CleanClass)
-      .groupBy("var", "x")
-      .agg(count(lit(1)).as("n"),
-           sum(when(col("y") === 0.0, col("w")).otherwise(0.0)).as("w0"),
-           sum(when(col("y") =!= 0.0, col("w")).otherwise(0.0)).as("w1"))
-      .collect()
-    mark("passB")
-
-    val histByVar = histRows.groupBy(_.getString(0)).map { case (v, rs) =>
-      v -> rs.map { r =>
-        Prebinning.HistBucket(r.getDouble(1), r.getLong(2), r.getDouble(3),
-                              r.getDouble(4))
-      }.sortBy(_.value)
-    }
-
-    // driver-side parallel solve per variable
-    val solved = vars.par.map { v =>
-      val totals = totalsByVar.getOrElse(v, Map.empty)
-      val nSamplesWeighted = totals.values.map(_.w).sum
-      val fitted = OptimalBinning.fitFromHistogram(
-        histByVar.getOrElse(v, Array.empty), totals, nSamplesWeighted,
-        cfgFor(v, config, overrides, "numerical"),
-        categories = null, catOthers = null)
-      v -> fitted
-    }.toList.toMap
-    mark("solve")
-    solved
+    }.toMap
+    val grid = groupRows.flatMap { case (group, row) =>
+      group.flatMap { i =>
+        if (row.getAs[Long](s"ndv_$i") > r.cfg(i).histogramMaxBuckets &&
+            r.pinned(i).isEmpty &&
+            !row.isNullAt(row.fieldIndex(s"minx_$i")))
+          Some(i -> (row.getAs[Double](s"minx_$i"),
+                     row.getAs[Double](s"maxx_$i")))
+        else None
+      }
+    }.toMap
+    (totals, grid)
   }
 
-  /** All-pinned fast path: one `groupBy(var, cls, rep)` aggregate feeds
-    * BOTH the per-(var, cls) totals (margins over rep) and the exact
-    * per-prebin histogram (clean rows keyed by the in-bin
-    * representative). Non-clean rows collapse to a null rep so the
-    * shuffle key space stays `vars x (splits + row classes)` — bounded
-    * by config, not data. */
-  private def fitPinnedBatch(repMelted: DataFrame, vars: Seq[String],
-                             config: BinningConfig,
-                             overrides: Map[String, BinningConfig])
-      : Map[String, FittedOptimalBinning] = {
-    // the melt's x column already carries each variable's in-bin
-    // representative (baked in per var by the caller); non-clean rows
-    // collapse to a null rep so the shuffle key space stays
-    // vars x (splits + row classes)
-    val rep = when(col("cls") === Preprocess.CleanClass, col("x"))
-      .otherwise(lit(null).cast(DoubleType))
+  /** Continuous bucket from the `ContinuousOptimalBinning.aggExprs`
+    * columns starting at `at` (n, w, wy, wy2, ymin, ymax, zeros). */
+  private def contBucket(value: Double, row: Row, at: Int): ContBucket =
+    ContBucket(value, row.getLong(at), row.getDouble(at + 1),
+               row.getDouble(at + 2), row.getDouble(at + 3),
+               row.getDouble(at + 4), row.getDouble(at + 5),
+               row.getLong(at + 6))
 
-    // 0 var, 1 cls, 2 rep, 3 w0, 4 w1, 5 n, 6 wt
-    val rows = repMelted
-      .select(col("var"), col("cls"), rep.as("rep"), col("y"), col("w"))
-      .groupBy("var", "cls", "rep")
-      .agg(sum(when(col("y") === 0.0, col("w")).otherwise(0.0)).as("w0"),
-           sum(when(col("y") =!= 0.0, col("w")).otherwise(0.0)).as("w1"),
-           count(lit(1)).as("n"),
-           sum(col("w")).as("wt"))
-      .collect()
-
-    val byVar = rows.groupBy(_.getString(0))
-    vars.par.map { v =>
-      val rs = byVar.getOrElse(v, Array.empty)
-      val totals: Map[Int, ClassTotals] =
-        rs.groupBy(_.getInt(1)).map { case (c, cr) =>
-          c -> ClassTotals(cr.map(_.getDouble(3)).sum,
-                           cr.map(_.getDouble(4)).sum,
-                           cr.map(_.getLong(5)).sum,
-                           cr.map(_.getDouble(6)).sum)
+  private def fitContinuousBatch(r: Rows)
+      : Map[String, FittedContinuousBinning] = {
+    val aggs = ContinuousOptimalBinning.aggExprs
+    val (totalsByVar, histByVar) =
+      if (allPinned(r)) {
+        // rows: 0 var, 1 cls, 2 rep, 3 n, 4 w, 5 wy, 6 wy2, 7 ymin,
+        // 8 ymax, 9 zeros, 10 ystd. Non-clean classes are one row each
+        // (exact stddev_pop); the clean class std is not consumed
+        // downstream — data-bin stds come from bucket moments — and is
+        // derived from the same moment formula here.
+        val byVar = pinnedAggregate(r, aggs)
+        val totals = byVar.map { case (i, rs) =>
+          i -> rs.groupBy(_.getInt(1)).map {
+            case (c, cr) if c == Preprocess.CleanClass =>
+              val w = cr.map(_.getDouble(4)).sum
+              val wy = cr.map(_.getDouble(5)).sum
+              val wy2 = cr.map(_.getDouble(6)).sum
+              val std =
+                if (w > 0)
+                  math.sqrt(math.max(wy2 / w - (wy / w) * (wy / w), 0.0))
+                else 0.0
+              c -> ContClassTotals(w, wy, std, cr.map(_.getDouble(7)).min,
+                                   cr.map(_.getDouble(8)).max,
+                                   cr.map(_.getLong(9)).sum.toDouble)
+            case (c, cr) =>
+              val row = cr.head
+              c -> ContClassTotals(row.getDouble(4), row.getDouble(5),
+                Option(row.get(10)).map(_.asInstanceOf[Double])
+                  .getOrElse(0.0),
+                row.getDouble(7), row.getDouble(8), row.getLong(9).toDouble)
+          }
         }
-      val hist = rs.filter(r => r.getInt(1) == Preprocess.CleanClass)
-        .map(r => Prebinning.HistBucket(r.getDouble(2), r.getLong(5),
-                                        r.getDouble(3), r.getDouble(4)))
-        .sortBy(_.value)
-      val nSamplesWeighted = totals.values.map(_.w).sum
-      v -> OptimalBinning.fitFromHistogram(
-        hist, totals, nSamplesWeighted,
-        cfgFor(v, config, overrides, "numerical"),
+        val hist = byVar.map { case (i, rs) =>
+          i -> rs.filter(_.getInt(1) == Preprocess.CleanClass)
+            .map(row => contBucket(row.getDouble(2), row, 3))
+        }
+        (totals, hist)
+      } else {
+        // Pass A rows: 0 var, 1 cls, 2 n, 3 w, 4 wy, 5 wy2, 6 ymin,
+        // 7 ymax, 8 zeros, 9 ystd, 10 ndv, 11 minx, 12 maxx
+        val statsRows = r.melt(r.x)
+          .groupBy("var", "cls")
+          .agg(aggs.head, aggs.tail :+
+            approx_count_distinct(col("x")).as("ndv") :+
+            min(col("x")).as("minx") :+ max(col("x")).as("maxx"): _*)
+          .collect()
+          .filter(_.getInt(1) != Preprocess.FilteredClass)
+        val totals = r.byVar(statsRows).map { case (i, rs) =>
+          i -> rs.map { row =>
+            row.getInt(1) -> ContClassTotals(row.getDouble(3),
+              row.getDouble(4),
+              Option(row.get(9)).map(_.asInstanceOf[Double]).getOrElse(0.0),
+              row.getDouble(6), row.getDouble(7), row.getLong(8).toDouble)
+          }.toMap
+        }
+        val grid = statsRows.filter(_.getInt(1) == Preprocess.CleanClass)
+          .flatMap { row =>
+            val i = r.index(row.getString(0))
+            if (row.getLong(10) > r.cfg(i).histogramMaxBuckets &&
+                r.pinned(i).isEmpty && !row.isNullAt(11))
+              Some(i -> ((row.getDouble(11), row.getDouble(12))))
+            else None
+          }.toMap
+        val hist = histogramRows(r, grid, aggs).map { case (i, rs) =>
+          i -> rs.map(row => contBucket(row.getDouble(1), row, 2))
+        }
+        (totals, hist)
+      }
+
+    r.vars.indices.par.map { i =>
+      val totals = totalsByVar.getOrElse(i, Map.empty[Int, ContClassTotals])
+      r.name(i) -> ContinuousOptimalBinning.fitFromHistogram(
+        histByVar.getOrElse(i, Array.empty[ContBucket]).sortBy(_.value),
+        totals, totals.values.map(_.n).sum, r.cfg(i),
         categories = null, catOthers = null)
     }.toList.toMap
   }
 
-  private def fitCategoricalBatch(df: DataFrame, vars: Seq[String],
-                                  y: Column, w: Column,
-                                  config: BinningConfig,
-                                  overrides: Map[String, BinningConfig])
+  private def fitCategoricalBatch(r: Rows)
       : Map[String, FittedOptimalBinning] = {
-    // class column per variable's override config, as in the numeric
-    // and continuous batch paths
-    val base = chunkedMelt(df, vars, y, w,
-        v => col(v).cast(StringType),
-        v => Preprocess.rowClass(col(v).cast(StringType),
-          isNumeric = false,
-          cfgFor(v, config, overrides, "categorical").specialCodes))
-      .select(col("var"), col("x"), col("y"), col("w"), col("cls"))
+    val base = r.melt(r.x)
     val agg = base
       .groupBy("var", "cls", "x")
-      .agg(count(lit(1)).as("n"),
-           sum(when(col("y") === 0.0, col("w")).otherwise(0.0)).as("w0"),
-           sum(when(col("y") =!= 0.0, col("w")).otherwise(0.0)).as("w1"),
-           sum(col("w")).as("wt"))
+      .agg(nAgg, w0Agg, w1Agg, wtAgg)
 
-    // bounded driver collect (mirrors the single-variable categorical
-    // path): beyond the per-variable histogram budget, keep the top-K
-    // categories by weight and pool each variable's long tail into its
-    // others bin — the collect stays O(vars * cap) at any cardinality
-    val cap = config.histogramMaxBuckets
-    val probe = agg.limit(vars.length * cap + 1).collect()
+    // bounded driver collect: beyond each variable's histogram budget,
+    // keep its top-K categories by weight and pool its long tail into
+    // its others bin — the collect stays O(sum of budgets) at any
+    // cardinality
+    val caps = r.vars.indices.map(r.cfg(_).histogramMaxBuckets)
+    val probe = agg.limit(caps.sum + 1).collect()
     val (rows, tails) =
-      if (probe.length <= vars.length * cap)
-        (probe, Map.empty[String, OptimalBinning.CatCountRow])
+      if (probe.length <= caps.sum)
+        (probe, Map.empty[Int, OptimalBinning.CatCountRow])
       else {
         val nonClean =
           agg.where(col("cls") =!= Preprocess.CleanClass).collect()
@@ -513,23 +580,24 @@ object BinningProcess {
           // category tie-break keeps the top-K selection deterministic
           // when weights tie (re-runs must fit identical bins)
           .partitionBy("var").orderBy(desc("wt"), col("x"))
+        val cap =
+          if (caps.distinct.size == 1) lit(caps.head)
+          else r.vars.indices.tail.foldLeft(lit(caps.head)) { (e, i) =>
+            when(col("var") === r.name(i), caps(i)).otherwise(e)
+          }
         val top = agg.where(col("cls") === Preprocess.CleanClass)
           .withColumn("__rn", row_number().over(wnd))
           .where(col("__rn") <= cap).drop("__rn").collect()
-        val topByVar = top.groupBy(_.getString(0))
+        val topByVar = r.byVar(top)
         val tailMap = base.where(col("cls") === Preprocess.CleanClass)
           .groupBy("var")
-          .agg(count(lit(1)).as("n"),
-               sum(when(col("y") === 0.0, col("w")).otherwise(0.0))
-                 .as("w0"),
-               sum(when(col("y") =!= 0.0, col("w")).otherwise(0.0))
-                 .as("w1"))
+          .agg(nAgg, w0Agg, w1Agg)
           .collect().flatMap { t =>
-            val v = t.getString(0)
-            val kept = topByVar.getOrElse(v, Array.empty)
+            val i = r.index(t.getString(0))
+            val kept = topByVar.getOrElse(i, Array.empty)
             val tailN = t.getLong(1) - kept.map(_.getLong(3)).sum
             if (tailN <= 0) None
-            else Some(v -> OptimalBinning.CatCountRow(
+            else Some(i -> OptimalBinning.CatCountRow(
               Preprocess.CleanClass, "", tailN,
               t.getDouble(2) - kept.map(_.getDouble(4)).sum,
               t.getDouble(3) - kept.map(_.getDouble(5)).sum))
@@ -537,17 +605,16 @@ object BinningProcess {
         (top ++ nonClean, tailMap)
       }
 
-    val byVar = rows.groupBy(_.getString(0))
-    vars.par.map { v =>
-      val catRows = byVar.getOrElse(v, Array.empty).map { r =>
-        OptimalBinning.CatCountRow(r.getInt(1),
-                                   Option(r.getString(2)).getOrElse(""),
-                                   r.getLong(3), r.getDouble(4),
-                                   r.getDouble(5))
+    val byVar = r.byVar(rows)
+    r.vars.indices.par.map { i =>
+      val catRows = byVar.getOrElse(i, Array.empty).map { row =>
+        OptimalBinning.CatCountRow(row.getInt(1),
+                                   Option(row.getString(2)).getOrElse(""),
+                                   row.getLong(3), row.getDouble(4),
+                                   row.getDouble(5))
       }
-      v -> OptimalBinning.fitCategoricalFromCounts(
-        catRows, cfgFor(v, config, overrides, "categorical"),
-        tailOthers = tails.get(v))
+      r.name(i) -> OptimalBinning.fitCategoricalFromCounts(
+        catRows, r.cfg(i), tailOthers = tails.get(i))
     }.toList.toMap
   }
 }

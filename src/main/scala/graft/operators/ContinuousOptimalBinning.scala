@@ -26,10 +26,11 @@ private[graft] final case class ContCatRow(cls: Int, cat: String, n: Long,
 
 /** Optimal binning of one variable against a continuous target.
   * Spark-native re-expression of `optbinning.ContinuousOptimalBinning`
-  * (`optbinning/binning/continuous_binning.py:185`): same two-pass
-  * aggregate data plane as the binary estimator, with per-bin
-  * (n, sum, sum^2, min, max, zeros) stats and the L1-norm objective
-  * solver (`continuous_cp.py`) replaced by the shared driver DP.
+  * (`optbinning/binning/continuous_binning.py:185`): a numeric fit runs
+  * the `BinningProcess` batch data plane with one variable (per-bin
+  * (n, sum, sum^2, min, max, zeros) stats); a categorical fit keeps its
+  * own per-category aggregate below. The L1-norm objective solver
+  * (`continuous_cp.py`) is replaced by the shared driver DP.
   */
 object ContinuousOptimalBinning {
 
@@ -39,7 +40,8 @@ object ContinuousOptimalBinning {
     val t0 = System.nanoTime()
     val fitted =
       if (config.dtype == "numerical")
-        fitNumerical(df, xCol, yCol, config, weightCol)
+        BinningProcess.fitContinuousVars(df, Seq(xCol -> config), yCol,
+                                         weightCol)(xCol)
       else fitCategorical(df, xCol, yCol, config, weightCol)
     val total = (System.nanoTime() - t0) / 1e9
     val accounted = fitted.timings.values.sum
@@ -50,7 +52,10 @@ object ContinuousOptimalBinning {
     fitted
   }
 
-  private def aggExprs = Seq(
+  /** Per-bucket stats over (y, w): n, w, wy, wy2, ymin, ymax, zeros,
+    * ystd — the population std of the weighted values, mirroring
+    * np.std(sw*y) (`continuous_binning.py:869-875`). */
+  private[graft] def aggExprs: Seq[Column] = Seq(
     count(lit(1)).as("n"),
     sum(col("w")).as("w"),
     sum(col("w") * col("y")).as("wy"),
@@ -58,150 +63,7 @@ object ContinuousOptimalBinning {
     min(col("w") * col("y")).as("ymin"),
     max(col("w") * col("y")).as("ymax"),
     sum(when(col("w") * col("y") === 0.0, 1L).otherwise(0L)).as("zeros"),
-    // population std of the weighted values, mirroring np.std(sw*y)
-    // (`continuous_binning.py:869-875`)
     stddev_pop(col("w") * col("y")).as("ystd"))
-
-  private def fitNumerical(df: DataFrame, xCol: String, yCol: String,
-                           config: BinningConfig, weightCol: Option[String])
-      : FittedContinuousBinning = {
-    val x = col(xCol).cast(DoubleType)
-    val y = col(yCol).cast(DoubleType)
-    val w = weightCol.map(c => col(c).cast(DoubleType)).getOrElse(lit(1.0))
-    val cls = Preprocess.rowClass(x, isNumeric = true, config.specialCodes)
-    val base = OptimalBinning.applyBoundFilter(
-      OptimalBinning.applyOutlierFilter(
-        df.select(x.as("x"), y.as("y"), w.as("w"), cls.as("cls")), config),
-      config)
-
-    // pinned user splits need no value histogram and no range/ndv stats:
-    // one (cls, bin) aggregate carries both the class totals (margins)
-    // and the exact per-prebin buckets — half the data passes of the
-    // general path (mirrors BinningProcess.fitPinnedBatch)
-    config.userSplits match {
-      case Some(us) if us.nonEmpty =>
-        return fitNumericalPinned(base, us.sorted, config)
-      case _ => ()
-    }
-
-    val statsRows = base.groupBy("cls")
-      .agg(aggExprs.head, aggExprs.tail :+
-        approx_count_distinct(col("x")).as("ndv") :+
-        min(col("x")).as("minx") :+
-        max(col("x")).as("maxx"): _*)
-      .collect()
-
-    val totals = statsRows.map { r =>
-      r.getInt(0) -> ContClassTotals(r.getDouble(2), r.getDouble(3),
-        Option(r.get(8)).map(_.asInstanceOf[Double]).getOrElse(0.0),
-        r.getDouble(5), r.getDouble(6), r.getLong(7).toDouble)
-    }.toMap
-    val nSamplesWeighted =
-      statsRows.map(_.getDouble(2)).sum
-
-    val hist: Array[ContBucket] =
-      statsRows.find(_.getInt(0) == Preprocess.CleanClass) match {
-        case None => Array.empty
-        case Some(r) =>
-          val baseClean = base.where(col("cls") === Preprocess.CleanClass)
-          config.userSplits match {
-            case Some(us) =>
-              Histograms.exactPrebinBuckets(baseClean, us.sorted) { idx =>
-                baseClean.groupBy(idx.as("b"))
-                  .agg(aggExprs.head, aggExprs.tail: _*)
-                  .collect()
-                  .map(r2 => (r2.getInt(0), r2.getLong(1),
-                              (r2.getDouble(2), r2.getDouble(3),
-                               r2.getDouble(4), r2.getDouble(5),
-                               r2.getDouble(6), r2.getLong(7))))
-              }.map { case (rep, n, (w, wy, wy2, mn, mx, z)) =>
-                ContBucket(rep, n, w, wy, wy2, mn, mx, z)
-              }
-            case None =>
-              val ndv = r.getLong(9)
-              val grouped =
-                if (ndv <= config.histogramMaxBuckets)
-                  baseClean.groupBy("x")
-                else
-                  Histograms.gridCompress(baseClean, "x", r.getDouble(10),
-                                          r.getDouble(11),
-                                          config.histogramMaxBuckets)
-                    .groupBy("x")
-              grouped.agg(aggExprs.head, aggExprs.tail: _*)
-                .collect()
-                .map(r2 => ContBucket(r2.getDouble(0), r2.getLong(1),
-                  r2.getDouble(2), r2.getDouble(3), r2.getDouble(4),
-                  r2.getDouble(5), r2.getDouble(6), r2.getLong(7)))
-                .sortBy(_.value)
-          }
-      }
-
-    fitFromHistogram(hist, totals, nSamplesWeighted, config,
-                     categories = null, catOthers = null)
-  }
-
-  /** Pinned-splits single-scan fit: `groupBy(cls, b)` where clean rows
-    * key by their exact bin index and non-clean rows collapse to a null
-    * bin — so the shuffle key space is `splits + row classes` (bounded
-    * by config, not data), per-class totals fall out as margins, and
-    * each non-clean class still aggregates in ONE row, keeping its
-    * `stddev_pop` exact (clean-class std is not consumed downstream —
-    * data-bin stds come from bucket moments — and is derived from the
-    * same moment formula here).
-    */
-  private def fitNumericalPinned(base: DataFrame, ss: Array[Double],
-                                 config: BinningConfig)
-      : FittedContinuousBinning = {
-    val idx = ss.indices.foldRight(lit(ss.length): Column) { (i, acc) =>
-      when(col("x") < ss(i), lit(i)).otherwise(acc)
-    }
-    val b = when(col("cls") === Preprocess.CleanClass, idx)
-      .otherwise(lit(null).cast("int"))
-    // row layout (TWO group keys, then aggExprs): cls(0), b(1), n(2),
-    // w(3), wy(4), wy2(5), ymin(6), ymax(7), zeros(8), ystd(9)
-    val rows = base
-      .select(col("cls"), b.as("b"), col("y"), col("w"))
-      .groupBy("cls", "b")
-      .agg(aggExprs.head, aggExprs.tail: _*)
-      .collect()
-
-    val totals: Map[Int, ContClassTotals] = rows.groupBy(_.getInt(0)).map {
-      case (c, rs) if c == Preprocess.CleanClass =>
-        val w = rs.map(_.getDouble(3)).sum
-        val wy = rs.map(_.getDouble(4)).sum
-        val wy2 = rs.map(_.getDouble(5)).sum
-        val std =
-          if (w > 0)
-            math.sqrt(math.max(wy2 / w - (wy / w) * (wy / w), 0.0))
-          else 0.0
-        c -> ContClassTotals(w, wy, std,
-                             rs.map(_.getDouble(6)).min,
-                             rs.map(_.getDouble(7)).max,
-                             rs.map(_.getLong(8)).sum.toDouble)
-      case (c, rs) =>
-        val r = rs.head // b is null for every non-clean row: one row/class
-        c -> ContClassTotals(r.getDouble(3), r.getDouble(4),
-                             Option(r.get(9)).map(_.asInstanceOf[Double])
-                               .getOrElse(0.0),
-                             r.getDouble(6), r.getDouble(7),
-                             r.getLong(8).toDouble)
-    }
-    val nSamplesWeighted = totals.values.map(_.n).sum
-
-    // same in-bin representative convention as Histograms
-    // .exactPrebinBuckets: strictly inside the bin, so driver-side
-    // re-digitizing against any subset of the splits is exact
-    def rep(i: Int): Double = if (i == 0) ss(0) - 1.0 else ss(i - 1)
-    val hist: Array[ContBucket] = rows
-      .filter(r => r.getInt(0) == Preprocess.CleanClass && !r.isNullAt(1))
-      .map(r => ContBucket(rep(r.getInt(1)), r.getLong(2), r.getDouble(3),
-                           r.getDouble(4), r.getDouble(5), r.getDouble(6),
-                           r.getDouble(7), r.getLong(8)))
-      .sortBy(_.value)
-
-    fitFromHistogram(hist, totals, nSamplesWeighted, config,
-                     categories = null, catOthers = null)
-  }
 
   private def fitCategorical(df: DataFrame, xCol: String, yCol: String,
                              config: BinningConfig, weightCol: Option[String])
@@ -223,7 +85,7 @@ object ContinuousOptimalBinning {
                  r.getLong(8))
 
     // bounded driver collect (same design as the binary categorical
-    // path, `OptimalBinning.fitCategorical`): beyond the histogram
+    // batch, `BinningProcess.fitCategoricalBatch`): beyond the histogram
     // budget keep the top-K clean categories by weight, pool the
     // remaining tail into the Others group via one exact anti-join
     // aggregate — the collect is capped at any category cardinality
@@ -291,7 +153,7 @@ object ContinuousOptimalBinning {
 
     // a pooled tail cannot be enumerated, so its Others bin must be the
     // transform's catch-all ELSE branch (same contract as the binary
-    // path, `OptimalBinning.fitCategorical`); the "__tail__" placeholder
+    // categorical batch); the "__tail__" placeholder
     // keeps hasOthers true when no cutoff-others names exist
     fitFromHistogram(hist, totals, nSamplesWeighted, config, categories,
                      catOthers =
@@ -648,15 +510,10 @@ final class FittedContinuousBinning(
     }
 
     var expr = when(Preprocess.missingPredicate(x, isNumeric), missingValue)
-    config.specialCodes match {
-      case Some(SpecialList(values)) =>
-        expr = expr.when(x.isin(values: _*), specialValue(0))
-      case Some(SpecialDict(groups)) =>
-        groups.zipWithIndex.foreach { case ((_, values), g) =>
-          expr = expr.when(x.isin(values: _*), specialValue(g))
-        }
-      case None => ()
-    }
+    Preprocess.specialPredicates(x, isNumeric, config.specialCodes)
+      .zipWithIndex.foreach { case (p, g) =>
+        expr = expr.when(p, specialValue(g))
+      }
 
     if (isNumeric) {
       splits.indices.foreach { i =>
@@ -695,15 +552,10 @@ final class FittedContinuousBinning(
     val specialBase = nDataBins + (if (hasOthers) 1 else 0)
     var expr = when(Preprocess.missingPredicate(x, isNumeric),
                     lit(values(nTableBins - 1)))
-    config.specialCodes match {
-      case Some(SpecialList(vs)) =>
-        expr = expr.when(x.isin(vs: _*), lit(values(specialBase)))
-      case Some(SpecialDict(groups)) =>
-        groups.zipWithIndex.foreach { case ((_, vs), g) =>
-          expr = expr.when(x.isin(vs: _*), lit(values(specialBase + g)))
-        }
-      case None => ()
-    }
+    Preprocess.specialPredicates(x, isNumeric, config.specialCodes)
+      .zipWithIndex.foreach { case (p, g) =>
+        expr = expr.when(p, lit(values(specialBase + g)))
+      }
     if (isNumeric) {
       splits.indices.foreach { i =>
         expr = expr.when(x < splits(i), lit(values(i)))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Value-histogram compression for high-cardinality numeric columns.
@@ -16,40 +16,41 @@ import org.apache.spark.sql.functions._
   */
 object Histograms {
 
-  /** Exact per-prebin aggregation for the user-splits path: the caller
-    * aggregates with the provided bin-index CASE column (exact split
-    * comparisons), and each resulting bin becomes one pseudo-histogram
-    * bucket whose representative value lies strictly inside the bin, so
-    * driver-side re-digitizing against any SUBSET of the splits (the
-    * pure-bin refinement loop) reproduces exact counts.
-    *
-    * Returns (representative, n, payload) sorted by bin.
+  /** Uniform-grid representative of `x`: the largest of the
+    * `maxBuckets` cell edges over [minX, maxX] that is <= x. Every
+    * uniform-grid snap in the engine is this one rule; the Double form
+    * below is the same arithmetic for driver-side histograms. Returns
+    * `x` unchanged when the range is empty or not finite.
     */
-  def exactPrebinBuckets[A](df: DataFrame, splits: Array[Double])(
-      agg: org.apache.spark.sql.Column => Array[(Int, Long, A)])
-      : Array[(Double, Long, A)] = {
-    val idx = splits.indices.foldRight(
-      lit(splits.length): org.apache.spark.sql.Column) { (i, acc) =>
-      when(col("x") < splits(i), lit(i)).otherwise(acc)
+  def gridSnap(x: Column, minX: Double, maxX: Double,
+               maxBuckets: Int): Column =
+    gridWidth(minX, maxX, maxBuckets) match {
+      case Some(width) => lit(minX) + floor((x - minX) / width) * width
+      case None => x
     }
-    def rep(i: Int): Double =
-      if (i == 0) splits(0) - 1.0 else splits(i - 1)
-    agg(idx).sortBy(_._1).map { case (b, n, a) => (rep(b), n, a) }
+
+  /** Driver-side form of [[gridSnap]]: bit-identical to the Column form
+    * (Spark's floor yields a long, exact below 2^53). */
+  def gridSnap(minX: Double, maxX: Double,
+               maxBuckets: Int): Double => Double =
+    gridWidth(minX, maxX, maxBuckets) match {
+      case Some(width) => x => minX + math.floor((x - minX) / width) * width
+      case None => identity
+    }
+
+  private def gridWidth(minX: Double, maxX: Double,
+                        maxBuckets: Int): Option[Double] = {
+    val width = (maxX - minX) / maxBuckets
+    if (width > 0 && java.lang.Double.isFinite(width)) Some(width) else None
   }
 
-  /** Replace column `xCol` with its uniform-grid representative (the
-    * largest grid edge <= x). Same snapping as
-    * `BinningProcess.fitNumericBatch` — the path the golden WoE parity
-    * fixture validates. No Spark job is launched here; the caller feeds
-    * min/max from its pass-1 stats aggregate.
+  /** Replace column `xCol` with its [[gridSnap]] representative. No
+    * Spark job is launched here; the caller feeds min/max from its
+    * pass-1 stats aggregate.
     */
   def gridCompress(df: DataFrame, xCol: String, minX: Double, maxX: Double,
-                   maxBuckets: Int): DataFrame = {
-    val width = (maxX - minX) / maxBuckets
-    if (width <= 0 || !java.lang.Double.isFinite(width)) df
-    else df.withColumn(
-      xCol, lit(minX) + floor((col(xCol) - minX) / width) * width)
-  }
+                   maxBuckets: Int): DataFrame =
+    df.withColumn(xCol, gridSnap(col(xCol), minX, maxX, maxBuckets))
 
   /** EXACT per-group lower median — the discrete quantile Spark's
     * built-ins don't give you at scale (`percentile` interpolates,
@@ -165,7 +166,7 @@ object Histograms {
     val wOrd = Window.partitionBy(groupCol).orderBy(col("__b"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy(groupCol)
-    def covers(k: org.apache.spark.sql.Column, cum: String, w: String) =
+    def covers(k: Column, cum: String, w: String) =
       col(cum) - col(w) < k && k <= col(cum)
     val target = bAgg
       .withColumn("__cumb", sum(col("__bw")).over(wOrd))

@@ -384,15 +384,11 @@ final class FittedMulticlassBinning(
 
     var expr = when(Preprocess.missingPredicate(x, isNumeric = true),
                     missingValue)
-    config.specialCodes match {
-      case Some(SpecialList(vs)) =>
-        expr = expr.when(x.isin(vs: _*), specialValue(0))
-      case Some(SpecialDict(groups)) =>
-        groups.zipWithIndex.foreach { case ((_, vs), g) =>
-          expr = expr.when(x.isin(vs: _*), specialValue(g))
-        }
-      case None => ()
-    }
+    Preprocess.specialPredicates(x, isNumeric = true,
+                                 config.specialCodes)
+      .zipWithIndex.foreach { case (p, g) =>
+        expr = expr.when(p, specialValue(g))
+      }
     splits.indices.foreach { i =>
       expr = expr.when(x < splits(i), v(i))
     }

@@ -50,8 +50,11 @@ final case class BinningConfig(
     classWeight: Option[Map[Double, Double]] = None,
     timeLimitMs: Long = 100000L,
     /** Spark-side knob: max value-level histogram buckets collected to the
-      * driver; above this, clean values are compressed onto an
-      * approx-quantile grid first (scale path for 100 TB inputs). */
+      * driver per variable. Numeric variables with more (approximately
+      * counted) distinct clean values are first snapped onto a uniform
+      * grid of this many cells over their clean [min, max]
+      * (`Histograms.gridSnap`); categorical variables keep their top
+      * categories by weight and pool the rest into Others. */
     histogramMaxBuckets: Int = 10000)
 
 /** Per-class aggregate collected by the fit job. */
@@ -61,9 +64,10 @@ private[graft] final case class ClassTotals(w0: Double, w1: Double,
 /** Optimal binning of one variable against a binary target.
   *
   * Spark-native re-expression of `optbinning.OptimalBinning`
-  * (`optbinning/binning/binning.py:252`): the data plane is two narrow
-  * aggregate jobs (row-class totals + value histogram — both partial-agg
-  * hash aggregations, no row data ever reaches the driver), and the
+  * (`optbinning/binning/binning.py:252`). `fit` runs the
+  * `BinningProcess` batch data plane with one variable — narrow
+  * aggregate jobs (row-class totals + value histogram, partial-agg hash
+  * aggregations, no row data ever reaches the driver) — and the
   * pre-binning / refinement / constrained-optimization phases run
   * driver-side on the <=`histogramMaxBuckets`-entry aggregate via
   * `graft.core`. Scales with the cluster: the shuffle key cardinality is
@@ -76,10 +80,8 @@ object OptimalBinning {
           weightCol: Option[String] = None): FittedOptimalBinning = {
     require(config.dtype == "numerical" || config.dtype == "categorical")
     val t0 = System.nanoTime()
-    val fitted =
-      if (config.dtype == "numerical")
-        fitNumerical(df, xCol, yCol, config, weightCol)
-      else fitCategorical(df, xCol, yCol, config, weightCol)
+    val fitted = BinningProcess.fitBinary(df, Seq(xCol -> config), yCol,
+                                          weightCol)(xCol)
     val total = (System.nanoTime() - t0) / 1e9
     val accounted = fitted.timings.values.sum
     fitted.timings ++= Map(
@@ -115,223 +117,13 @@ object OptimalBinning {
                                     nEvent: Array[Double]): Double =
     nNonevent.sum + nEvent.sum
 
-  /** Pre-fit outlier row filter (`preprocessing.py:230-249`): fit the
-    * requested detector on CLEAN rows of the working frame (columns
-    * `x`/`y`/`cls`) and drop clean rows it flags; missing/special rows
-    * are never filtered. Adds detector-specific aggregate passes only
-    * when configured.
-    */
-  private[graft] def applyOutlierFilter(base: DataFrame,
-                                        config: BinningConfig): DataFrame =
-    config.outlierDetector match {
-      case None => base
-      case Some(method) =>
-        val p = config.outlierParams
-        def num(key: String, dflt: Double): Double = p.get(key) match {
-          case Some(v: Number) => v.doubleValue()
-          case _ => dflt
-        }
-        val cleanDf = base.where(col("cls") === Preprocess.CleanClass)
-        val drop: org.apache.spark.sql.Column = method match {
-          case "range" =>
-            Outliers.fitRange(cleanDf, "x",
-              intervalLength = num("interval_length", 0.5),
-              k = num("k", 1.5),
-              method = p.get("method").map(_.toString).getOrElse("ETI"))
-              .support(col("x"))
-          case "zscore" =>
-            // "med"/"mad" in outlierParams skip the stats jobs (caller
-            // already derived them, e.g. for oracle pinning)
-            val pre = (p.get("med"), p.get("mad")) match {
-              case (Some(m: Number), Some(d: Number)) =>
-                Some((m.doubleValue(), d.doubleValue()))
-              case _ => None
-            }
-            Outliers.fitZScore(cleanDf, "x", num("threshold", 3.5),
-              approx = p.get("approx").exists(_ == true),
-              precomputed = pre)
-          case "yquantile" =>
-            Outliers.fitYQuantile(cleanDf, "x", "y",
-              detector = p.get("detector").map(_.toString)
-                .getOrElse("zscore"),
-              nBins = num("n_bins", 5).toInt)
-          case other => throw new IllegalArgumentException(
-            s"outlier_detector $other not supported")
-        }
-        base.where(!(col("cls") === Preprocess.CleanClass && drop))
-    }
-
-  /** Clean-row bound filter (`preprocessing.py:251-261`): keep clean rows
-    * with fix_lb <= x <= fix_ub (each bound optional); missing/special
-    * rows pass through untouched. Pure predicate — pushes into the scan.
-    * Note: when BOTH bounds are set the reference's if/elif chain applies
-    * only fix_lb (its both-bounds branch is unreachable); we apply both,
-    * the documented intent.
-    */
-  private[graft] def applyBoundFilter(base: DataFrame,
-                                      config: BinningConfig): DataFrame =
-    (config.fixLb, config.fixUb) match {
-      case (None, None) => base
-      case (lb, ub) =>
-        val keep = (lb.map(col("x") >= _) ++ ub.map(col("x") <= _))
-          .reduce(_ && _)
-        base.where(!(col("cls") === Preprocess.CleanClass) || keep)
-    }
-
-  // ------------------------------------------------------------------
-  // numerical
-  // ------------------------------------------------------------------
-
-  private def fitNumerical(df: DataFrame, xCol: String, yCol: String,
-                           config: BinningConfig,
-                           weightCol: Option[String]): FittedOptimalBinning = {
-    val spark = df.sparkSession
-    val x = col(xCol).cast(DoubleType)
-    val y = col(yCol).cast(DoubleType)
-    val w0 = weightCol.map(c => col(c).cast(DoubleType)).getOrElse(lit(1.0))
-    val w = config.classWeight match {
-      case Some(m) =>
-        m.foldLeft(w0) { case (acc, (label, cw)) =>
-          when(y === label, acc * cw).otherwise(acc)
-        }
-      case None => w0
-    }
-    val cls = Preprocess.rowClass(x, isNumeric = true, config.specialCodes)
-
-    val base = applyBoundFilter(applyOutlierFilter(
-      df.select(x.as("x"), y.as("y"), w.as("w"), cls.as("cls")), config),
-      config)
-
-    // Pass 1: one hash-agg keyed by row class — totals + approx distinct.
-    val statsRows = base
-      .groupBy("cls")
-      .agg(
-        sum(when(col("y") === 0.0, col("w")).otherwise(0.0)).as("w0"),
-        sum(when(col("y") =!= 0.0, col("w")).otherwise(0.0)).as("w1"),
-        count(lit(1)).as("n"),
-        sum(col("w")).as("w"),
-        min(col("x")).as("minx"),
-        max(col("x")).as("maxx"),
-        approx_count_distinct(col("x")).as("ndv"))
-      .collect()
-
-    val totals = statsRows.map { r =>
-      r.getInt(0) -> ClassTotals(r.getDouble(1), r.getDouble(2),
-                                 r.getLong(3), r.getDouble(4))
-    }.toMap
-    val cleanRow = statsRows.find(_.getInt(0) == Preprocess.CleanClass)
-    val nSamplesWeighted = totals.values.map(_.w).sum
-
-    val hist: Array[Prebinning.HistBucket] = cleanRow match {
-      case None => Array.empty
-      case Some(r) =>
-        val cleanBase = base.where(col("cls") === Preprocess.CleanClass)
-        config.userSplits match {
-          case Some(us) =>
-            // user-splits path: count per prebin EXACTLY with the split
-            // CASE (no histogram quantization); pseudo-histogram buckets
-            // carry one in-bin representative so refinement re-counting
-            // stays correct under any split subset
-            Histograms.exactPrebinBuckets(cleanBase, us.sorted) { idx =>
-              cleanBase.groupBy(idx.as("b"))
-                .agg(count(lit(1)).as("n"),
-                     sum(when(col("y") === 0.0, col("w")).otherwise(0.0))
-                       .as("w0"),
-                     sum(when(col("y") =!= 0.0, col("w")).otherwise(0.0))
-                       .as("w1"))
-                .collect()
-                .map(r2 => (r2.getInt(0), r2.getLong(1),
-                            Array(r2.getDouble(2), r2.getDouble(3))))
-            }.map { case (rep, n, a) =>
-              Prebinning.HistBucket(rep, n, a(0), a(1))
-            }
-          case None =>
-            val ndv = r.getLong(7)
-            val keyed =
-              if (ndv <= config.histogramMaxBuckets) cleanBase
-              else Histograms.gridCompress(cleanBase, "x", r.getDouble(5),
-                                           r.getDouble(6),
-                                           config.histogramMaxBuckets)
-            keyed.groupBy("x")
-              .agg(count(lit(1)).as("n"),
-                   sum(when(col("y") === 0.0, col("w")).otherwise(0.0))
-                     .as("w0"),
-                   sum(when(col("y") =!= 0.0, col("w")).otherwise(0.0))
-                     .as("w1"))
-              .collect()
-              .map(r2 => Prebinning.HistBucket(r2.getDouble(0),
-                                               r2.getLong(1),
-                                               r2.getDouble(2),
-                                               r2.getDouble(3)))
-              .sortBy(_.value)
-        }
-    }
-
-    fitFromHistogram(hist, totals, nSamplesWeighted, config,
-                     categories = null, catOthers = null)
-  }
-
-  // ------------------------------------------------------------------
-  // categorical
-  // ------------------------------------------------------------------
-
-  private def fitCategorical(df: DataFrame, xCol: String, yCol: String,
-                             config: BinningConfig, weightCol: Option[String])
-      : FittedOptimalBinning = {
-    val x = col(xCol).cast("string")
-    val y = col(yCol).cast(DoubleType)
-    val w = weightCol.map(c => col(c).cast(DoubleType)).getOrElse(lit(1.0))
-    val cls = Preprocess.rowClass(x, isNumeric = false, config.specialCodes)
-
-    val base = df.select(x.as("x"), y.as("y"), w.as("w"), cls.as("cls"))
-
-    val countsDf = base
-      .groupBy("cls", "x")
-      .agg(count(lit(1)).as("n"),
-           sum(when(col("y") === 0.0, col("w")).otherwise(0.0)).as("w0"),
-           sum(when(col("y") =!= 0.0, col("w")).otherwise(0.0)).as("w1"),
-           sum(col("w")).as("w"))
-
-    def toRow(r: org.apache.spark.sql.Row) =
-      CatCountRow(r.getInt(0), Option(r.getString(1)).getOrElse(""),
-                  r.getLong(2), r.getDouble(3), r.getDouble(4))
-
-    // bounded driver collect: if the distinct-category count exceeds the
-    // histogram budget, keep the top-K by weight and pool the long tail
-    // into a catch-all others bin (the tail cannot affect the <=
-    // max_n_prebins bin structure materially, and enumerating millions of
-    // categories in a CASE chain is a non-starter at scale)
-    val cap = config.histogramMaxBuckets
-    val probe = countsDf.limit(cap + 1).collect()
-    if (probe.length <= cap) {
-      fitCategoricalFromCounts(probe.map(toRow), config)
-    } else {
-      val nonClean = countsDf.where(col("cls") =!= Preprocess.CleanClass)
-        .collect().map(toRow)
-      val top = countsDf.where(col("cls") === Preprocess.CleanClass)
-        .orderBy(desc("w")).limit(cap).collect().map(toRow)
-      val cleanTotals = base.where(col("cls") === Preprocess.CleanClass)
-        .agg(count(lit(1)).as("n"),
-             sum(when(col("y") === 0.0, col("w")).otherwise(0.0)).as("w0"),
-             sum(when(col("y") =!= 0.0, col("w")).otherwise(0.0)).as("w1"))
-        .head
-      val tail = CatCountRow(Preprocess.CleanClass, "",
-        cleanTotals.getLong(0) - top.map(_.n).sum,
-        cleanTotals.getDouble(1) - top.map(_.w0).sum,
-        cleanTotals.getDouble(2) - top.map(_.w1).sum)
-      fitCategoricalFromCounts(top ++ nonClean, config,
-                               tailOthers = Some(tail))
-    }
-  }
-
   /** Per-(rowClass, category) count row of the categorical fit aggregate. */
   private[graft] final case class CatCountRow(cls: Int, cat: String,
                                               n: Long, w0: Double,
                                               w1: Double)
 
-  /** Driver-side categorical phase shared by the single-variable fit and
-    * `BinningProcess`: cutoff -> others, event-rate ordinalization, then
-    * the common histogram fit. With `userSplitsCategorical`, the given
+  /** Driver-side phase of the categorical batch: cutoff -> others,
+    * event-rate ordinalization, then the common histogram fit. With `userSplitsCategorical`, the given
     * category GROUPS become the atomic prebins (ordered by pooled group
     * event rate; categories outside every group fall into the others bin
     * — `binning.py:781-816` user-splits categorical path).
@@ -879,15 +671,10 @@ final class FittedOptimalBinning(
     }
 
     var expr = when(Preprocess.missingPredicate(x, isNumeric), missingValue)
-    config.specialCodes match {
-      case Some(SpecialList(values)) =>
-        expr = expr.when(x.isin(values: _*), specialValue(0))
-      case Some(SpecialDict(groups)) =>
-        groups.zipWithIndex.foreach { case ((_, values), g) =>
-          expr = expr.when(x.isin(values: _*), specialValue(g))
-        }
-      case None => ()
-    }
+    Preprocess.specialPredicates(x, isNumeric, config.specialCodes)
+      .zipWithIndex.foreach { case (p, g) =>
+        expr = expr.when(p, specialValue(g))
+      }
 
     if (isNumeric) {
       // bin i = [s_{i-1}, s_i); CASE x < s_0, x < s_1, ... else last bin
@@ -931,15 +718,10 @@ final class FittedOptimalBinning(
     val specialBase = nDataBins + (if (hasOthers) 1 else 0)
     var expr = when(Preprocess.missingPredicate(x, isNumeric),
                     lit(values(nTableBins - 1)))
-    config.specialCodes match {
-      case Some(SpecialList(vs)) =>
-        expr = expr.when(x.isin(vs: _*), lit(values(specialBase)))
-      case Some(SpecialDict(groups)) =>
-        groups.zipWithIndex.foreach { case ((_, vs), g) =>
-          expr = expr.when(x.isin(vs: _*), lit(values(specialBase + g)))
-        }
-      case None => ()
-    }
+    Preprocess.specialPredicates(x, isNumeric, config.specialCodes)
+      .zipWithIndex.foreach { case (p, g) =>
+        expr = expr.when(p, lit(values(specialBase + g)))
+      }
     if (isNumeric) {
       splits.indices.foreach { i =>
         expr = expr.when(x < splits(i), lit(values(i)))

@@ -128,9 +128,8 @@ object OptimalBinning2D {
       val vRep = Seq("x", "y").foldLeft(col("v")) { (acc, d) =>
         st.get(d) match {
           case Some((mn, mx, ndv)) if ndv > cap && mx > mn =>
-            val w = (mx - mn) / cap
             when(col("dim") === d,
-                 lit(mn) + floor((col("v") - mn) / w) * w).otherwise(acc)
+                 Histograms.gridSnap(col("v"), mn, mx, cap)).otherwise(acc)
           case _ => acc
         }
       }

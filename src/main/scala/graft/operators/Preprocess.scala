@@ -34,25 +34,38 @@ object Preprocess {
   def missingPredicate(x: Column, isNumeric: Boolean): Column =
     if (isNumeric) x.isNull || isnan(x) else x.isNull
 
+  /** Class of a clean row that a row filter (outlier detector or
+    * fix_lb/fix_ub bound) removes. No fit aggregate reads it, so the
+    * row drops out of every total and histogram. */
+  val FilteredClass = -1
+
+  /** Special-code membership, one predicate per group in declared
+    * order. A numeric column compares the codes as given; a string
+    * column compares each code as a string and is never cast to a
+    * number (an ANSI cast of a category to DOUBLE would throw). */
+  def specialPredicates(x: Column, isNumeric: Boolean,
+                        specialCodes: Option[SpecialCodes]): Seq[Column] = {
+    def member(codes: Seq[Any]): Column =
+      if (isNumeric) x.isin(codes: _*)
+      else x.isin(codes.map(c => lit(c).cast("string")): _*)
+    specialCodes match {
+      case Some(SpecialList(values)) => Seq(member(values))
+      case Some(SpecialDict(groups)) => groups.map(g => member(g._2))
+      case None => Nil
+    }
+  }
+
   /** Build the row-class column. Missing is checked first (NaN cannot be a
     * special code member), then special groups in declared order.
     */
   def rowClass(x: Column, isNumeric: Boolean,
-               specialCodes: Option[SpecialCodes]): Column = {
-    val nGroups = specialCodes.map(_.groupNames.size).getOrElse(0)
-    val missingIdx = nGroups + 1
-    var expr: Column = when(missingPredicate(x, isNumeric), lit(missingIdx))
-    specialCodes match {
-      case Some(SpecialList(values)) =>
-        expr = expr.when(x.isin(values: _*), lit(1))
-      case Some(SpecialDict(groups)) =>
-        groups.zipWithIndex.foreach { case ((_, values), i) =>
-          expr = expr.when(x.isin(values: _*), lit(i + 1))
-        }
-      case None => ()
-    }
-    expr.otherwise(lit(CleanClass))
-  }
+               specialCodes: Option[SpecialCodes]): Column =
+    specialPredicates(x, isNumeric, specialCodes).zipWithIndex
+      .foldLeft(when(missingPredicate(x, isNumeric),
+                     lit(missingClassIndex(specialCodes)))) {
+        case (e, (p, g)) => e.when(p, lit(g + 1))
+      }
+      .otherwise(lit(CleanClass))
 
   def missingClassIndex(specialCodes: Option[SpecialCodes]): Int =
     specialCodes.map(_.groupNames.size).getOrElse(0) + 1

@@ -17,8 +17,7 @@ import graft.core._
 object SBOptimalBinning {
 
   def fit(scenarios: Seq[(DataFrame, Double)], xCol: String, yCol: String,
-          config: BinningConfig = BinningConfig(),
-          maxGridBuckets: Int = 10000): FittedOptimalBinning = {
+          config: BinningConfig = BinningConfig()): FittedOptimalBinning = {
     require(scenarios.nonEmpty)
     val weights = scenarios.map(_._2)
     require(math.abs(weights.sum - 1.0) < 1e-9, "weights must sum to 1")
@@ -36,18 +35,16 @@ object SBOptimalBinning {
     }.reduce(_ unionByName _)
 
     // high-cardinality guard (same design as BinningProcess): beyond
-    // maxGridBuckets distinct values, snap x onto a uniform grid so the
-    // collected histogram — and the shuffle feeding it — stays bounded
-    // regardless of data scale
+    // histogramMaxBuckets distinct values, snap x onto a uniform grid so
+    // the collected histogram — and the shuffle feeding it — stays
+    // bounded regardless of data scale
     val pre = tagged.agg(min("x").as("mn"), max("x").as("mx"),
                          approx_count_distinct(col("x")).as("ndv")).head
     val xs: Column =
-      if (!pre.isNullAt(2) && pre.getLong(2) > maxGridBuckets &&
-          pre.getDouble(1) > pre.getDouble(0)) {
-        val mn = pre.getDouble(0)
-        val width = (pre.getDouble(1) - mn) / maxGridBuckets
-        lit(mn) + floor((col("x") - mn) / width) * lit(width)
-      } else col("x")
+      if (!pre.isNullAt(2) && pre.getLong(2) > config.histogramMaxBuckets)
+        Histograms.gridSnap(col("x"), pre.getDouble(0), pre.getDouble(1),
+                            config.histogramMaxBuckets)
+      else col("x")
 
     val nScen = scenarios.size
     // pooled value histogram with per-scenario class counts

@@ -232,14 +232,9 @@ final class ScorecardMonitoring(val scorecard: FittedScorecard,
         val exp = rows.filter(_.c == 0)
         val nRows = exp.map(_.n).sum
         val snap: Double => Double =
-          if (nRows > 10000 && exp.nonEmpty) {
-            val mn = exp.map(_.s).min
-            val mx = exp.map(_.s).max
-            val w = (mx - mn) / 10000
-            if (w > 0 && java.lang.Double.isFinite(w))
-              (s: Double) => mn + math.floor((s - mn) / w) * w
-            else identity
-          } else identity
+          if (nRows > 10000 && exp.nonEmpty)
+            Histograms.gridSnap(exp.map(_.s).min, exp.map(_.s).max, 10000)
+          else identity
         val hist = exp.groupBy(r => snap(r.s)).toArray
           .map { case (s, rs) =>
             val n = rs.map(_.n).sum; val e = rs.map(_.e).sum
@@ -510,14 +505,9 @@ final class ContinuousScorecardMonitoring(
     val exp = rows.filter(_.c == 0)
     val nRows = exp.map(_.n).sum
     val snap: Double => Double =
-      if (exp.length > 10000) {
-        val mn = exp.map(_.s).min
-        val mx = exp.map(_.s).max
-        val w = (mx - mn) / 10000
-        if (w > 0 && java.lang.Double.isFinite(w))
-          (s: Double) => mn + math.floor((s - mn) / w) * w
-        else identity
-      } else identity
+      if (exp.length > 10000)
+        Histograms.gridSnap(exp.map(_.s).min, exp.map(_.s).max, 10000)
+      else identity
     val hist = exp.groupBy(r => snap(r.s)).toArray
       .map { case (s, rs) =>
         val nb = rs.map(_.n).sum

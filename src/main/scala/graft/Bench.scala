@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** Calibration reference: min-of-last-3 wall seconds of the fixed
     * pure-CPU workload (sum of xxhash64 over a SINGLE-TASK
@@ -14,24 +13,11 @@ object Bench {
   val CalibrationRef = 0.70
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     // local-iteration filter (unset for driver runs = all queries)
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // keep Windows.bounded's constant partition key: with the rule
-      // active, Spark folds it away and every INTENTIONAL bounded
-      // window prints the WindowExec single-partition warning, burying
-      // real findings; excluded, only accidental unpartitioned windows
-      // warn (plan cost identical — one partition either way)
-      .config("spark.sql.optimizer.excludedRules",
-              "org.apache.spark.sql.catalyst.optimizer." +
-                "EliminateWindowPartitions")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Warm up outside timing: parquet footers, then every query once on the
     // smallest scale factor so codegen/JIT/BLAS one-time costs don't land in

@@ -11,7 +11,7 @@ import graft.pipeline.TextAnalysis
 /** SQL surface for the native Catalyst kernels, registered via
   * `SparkSessionExtensions` (the idiomatic Spark extension point —
   * `spark.sql.extensions=graft.GraftExtensions` on a cluster, or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`), so
+  * `.withExtensions(new GraftExtensions)` on a session builder), so
   * pure-SQL pipelines reach the same codegen'd kernels as the Column
   * API:
   *

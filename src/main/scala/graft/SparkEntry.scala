@@ -245,10 +245,10 @@ object SparkEntry {
     * flips EVERY stateful driver-contract stream (sessionization,
     * as-of, top-k, heavy hitters, KMV distinct, windowed aggs,
     * dedup, seasonal) off the on-heap HDFS-backed store. Results are
-    * provider-independent (asserted at 1M keys by
-    * [[graft.tools.StateStoreProbe]]); the provider binds at
-    * checkpoint creation, and every contract stream creates a fresh
-    * checkpoint, so the flag is safe to toggle between runs. */
+    * provider-independent (the oracle gate passes under both stores);
+    * the provider binds at checkpoint creation, and every contract
+    * stream creates a fresh checkpoint, so the flag is safe to toggle
+    * between runs. */
   private[graft] def withConfiguredStateStore[T](s: SparkSession)
                                                 (body: => T): T =
     if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
@@ -1097,7 +1097,7 @@ object SparkEntry {
         // merge kernel, not interpreted array_intersect hash sets
         .select(col("doc_id"),
                 array_sort(Dedup.wordShinglesOf(col("__tok"), 3)).as("sh"))
-        .repartition(8)
+        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
       val a = sh.toDF("id_a", "sh_a")
       val b = sh.toDF("id_b", "sh_b")
       a.join(b, col("id_a") < col("id_b"))

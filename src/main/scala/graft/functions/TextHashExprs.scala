@@ -43,7 +43,7 @@ object TextHashExprs {
       SimHash64Expr(ExpressionUtils.expression(norm), portable))
 
   /** [top_bigram_frac, dup_trigram_frac] word-repetition kernel — same
-    * values as `TextAnalysis.repetitionFeaturesHof` (parity-tested) in
+    * values as `graft.HofReferences.repetitionFeatures` (parity-tested) in
     * one pass instead of four interpreted HOF traversals per row. */
   def repetitionStats(text: Column): Column =
     ExpressionUtils.column(
@@ -63,7 +63,7 @@ object TextHashExprs {
       WordGramHashesExpr(ExpressionUtils.expression(norm), n, portable))
 
   /** Single-pass language-ID kernel — same result as the HOF
-    * formulation in `TextAnalysis.langIdHof` (parity-tested): CJK char
+    * formulation in `graft.HofReferences.langId` (parity-tested): CJK char
     * anywhere -> "zh", else the language (in `langs` order) with the
     * most DISTINCT stopword hits over the whitespace tokens of the
     * lowercased text, "und" when no hits. The HOF chain re-tokenizes
@@ -398,7 +398,7 @@ final case class SimHash64Expr(child: Expression,
 /** Word-repetition statistics in one pass: returns
   * `array(top_bigram_frac, dup_trigram_frac)` where words are
   * `split(trim(text), "\s+")` — exactly the HOF formulation in
-  * `TextAnalysis.repetitionFeaturesHof` (space-only trim like SQL
+  * `graft.HofReferences.repetitionFeatures` (space-only trim like SQL
   * `trim`, Java-regex split like Spark `split`), so the two are
   * interchangeable and parity-tested. The HOF chain re-evaluates the
   * split per feature and sorts the bigram array to find the mode; this

@@ -170,9 +170,9 @@ final case class CosineSimExpr(left: Expression, right: Expression)
 
 /** nPlanes-bit random-hyperplane LSH signature: bit p = sign of
   * dot(x, h_p), with h_{p,i} = xxhash64(p, i) / Long.MaxValue — the
-  * exact values of `Similarity.lshSignatureHof` (Spark's multi-argument
-  * xxhash64 folds seed 42 through hashInt per argument). With
-  * `portable = true` the plane components come from
+  * exact values of `graft.HofReferences.lshSignature` (Spark's
+  * multi-argument xxhash64 folds seed 42 through hashInt per argument).
+  * With `portable = true` the plane components come from
   * `VectorExprs.portablePlaneComponent` instead (integer-arithmetic
   * Lehmer mix, reproducible in plain SQL by the correctness oracle).
   * The hyperplane matrix is derived once per observed dimension and

@@ -69,11 +69,6 @@ object Dedup {
     // (O(k*n) boxed lambda calls); value-identical, see MinHashExprs
     graft.functions.MinHashExprs.minhashSlots(hashArr, k)
 
-  /** k minhash values over a shingle array (convenience; for performance
-    * stage `shingleHashes` as a column first). */
-  def minhashSignature(shingleArr: Column, k: Int = 64): Column =
-    minhashSignatureFromHashes(shingleHashes(shingleArr), k)
-
   /** LSH band keys: the signature split into b bands of r rows each,
     * hashed; equal band-hash => candidate pair. Returns array of b hashes.
     */
@@ -433,29 +428,6 @@ object Dedup {
   def simhash(text: Column, portable: Boolean = false): Column =
     graft.functions.TextHashExprs.simhash64(normalizeText(text), portable)
 
-  /** Reference HOF formulation of [[simhash]] — kept as the semantic
-    * oracle for `SimHash64Expr` (asserted equal in tests). */
-  def simhashHof(text: Column): Column = {
-    val tokens = split(regexp_replace(lower(trim(text)), "\\s+", " "), " ")
-    // aggregate over token HASHES (computed once per token) — building the
-    // bit array from the raw token would re-hash it 64 times per element
-    val bitArray: Column => Column = h => array(
-      (0 until 64).map(i =>
-        when(shiftright(h, i).bitwiseAND(1) === 1, lit(1L))
-          .otherwise(lit(-1L))): _*)
-    val votes = aggregate(
-      transform(tokens, t => xxhash64(t)),
-      array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, bitArray(h), (a, v) => a + v))
-    // shiftleft (bitwise, no ANSI overflow check) instead of acc*2: the
-    // top bit legitimately lands in the sign bit of the Long
-    aggregate(reverse(votes), lit(0L),
-              (acc, v) => shiftleft(acc, 1) + when(v > 0, 1L).otherwise(0L))
-  }
-
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   /** Jaccard similarity of two precomputed (distinct-element) arrays. */
   def jaccardArrays(sa: Column, sb: Column): Column = {
     val inter = size(array_intersect(sa, sb)).cast("double")
@@ -577,7 +549,8 @@ object Dedup {
       // array_intersect/array_union hash sets
       .select(col("__sid"),
               array_sort(wordShinglesOf(col("__tok"), ngram)).as("__sh"))
-      .repartition(8)
+      .repartition(df.sparkSession.conf
+                     .get("spark.sql.shuffle.partitions").toInt)
     val a = sh.select(col("__sid").as("id_a"), col("__sh").as("__sha"))
     val b = sh.select(col("__sid").as("id_b"), col("__sh").as("__shb"))
     val iu = graft.functions.ArraySetExprs

@@ -24,18 +24,12 @@ object Similarity {
 
   /** Single-pass native cosine (`graft.functions.CosineSimExpr`): one
     * loop computes dot and both norms with no intermediate arrays — the
-    * hot-path form for pair joins. `cosineHof` is the composable
-    * reference implementation (identical results; kept as test oracle).
+    * hot-path form for pair joins. `graft.HofReferences.cosine` (under
+    * src/test) is the composable reference implementation its parity
+    * test compares against.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.VectorExprs.cosineSim(a, b)
-
-  def cosineHof(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val na = norm(a)
-    val nb = norm(b)
-    when(na > 0 && nb > 0, d / (na * nb)).otherwise(lit(0.0))
-  }
 
   /** Brute-force cosine top-k against a literal query vector: Catalyst
     * plans scan -> project(cosine) -> TakeOrderedAndProject(k) — the sort
@@ -50,17 +44,11 @@ object Similarity {
       .limit(k)
   }
 
-  /** Deterministic pseudo-random hyperplane component h_{p,i} in [-1, 1]:
-    * derived from xxhash64((p, i)) — no RNG state, reproducible across
-    * executors and runs.
-    */
-  private def hyperplaneComponent(plane: Int, i: Column): Column =
-    (xxhash64(lit(plane), i).cast("double") / lit(Long.MaxValue.toDouble))
-
   /** nPlanes-bit signature: bit p = sign of dot(x, h_p). Native
     * single-loop expression (`graft.functions.LshSigExpr`) with the
-    * hyperplane matrix cached per dimension; `lshSignatureHof` is the
-    * composable reference form (identical bits; kept as test oracle).
+    * hyperplane matrix cached per dimension;
+    * `graft.HofReferences.lshSignature` (under src/test) is the
+    * composable reference form its parity test compares against.
     * `portable = true` switches plane generation to the
     * integer-arithmetic Lehmer mix that external SQL engines can
     * reproduce bit-exactly (used by the oracled driver queries; same
@@ -69,17 +57,6 @@ object Similarity {
   def lshSignature(emb: Column, nPlanes: Int = 16,
                    portable: Boolean = false): Column =
     graft.functions.VectorExprs.lshSig(emb, nPlanes, portable)
-
-  def lshSignatureHof(emb: Column, nPlanes: Int = 16): Column = {
-    val dims = sequence(lit(0), size(emb) - 1)
-    val bits = (0 until nPlanes).map { p =>
-      val proj = aggregate(
-        zip_with(emb, dims, (v, i) => v * hyperplaneComponent(p, i)),
-        lit(0.0d), (acc, v) => acc + v)
-      when(proj >= 0, shiftleft(lit(1L), p)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Bucketed ANN top-k: corpus and queries are signed with the same
     * hyperplanes; candidates = equal signature (plus optional 1-bit
@@ -106,99 +83,11 @@ object Similarity {
       .select("qid", "cid", "cosine", "rank")
   }
 
-  /** IVF (inverted-file) ANN top-k: a k-means coarse quantizer trained
-    * on a bounded driver-side sample partitions the corpus into nLists
-    * cells; each query probes its nProbe nearest cells and ranks
-    * candidates by exact cosine. Scale shape: corpus cells are assigned
-    * in one narrow argmin-over-centroid-literal projection, the probe
-    * join is an equi-join on cell id with the (small) query side
-    * broadcast, so the corpus never shuffles and each query scans
-    * ~nProbe/nLists of it.
-    */
-  /** Lloyd's k-means on a driver-side sample — the IVF coarse quantizer.
-    * Standard IVF practice: the quantizer trains on a bounded sample
-    * (quality needs only a sketch of the distribution), while cell
-    * ASSIGNMENT of the full corpus stays distributed. Replaces an
-    * iterative spark.ml KMeans (one cluster job per iteration) with a
-    * single sample collect + in-memory iterations.
-    */
-  private def sampleKMeans(sample: Array[Array[Double]], k: Int,
-                           iters: Int, seed: Long): Array[Array[Double]] = {
-    require(sample.nonEmpty, "sampleKMeans needs a non-empty sample")
-    val rnd = new scala.util.Random(seed)
-    val n = sample.length
-    val dim = sample.head.length
-    // a corpus smaller than k cannot support k distinct cells
-    val kEff = math.min(k, n)
-    // seeded distinct starting points
-    val centers = rnd.shuffle(sample.indices.toVector).take(kEff)
-      .map(i => sample(i).clone).toArray
-    def d2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < dim) { val d = a(i) - b(i); s += d * d; i += 1 }
-      s
-    }
-    for (_ <- 0 until iters) {
-      val sums = Array.fill(kEff)(new Array[Double](dim))
-      val counts = new Array[Long](kEff)
-      var r = 0
-      while (r < n) {
-        val x = sample(r)
-        var best = 0; var bd = Double.MaxValue; var c = 0
-        while (c < kEff) {
-          val d = d2(x, centers(c)); if (d < bd) { bd = d; best = c }
-          c += 1
-        }
-        counts(best) += 1
-        var j = 0
-        while (j < dim) { sums(best)(j) += x(j); j += 1 }
-        r += 1
-      }
-      for (c <- 0 until kEff if counts(c) > 0; j <- 0 until dim)
-        centers(c)(j) = sums(c)(j) / counts(c)
-    }
-    centers
-  }
-
-  /** Bounded quantizer-training collect shared by every trained ANN
-    * variant: hash-select ~1/16 of rows (the limit stops the scan as
-    * soon as the cap is reached — bounded at any corpus scale); a tiny
-    * corpus whose hash sample is empty rescans without the filter.
-    * Returns empty only when the corpus itself is empty.
-    */
-  private def trainSample(c: DataFrame, maxTrainSample: Int)
-      : Array[Array[Double]] = {
-    // null embeddings are filtered in the scan; ragged rows (length
-    // differing from the sample's first vector) are dropped on the
-    // driver — k-means training tolerates the loss, and an unguarded
-    // row would NPE/AIOOBE inside sampleKMeans's distance loop
-    def clean(rows: Array[org.apache.spark.sql.Row])
-        : Array[Array[Double]] = {
-      val vecs = rows.map(_.getSeq[Double](0).toArray)
-      if (vecs.isEmpty) vecs
-      else { val dim = vecs.head.length; vecs.filter(_.length == dim) }
-    }
-    val s = clean(c.where(col("cemb").isNotNull &&
-                          pmod(xxhash64(col("cid")), lit(16)) === 0)
-      .select("cemb").limit(maxTrainSample).collect())
-    if (s.nonEmpty) s
-    else clean(c.where(col("cemb").isNotNull)
-      .select("cemb").limit(maxTrainSample).collect())
-  }
-
-  /** Empty-corpus result frame: zero rows, correct schema. */
-  private def emptyTopK(c: DataFrame, queries: DataFrame, qidCol: String,
-                        scoreCol: String): DataFrame =
-    queries.select(col(qidCol).as("qid")).limit(0)
-      .crossJoin(c.select(col("cid")))
-      .withColumn(scoreCol, lit(0.0d))
-      .withColumn("rank", lit(1))
-      .select("qid", "cid", scoreCol, "rank")
-
   /** Nearest-cell assignment: argmin by squared L2, ties to the lower
     * cell id — native single-loop kernel
-    * (`graft.functions.NearestCellsExpr`); `nearestCellExprHof` is the
-    * composable reference form (identical cells; kept as test oracle).
+    * (`graft.functions.NearestCellsExpr`);
+    * `graft.HofReferences.nearestCell` (under src/test) is the
+    * composable reference form its parity test compares against.
     */
   private def nearestCellExpr(centroids: Array[Array[Double]])
                              (emb: Column): Column =
@@ -213,56 +102,18 @@ object Similarity {
     graft.functions.VectorExprs
       .nearestCellQ(emb.cast("array<double>"), qcentroids)
 
-  private[graft] def nearestCellExprHof(centroids: Array[Array[Double]])
-                                          (emb: Column): Column =
-    array_sort(transform(centroidLit(centroids), (ctr, ci) =>
-      struct(aggregate(zip_with(emb, ctr, (a, b) => (a - b) * (a - b)),
-                       lit(0.0d), (acc, v) => acc + v).as("d2"),
-             ci.as("cell"))))(0).getField("cell")
-
   /** nProbe nearest cells for the query side (same tie-break order). */
   private def probeCellsExpr(centroids: Array[Array[Double]],
                              nProbe: Int)(emb: Column): Column =
     graft.functions.VectorExprs
       .nearestCells(emb.cast("array<double>"), centroids, nProbe)
 
-  private[graft] def probeCellsExprHof(centroids: Array[Array[Double]],
-                                          nProbe: Int)(emb: Column): Column =
-    slice(transform(
-      array_sort(transform(centroidLit(centroids), (ctr, ci) =>
-        struct(aggregate(zip_with(emb, ctr, (a, b) => (a - b) * (a - b)),
-                         lit(0.0d), (acc, v) => acc + v).as("d2"),
-               ci.as("cell")))),
-      s => s.getField("cell")), 1, nProbe)
-
-  /** ONE nested Literal node (not nLists x dim `lit` nodes): Catalyst
-    * walks every expression node per rule per transform, so a 16x64
-    * centroid grid built from scalar `lit`s adds ~1k nodes to every
-    * plan that embeds it — measurable driver-side planning time on an
-    * otherwise tiny query. A single array<array<double>> literal is
-    * equivalent to evaluate and O(1) to traverse. */
-  private def centroidLit(centroids: Array[Array[Double]]): Column =
-    typedLit(centroids.map(_.toSeq).toSeq)
-
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, embCol: String,
-              idCol: String, qidCol: String, k: Int,
-              nLists: Int = 16, nProbe: Int = 4,
-              maxTrainSample: Int = 20000): DataFrame = {
-    val c = corpus.select(col(idCol).as("cid"),
-                          col(embCol).cast("array<double>").as("cemb"))
-    val sample = trainSample(c, maxTrainSample)
-    if (sample.isEmpty)
-      return emptyTopK(c, queries, qidCol, "cosine")
-    ivfScore(c, queries, embCol, qidCol, k, nProbe,
-             sampleKMeans(sample, nLists, iters = 10, seed = 7))
-  }
-
   /** Deterministic portable IVF centroids: component j of centroid l is
     * `VectorExprs.portablePlaneComponent(1000 + l, j)` — plain integer
     * Lehmer arithmetic an external SQL engine replays bit-exactly.
     * Random directions cluster worse than a trained quantizer, but the
-    * plan shape and cost are identical, so the oracled driver query uses
-    * this variant to make assignment + probe + rank fully replayable.
+    * plan shape and cost are the same, and assignment + probe + rank
+    * stay fully replayable by the oracled driver queries.
     */
   def portableCentroids(nLists: Int, dim: Int): Array[Array[Double]] =
     Array.tabulate(nLists, dim) { (l, j) =>
@@ -278,8 +129,14 @@ object Similarity {
     portableCentroids(nLists, dim)
       .map(_.map(c => math.floor(c * 1e6).toLong))
 
-  /** [[ivfTopK]] with the portable deterministic quantizer (no training
-    * scan at all): same distributed assignment + probe join. */
+  /** IVF (inverted-file) ANN top-k: the [[portableCentroids]] coarse
+    * quantizer partitions the corpus into nLists cells; each query
+    * probes its nProbe nearest cells and ranks candidates by exact
+    * cosine. Scale shape: corpus cells are assigned in one narrow
+    * argmin-over-centroid-literal projection, the probe join is an
+    * equi-join on cell id with the (small) query side broadcast, so the
+    * corpus never shuffles and each query scans ~nProbe/nLists of it.
+    */
   def ivfTopKPortable(corpus: DataFrame, queries: DataFrame,
                       embCol: String, idCol: String, qidCol: String,
                       k: Int, dim: Int, nLists: Int = 16,
@@ -311,6 +168,19 @@ object Similarity {
       .select("qid", "cid", "cosine", "rank")
   }
 
+  /** Deterministic portable PQ codebooks (Lehmer-mix components, like
+    * [[portableCentroids]]): codeword c of subspace s is
+    * `portablePlaneComponent(5000 + s*ksub + c, j)` over j < dsub —
+    * integer arithmetic an external SQL engine replays bit-exactly, so
+    * the oracled driver query can verify the whole encode + ADC plan.
+    */
+  def pqPortableCodebooks(m: Int, ksub: Int, dsub: Int)
+      : Array[Array[Array[Double]]] =
+    Array.tabulate(m, ksub, dsub) { (s, c, j) =>
+      graft.functions.VectorExprs.portablePlaneComponent(
+        5000L + s.toLong * ksub + c, j.toLong)
+    }
+
   /** Product-quantization ANN (ADC scan). The d-dim embedding splits
     * into `m` subvectors; each is quantized against a `ksub`-codeword
     * per-subspace codebook, so a corpus vector is stored as `m` small
@@ -325,52 +195,12 @@ object Similarity {
     *
     * Every query scores every code (the ADC contract), so cost is
     * |corpus| x |queries| table lookups — right for query batches up to
-    * a few thousand. For larger batches compose with [[ivfTopK]]'s cell
-    * assignment first (IVF-PQ): bucket both sides by cell, then ADC
-    * within the probed cells only.
+    * a few thousand. For larger batches use [[ivfPqTopKPortable]]:
+    * bucket both sides by cell first, then ADC within the probed cells
+    * only.
+    *
+    * The codebooks are [[pqPortableCodebooks]] (no training scan).
     */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, embCol: String,
-             idCol: String, qidCol: String, k: Int,
-             m: Int = 4, ksub: Int = 16,
-             maxTrainSample: Int = 20000): DataFrame = {
-    val c = corpus.select(col(idCol).as("cid"),
-                          col(embCol).cast("array<double>").as("cemb"))
-    // ONE bounded hash-sampled scan trains every subspace codebook
-    val sample = trainSample(c, maxTrainSample)
-    if (sample.isEmpty)
-      return emptyTopK(c, queries, qidCol, "cosine_pq")
-    pqScore(c, queries, embCol, qidCol, k,
-            trainCodebooks(sample, m, ksub))
-  }
-
-  /** Per-subspace k-means codebooks over the slices of one training
-    * sample (sampleKMeans clamps k to the sample size internally). */
-  private def trainCodebooks(sample: Array[Array[Double]], m: Int,
-                             ksub: Int): Array[Array[Array[Double]]] = {
-    val dim = sample.head.length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val dsub = dim / m
-    Array.tabulate(m) { s =>
-      sampleKMeans(sample.map(v => v.slice(s * dsub, (s + 1) * dsub)),
-                   ksub, iters = 10, seed = 7 + s)
-    }
-  }
-
-  /** Deterministic portable PQ codebooks (Lehmer-mix components, like
-    * [[portableCentroids]]): codeword c of subspace s is
-    * `portablePlaneComponent(5000 + s*ksub + c, j)` over j < dsub —
-    * integer arithmetic an external SQL engine replays bit-exactly, so
-    * the oracled driver query can verify the whole encode + ADC plan.
-    */
-  def pqPortableCodebooks(m: Int, ksub: Int, dsub: Int)
-      : Array[Array[Array[Double]]] =
-    Array.tabulate(m, ksub, dsub) { (s, c, j) =>
-      graft.functions.VectorExprs.portablePlaneComponent(
-        5000L + s.toLong * ksub + c, j.toLong)
-    }
-
-  /** [[pqTopK]] with the portable deterministic codebooks (no training
-    * scan): same distributed encode + ADC scan. */
   def pqTopKPortable(corpus: DataFrame, queries: DataFrame,
                      embCol: String, idCol: String, qidCol: String,
                      k: Int, dim: Int, m: Int = 4,
@@ -386,33 +216,26 @@ object Similarity {
   // any tie-break/overflow fix lands once and reaches both paths and
   // their portable-oracle replays) ----
 
-  /** ONE nested Literal node — see [[centroidLit]] for why (an
-    * m x ksub x dsub codebook as scalar `lit`s is ~1k plan nodes). */
+  /** ONE nested Literal node (not m x ksub x dsub `lit` nodes):
+    * Catalyst walks every expression node per rule per transform, so a
+    * codebook built from scalar `lit`s adds ~1k nodes to every plan that
+    * embeds it — measurable driver-side planning time on an otherwise
+    * tiny query. A single nested literal is equivalent to evaluate and
+    * O(1) to traverse. */
   private def pqCodebookLit(codebooks: Array[Array[Array[Double]]])
       : Column =
     typedLit(codebooks.map(_.map(_.toSeq).toSeq).toSeq)
 
   /** Distributed encode: per subspace, argmin_c ||sub - codeword_c||^2
     * (ties to the lower code) — native single-loop kernel
-    * (`graft.functions.PqEncodeExpr`); `pqCodeExprHof` is the
-    * composable reference form (identical codes; kept as test oracle).
+    * (`graft.functions.PqEncodeExpr`); `graft.HofReferences.pqCode`
+    * (under src/test) is the composable reference form its parity test
+    * compares against.
     */
   private def pqCodeExpr(codebooks: Array[Array[Array[Double]]])
                         (emb: Column): Column =
     graft.functions.VectorExprs
       .pqEncode(emb.cast("array<double>"), codebooks)
-
-  private[graft] def pqCodeExprHof(codebooks: Array[Array[Array[Double]]])
-                                     (emb: Column): Column = {
-    val dsub = codebooks(0)(0).length
-    transform(pqCodebookLit(codebooks), (cb, s) =>
-      array_sort(transform(cb, (ctr, ci) =>
-        struct(aggregate(
-                 zip_with(slice(emb, s * lit(dsub) + lit(1), lit(dsub)),
-                          ctr, (a, b) => (a - b) * (a - b)),
-                 lit(0.0d), (acc, v) => acc + v).as("d2"),
-               ci.as("c"))))(0).getField("c"))
-  }
 
   /** Codeword squared norms — data-independent, one Literal node. */
   private def pqNorm2Lit(codebooks: Array[Array[Array[Double]]]): Column =
@@ -438,7 +261,7 @@ object Similarity {
   }
 
   /** PQ approximate cosine with the same zero-norm semantics as
-    * [[cosineHof]]/CosineSimExpr: 0.0 when either norm is zero. An
+    * [[cosine]] (CosineSimExpr): 0.0 when either norm is zero. An
     * unguarded division would score every candidate of a zero-norm
     * query NaN, which Spark's desc sort ranks ABOVE all real scores. */
   private def pqCosine(dotp: Column, qnorm: Column,
@@ -479,30 +302,14 @@ object Similarity {
     * within the probed cells, scoring is the PQ ADC table lookup
     * (bounding per-vector memory to m codes). Corpus: one encode pass
     * (cell + codes), then stationary; queries broadcast (cells + dot
-    * tables). Use over [[pqTopK]] when query batches are large and over
-    * [[ivfTopK]] when vectors are too wide to keep raw.
+    * tables). Use over [[pqTopKPortable]] when query batches are large
+    * and over [[ivfTopKPortable]] when vectors are too wide to keep raw.
+    *
+    * The coarse centroids are [[portableCentroids]] and the PQ codebooks
+    * [[pqPortableCodebooks]] — no training scan; the whole assign +
+    * encode + probe + ADC plan is integer/float arithmetic an external
+    * SQL engine replays.
     */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, embCol: String,
-                idCol: String, qidCol: String, k: Int,
-                nLists: Int = 16, nProbe: Int = 4,
-                m: Int = 4, ksub: Int = 16,
-                maxTrainSample: Int = 20000): DataFrame = {
-    val c = corpus.select(col(idCol).as("cid"),
-                          col(embCol).cast("array<double>").as("cemb"))
-    // ONE bounded sample trains the coarse quantizer and every
-    // subspace codebook
-    val sample = trainSample(c, maxTrainSample)
-    if (sample.isEmpty)
-      return emptyTopK(c, queries, qidCol, "cosine_pq")
-    ivfPqScore(c, queries, embCol, qidCol, k, nProbe,
-               sampleKMeans(sample, nLists, iters = 10, seed = 7),
-               trainCodebooks(sample, m, ksub))
-  }
-
-  /** [[ivfPqTopK]] with the portable deterministic coarse centroids
-    * ([[portableCentroids]]) and PQ codebooks ([[pqPortableCodebooks]])
-    * — no training scan; the whole assign + encode + probe + ADC plan
-    * is integer/float arithmetic an external SQL engine replays. */
   def ivfPqTopKPortable(corpus: DataFrame, queries: DataFrame,
                         embCol: String, idCol: String, qidCol: String,
                         k: Int, dim: Int, nLists: Int = 16,
@@ -592,22 +399,11 @@ object Similarity {
       .select("qid", "cid", "cosine", "rank")
   }
 
-  /** [[pqTopK]] + exact re-rank of the top `refineFactor * k` ADC
-    * candidates per query. Output schema matches [[bruteForceTopK]]
+  /** [[pqTopKPortable]] + exact re-rank of the top `refineFactor * k`
+    * ADC candidates per query. Output schema matches [[bruteForceTopK]]
     * (exact cosine), and equals it whenever the true top-k survive the
-    * candidate pool. */
-  def pqTopKRefined(corpus: DataFrame, queries: DataFrame,
-                    embCol: String, idCol: String, qidCol: String,
-                    k: Int, refineFactor: Int = 4, m: Int = 4,
-                    ksub: Int = 16,
-                    maxTrainSample: Int = 20000): DataFrame =
-    refineExact(corpus, queries, embCol, idCol, qidCol, k,
-                pqTopK(corpus, queries, embCol, idCol, qidCol,
-                       k * refineFactor, m, ksub, maxTrainSample))
-
-  /** [[pqTopKRefined]] with the portable deterministic codebooks.
-    * `scoreDigits` rounds exact scores before ranking (cross-engine
-    * replay determinism; None ranks on the raw double). */
+    * candidate pool. `scoreDigits` rounds exact scores before ranking
+    * (cross-engine replay determinism; None ranks on the raw double). */
   def pqTopKRefinedPortable(corpus: DataFrame, queries: DataFrame,
                             embCol: String, idCol: String,
                             qidCol: String, k: Int, dim: Int,
@@ -619,27 +415,17 @@ object Similarity {
                                k * refineFactor, dim, m, ksub),
                 scoreDigits)
 
-  /** [[ivfPqTopK]] + exact re-rank — the full big-corpus composition:
-    * coarse cells bound the scanned fraction, PQ codes bound memory,
-    * the refine join restores exact scores on the survivors. */
-  def ivfPqTopKRefined(corpus: DataFrame, queries: DataFrame,
-                       embCol: String, idCol: String, qidCol: String,
-                       k: Int, refineFactor: Int = 4,
-                       nLists: Int = 16, nProbe: Int = 4,
-                       m: Int = 4, ksub: Int = 16,
-                       maxTrainSample: Int = 20000): DataFrame =
-    refineExact(corpus, queries, embCol, idCol, qidCol, k,
-                ivfPqTopK(corpus, queries, embCol, idCol, qidCol,
-                          k * refineFactor, nLists, nProbe, m, ksub,
-                          maxTrainSample))
-
   /** SemDeDup-style semantic deduplication: documents whose embeddings
     * are near-identical in meaning (cosine >= threshold) are collapsed to
     * one survivor per near-dup relation. The corpus is first partitioned
-    * into IVF cells by the coarse quantizer (bounding the candidate set
-    * per item to its cell — never all-pairs), then within each cell the
-    * deterministic rule "drop x if some lower-id y in the cell has
-    * cos(x, y) >= threshold" marks duplicates.
+    * into IVF cells by the [[portableCentroids]] coarse quantizer
+    * (bounding the candidate set per item to its cell — never
+    * all-pairs), then within each cell the deterministic rule "drop x
+    * if some lower-id y in the cell has cos(x, y) >= threshold" marks
+    * duplicates. There is no training scan, and every stage
+    * (assignment, in-cell pairing, cosine threshold) is arithmetic an
+    * external SQL engine replays bit-exactly (the oracled driver query
+    * runs this operator).
     *
     * Scale shape: cell assignment is one narrow projection (native
     * nearest-cell kernel); the only join is a self equi-join on `cell`,
@@ -651,22 +437,6 @@ object Similarity {
     *
     * Returns one row per input: (cid, cell, is_dup).
     */
-  def semanticDedup(corpus: DataFrame, embCol: String, idCol: String,
-                    threshold: Double = 0.95, nLists: Int = 16,
-                    maxTrainSample: Int = 20000): DataFrame = {
-    val c = corpus.select(col(idCol).as("cid"),
-                          col(embCol).cast("array<double>").as("cemb"))
-    val sample = trainSample(c, maxTrainSample)
-    val centroids =
-      if (sample.isEmpty) Array(Array.fill(1)(0.0))
-      else sampleKMeans(sample, nLists, iters = 10, seed = 7)
-    semanticDedupFlags(c, threshold, centroids)
-  }
-
-  /** [[semanticDedup]] with the portable deterministic quantizer — no
-    * training scan, and every stage (assignment, in-cell pairing, cosine
-    * threshold) is arithmetic an external SQL engine replays bit-exactly
-    * (the oracled driver query uses this variant). */
   def semanticDedupPortable(corpus: DataFrame, embCol: String,
                             idCol: String, dim: Int,
                             threshold: Double = 0.95,
@@ -734,8 +504,7 @@ object Similarity {
       sum(floor(col("e").getItem(d) * lit(1e6)).cast("long")).as(s"s$d"))
     // guard null/ragged embeddings out of the fit (an unguarded null
     // yields a null cell group and the driver loop would NPE; a short
-    // vector would NPE inside the component sums) — same discipline as
-    // trainSample above
+    // vector would NPE inside the component sums)
     val clean = df.where(col(embCol).isNotNull &&
                          size(col(embCol)) === dim)
     for (_ <- 0 until iters) {

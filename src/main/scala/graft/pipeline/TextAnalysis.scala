@@ -46,32 +46,14 @@ object TextAnalysis {
     * CJK characters vote zh; otherwise the language with the most stopword
     * hits wins, "und" (undetermined) when no hits. Deterministic tie-break
     * by language order en > es > de > fr. Single-pass native kernel
-    * ([[graft.functions.TextHashExprs.langId]]); [[langIdHof]] is the
-    * composable-HOF parity oracle.
+    * ([[graft.functions.TextHashExprs.langId]]);
+    * `graft.HofReferences.langId` (under src/test) is the composable-HOF
+    * parity oracle.
     */
   def langId(text: Column): Column =
     when(text.isNull, lit("und"))
       .otherwise(graft.functions.TextHashExprs.langId(
         text, langOrder.map(l => l -> stopwords(l))))
-
-  /** HOF formulation of [[langId]] — semantic reference and test oracle
-    * for the native kernel. Re-tokenizes per language and duplicates the
-    * hit expressions inside the argmax chain, so it is ~12 interpreted
-    * split+intersect evaluations per row. */
-  def langIdHof(text: Column): Column = {
-    val cjk = size(regexp_extract_all(text, lit("[\\x{4e00}-\\x{9fff}]"),
-                                      lit(0)))
-    val hits = langOrder.map(l => l -> stopwordHits(text, l))
-    val maxHits = greatest(hits.map(_._2): _*)
-    // first language (in en,es,de,fr order) reaching maxHits wins
-    val ordered = hits.reverse.foldLeft(lit("und"): Column) {
-      case (acc, (l, h)) => when(h === maxHits && maxHits > 0, lit(l))
-        .otherwise(acc)
-    }
-    when(text.isNull, lit("und"))
-      .when(cjk > 0, lit("zh"))
-      .otherwise(ordered)
-  }
 
   /** Document quality features: length, token stats, punctuation/digit
     * ratios, stopword ratio — the standard pre-training quality signals.
@@ -161,21 +143,6 @@ object TextAnalysis {
         i => concat_ws(" ", (1 to n).map(k => element_at(words, i + k)): _*)))
       .otherwise(array().cast("array<string>"))
 
-  /** Longest run of equal adjacent elements in an already-sorted array =
-    * the count of its most frequent element. Higher-order `aggregate`
-    * (single pass, per-row, no shuffle). */
-  private def maxEqualRun(sortedArr: Column): Column = {
-    def step(st: Column, x: Column): Column =
-      when(x === st.getField("prev"), st.getField("run") + 1).otherwise(lit(1L))
-    aggregate(sortedArr,
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (st, x) => struct(
-        x.as("prev"),
-        step(st, x).as("run"),
-        greatest(st.getField("best"), step(st, x)).as("best")),
-      st => st.getField("best"))
-  }
-
   /** Word-repetition quality signals (the Gopher/MassiveText repetition
     * filters, word-count flavor): `top_bigram_frac` = share of word
     * bigrams taken by the single most frequent bigram, `dup_trigram_frac`
@@ -184,7 +151,8 @@ object TextAnalysis {
     * column expressions — embarrassingly parallel, no shuffle, safe in a
     * 100 TB scan stage; computed by the single-pass
     * `graft.functions.TextHashExprs.repetitionStats` kernel
-    * (the HOF formulation below stays as its parity oracle).
+    * (`graft.HofReferences.repetitionFeatures`, under src/test, is its
+    * HOF parity oracle).
     *
     * Reference scope note: the reference library has no text-curation
     * surface; this extends the pipeline operators (SURVEY §2 "beyond the
@@ -196,21 +164,6 @@ object TextAnalysis {
     Seq(
       "top_bigram_frac" -> element_at(stats, 1),
       "dup_trigram_frac" -> element_at(stats, 2))
-  }
-
-  /** Higher-order-function formulation of [[repetitionFeatures]] —
-    * semantic reference and test oracle for the native kernel. */
-  def repetitionFeaturesHof(text: Column): Seq[(String, Column)] = {
-    val words = split(trim(text), "\\s+")
-    val bi = wordNgrams(words, 2)
-    val tri = wordNgrams(words, 3)
-    Seq(
-      "top_bigram_frac" -> when(size(bi) > 0,
-        maxEqualRun(array_sort(bi)).cast("double") / size(bi))
-        .otherwise(lit(0.0)),
-      "dup_trigram_frac" -> when(size(tri) > 0,
-        lit(1.0) - size(array_distinct(tri)).cast("double") / size(tri))
-        .otherwise(lit(0.0)))
   }
 
   /** 64-bit content fingerprint of normalized text (case-folded,

@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BinningConfig, FittedOptimalBinning, SpecialList}
+import graft.operators.{BinningConfig, BinningProcess, FittedOptimalBinning,
+                        SpecialList}
 
 /** Multi-variable streaming binning
   * (`optbinning/binning/distributed/binning_process_sketch.py:123`): one
@@ -38,19 +39,16 @@ final class BinningProcessSketch(
     val spark = df.sparkSession
     import spark.implicits._
 
+    // the batch plane's melt (BinningProcess.chunkedMelt): variable
+    // names travel as literal columns, never as SQL text
+    def melt(vars: Seq[String], xType: String): DataFrame =
+      BinningProcess.chunkedMelt(df, vars, col(yCol).cast("double"),
+                                 lit(1.0), v => col(v).cast(xType),
+                                 _ => lit(0))
+        .select(col("var"), col("x"), col("y"))
+
     if (variables.nonEmpty) {
-      // melt as a union of <= 16-var stack chunks: one monolithic
-      // stack over hundreds of variables compiles the stage past
-      // HotSpot's JIT method ceiling (see BinningProcess.chunkedMelt)
-      val melted = variables.grouped(16).map { chunk =>
-        val stackExpr =
-          s"stack(${chunk.length}, " +
-            chunk.map(v => s"'$v', cast(`$v` as double)")
-              .mkString(", ") + ") as (var, x)"
-        df.withColumn("__y", col(yCol).cast("double"))
-          .selectExpr("__y as y", stackExpr)
-          .select(col("var"), col("x"), col("y"))
-      }.reduce(_ unionByName _)
+      val melted = melt(variables, "double")
 
       // typed Aggregator => ObjectHashAggregate with PARTIAL aggregation:
       // each task merges into per-variable sketch buffers before the
@@ -79,16 +77,7 @@ final class BinningProcessSketch(
     }
 
     if (catVariables.nonEmpty) {
-      // same chunked-union melt as the numeric family
-      val melted = catVariables.grouped(16).map { chunk =>
-        val stackExpr =
-          s"stack(${chunk.length}, " +
-            chunk.map(v => s"'$v', cast(`$v` as string)")
-              .mkString(", ") + ") as (var, x)"
-        df.withColumn("__y", col(yCol).cast("double"))
-          .selectExpr("__y as y", stackExpr)
-          .select(col("var"), col("x"), col("y"))
-      }.reduce(_ unionByName _)
+      val melted = melt(catVariables, "string")
       // same special-code routing as the numeric family above
       val catSpecials: Array[String] = config.specialCodes match {
         case Some(SpecialList(vs)) => vs.map(_.toString).toArray

@@ -52,6 +52,29 @@ class BinningDataPlaneSpec extends AnyFunSuite {
     assert(out.where(col("`it's`").isNull).count() == 0)
   }
 
+  test("a numeric column named it's and a categorical column fit " +
+       "through BinningProcessSketch with exact counts") {
+    val df = li.withColumn("it's", col("l_quantity"))
+    val ps = new graft.streaming.BinningProcessSketch(Seq("it's"),
+      catVariables = Seq("l_linestatus"))
+    ps.add(df, "y")
+    val fits = ps.solveAll()
+    assert(fits.keySet == Set("it's", "l_linestatus"))
+    val n = df.count()
+    val ev = events(df)
+    val num = ps.sketch("it's").sketch
+    assert(num.nEvent == ev)
+    assert(num.nNonevent == n - ev)
+    assert(fits("it's").table.tRecords.toLong == n)
+    val byCat = df.groupBy("l_linestatus")
+      .agg(count(lit(1)).as("n"), sum(col("y")).as("e"))
+      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2)))
+      .toMap
+    val cat = ps.catSketch("l_linestatus").sketch.counts
+      .map { case (c, (k, _, w1)) => c -> (k, w1) }.toMap
+    assert(cat == byCat)
+  }
+
   test("numeric special codes on a string variable: the categorical " +
        "Special row is empty and transform covers every row") {
     val proc = BinningProcess.fit(li, Seq("l_returnflag", "l_quantity"), "y",

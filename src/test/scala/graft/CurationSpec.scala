@@ -199,7 +199,7 @@ class CurationSpec extends AnyFunSuite {
       (1 to 200).map(i => "w" + (i % 9)).mkString(" ")
     ).zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val nat = TextAnalysis.repetitionFeatures(col("text")).toMap
-    val hof = TextAnalysis.repetitionFeaturesHof(col("text")).toMap
+    val hof = HofReferences.repetitionFeatures(col("text")).toMap
     val rows = docs.select(col("id"),
         nat("top_bigram_frac"), nat("dup_trigram_frac"),
         hof("top_bigram_frac"), hof("dup_trigram_frac"))

@@ -177,63 +177,6 @@ class MonitoringAndIOSpec extends AnyFunSuite {
     assert(sk.sketch.n == 4000)
   }
 
-  test("Streaming: flatMapGroupsWithState per-variable fits match batch") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingBinning
-    import graft.streaming.StreamingBinning.VarObs
-
-    val rnd = new scala.util.Random(11)
-    def mkRows(n: Int): Seq[VarObs] = (1 to n).flatMap { _ =>
-      val x = rnd.nextDouble() * 100
-      // event rate increases with x so the fit finds real splits
-      val y = if (rnd.nextDouble() < x / 150.0) 1.0 else 0.0
-      Seq(VarObs("a", Some(x), y), VarObs("b", Some(100 - x), y))
-    }
-    val batch1 = mkRows(1500)
-    val batch2 = mkRows(1500)
-
-    val stream = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[VarObs]
-    val cfg = BinningConfig(name = "x", monotonicTrend = None)
-    val updates = StreamingBinning.perVariableFits(stream.toDS(), cfg,
-                                                  eps = 1e-3)
-    val q = updates.writeStream.outputMode("update")
-      .format("memory").queryName("sb_updates").start()
-    stream.addData(batch1)
-    q.processAllAvailable()
-    stream.addData(batch2)
-    q.processAllAvailable()
-    q.stop()
-
-    val rows = spark.table("sb_updates")
-      .select("variable", "nSamples", "status", "splits")
-      .collect()
-    // 2 triggers x 2 variables
-    assert(rows.length == 4, rows.mkString(";"))
-    val lastByVar = rows.filter(_.getLong(1) == 3000)
-    assert(lastByVar.map(_.getString(0)).toSet == Set("a", "b"))
-    assert(rows.forall(_.getString(2) == "OPTIMAL"))
-
-    // near order-insensitivity: final emitted splits agree with a
-    // single-shot sketch solve over all rows up to the GK eps guarantee
-    // (incremental merge compresses differently than one bulk add, but
-    // both quantile ladders are rank-eps-correct)
-    val all = (batch1 ++ batch2).filter(_.variable == "a")
-    val ref = new graft.streaming.OptimalBinningSketch(cfg, eps = 1e-3)
-    ref.add(all.toDF(), "x", "y")
-    val refSplits = ref.solve().splits
-    val gotSplits = lastByVar.find(_.getString(0) == "a").get
-      .getSeq[Double](3).toArray
-    assert(gotSplits.length == refSplits.length,
-           s"${gotSplits.mkString(",")} vs ${refSplits.mkString(",")}")
-    // eps-rank tolerance translated to values: x ~ U(0,100), 3000 rows,
-    // a few ranks of slack -> well under 1.0 in value space
-    gotSplits.zip(refSplits).foreach { case (g, r) =>
-      assert(math.abs(g - r) < 1.0, s"$g vs $r") }
-  }
-
   test("Streaming: watermarked windowed aggregation drops late events") {
     val spark = TestSpark.spark
     import spark.implicits._

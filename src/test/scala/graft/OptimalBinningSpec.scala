@@ -9,18 +9,7 @@ import graft.operators._
 /** Shared local SparkSession for all suites. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // see Bench: keep Windows.bounded's constant partition key so
-      // intentional bounded windows stay warning-free
-      .config("spark.sql.optimizer.excludedRules",
-              "org.apache.spark.sql.catalyst.optimizer." +
-                "EliminateWindowPartitions")
-      .getOrCreate()
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -21,8 +21,8 @@ class PipelineOpsSpec extends AnyFunSuite {
       (4L, Array(0.998f, 0.02f, 0.0f, 0.0f))  // ~dup of 1 and 2
     ).toDF("vec_id", "embedding")
     // nLists = 1 puts everything in one cell: pure threshold semantics
-    val flags = Similarity.semanticDedup(e, "embedding", "vec_id",
-        threshold = 0.95, nLists = 1)
+    val flags = Similarity.semanticDedupPortable(e, "embedding", "vec_id",
+        dim = 4, threshold = 0.95, nLists = 1)
       .collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     assert(flags == Map(1L -> false, 2L -> true, 3L -> false, 4L -> true))
   }

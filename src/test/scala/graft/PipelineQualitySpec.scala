@@ -95,63 +95,26 @@ class PipelineQualitySpec extends AnyFunSuite {
     Seq(docs, edges).foreach { df =>
       val diff = df.select(
           TextAnalysis.langId(col("text")).as("k"),
-          TextAnalysis.langIdHof(col("text")).as("h"))
+          HofReferences.langId(col("text")).as("h"))
         .where(col("k") =!= col("h"))
       assert(diff.count() == 0,
              diff.limit(5).collect().mkString(" "))
     }
   }
 
-  test("IVF ANN: high recall vs brute-force top-k on clustered data") {
-    val spark = TestSpark.spark
-    import spark.implicits._
-    val rnd = new scala.util.Random(31)
-    // 8 well-separated clusters of 100 vectors each
-    val centers = Array.fill(8)(Array.fill(16)(rnd.nextGaussian() * 10))
-    val corpus = (0 until 800).map { i =>
-      val c = centers(i % 8)
-      (i.toLong, c.map(v => (v + 0.3 * rnd.nextGaussian()).toFloat))
-    }
-    val corpusDf = corpus.toDF("vec_id", "embedding")
-    val queries = (0 until 20).map { i =>
-      val c = centers(i % 8)
-      (1000L + i, c.map(v => (v + 0.3 * rnd.nextGaussian()).toFloat))
-    }
-    val queryDf = queries.toDF("vec_id", "embedding")
-
-    val ivf = Similarity.ivfTopK(corpusDf, queryDf, "embedding",
-                                 "vec_id", "vec_id", k = 5,
-                                 nLists = 8, nProbe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    // ground truth per query by brute force
-    val truth = queries.flatMap { case (qid, qv) =>
-      corpus.map { case (cid, cv) =>
-        val a = qv.map(_.toDouble); val b = cv.map(_.toDouble)
-        val cos = a.zip(b).map { case (x, y) => x * y }.sum /
-          (math.sqrt(a.map(v => v * v).sum) *
-           math.sqrt(b.map(v => v * v).sum))
-        (qid, cid, cos)
-      }.sortBy(-_._3).take(5).map(t => (t._1, t._2))
-    }.toSet
-
-    val recall = ivf.intersect(truth).size.toDouble / truth.size
-    assert(recall >= 0.9, s"recall $recall")
-    // every query returned exactly k results
-    assert(ivf.size == 100, ivf.size)
-  }
-
-  test("IVF ANN: corpus smaller than nLists clamps k and still answers") {
+  test("IVF ANN: a small corpus still answers; an empty corpus returns " +
+       "no rows") {
     val spark = TestSpark.spark
     import spark.implicits._
     val rnd = new scala.util.Random(17)
-    // 5 vectors < nLists = 16 (the replaced spark.ml path's crash case)
+    // 5 vectors < nLists = 16: most cells are empty
     val corpus = (0 until 5).map(i =>
       (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
     val queryDf = Seq((100L, corpus(2)._2)).toDF("vec_id", "embedding")
-    val res = Similarity.ivfTopK(corpus.toDF("vec_id", "embedding"),
-                                 queryDf, "embedding", "vec_id", "vec_id",
-                                 k = 3, nLists = 16, nProbe = 4)
+    val res = Similarity.ivfTopKPortable(corpus.toDF("vec_id", "embedding"),
+                                         queryDf, "embedding", "vec_id",
+                                         "vec_id", k = 3, dim = 8,
+                                         nLists = 16, nProbe = 4)
       .collect()
     assert(res.nonEmpty)
     // the query equals corpus vector 2: it must rank first with cosine 1
@@ -159,19 +122,18 @@ class PipelineQualitySpec extends AnyFunSuite {
     assert(top.getLong(1) == 2L && math.abs(top.getDouble(2) - 1.0) < 1e-9)
 
     // empty corpus: no candidates, no crash
-    val empty = Similarity.ivfTopK(
+    val empty = Similarity.ivfTopKPortable(
       corpus.toDF("vec_id", "embedding").limit(0), queryDf,
-      "embedding", "vec_id", "vec_id", k = 3, nLists = 16, nProbe = 4)
+      "embedding", "vec_id", "vec_id", k = 3, dim = 8, nLists = 16,
+      nProbe = 4)
     assert(empty.collect().isEmpty)
   }
 
-  test("PQ ANN: trained codebooks recover cluster structure; portable " +
-       "variant is deterministic and structurally sound") {
+  test("PQ ANN: the portable variant is deterministic and structurally " +
+       "sound") {
     val spark = TestSpark.spark
     import spark.implicits._
     val rnd = new scala.util.Random(41)
-    // 8 well-separated clusters: PQ codes must keep same-cluster vectors
-    // closer than cross-cluster ones
     val centers = Array.fill(8)(Array.fill(16)(rnd.nextGaussian() * 10))
     val corpus = (0 until 800).map { i =>
       val c = centers(i % 8)
@@ -184,20 +146,16 @@ class PipelineQualitySpec extends AnyFunSuite {
     }
     val queryDf = queries.toDF("vec_id", "embedding")
 
-    val pq = Similarity.pqTopK(corpusDf, queryDf, "embedding", "vec_id",
-                               "vec_id", k = 5, m = 4, ksub = 16)
+    // ADC scores every code: every query returns exactly k ranked results
+    val pq = Similarity.pqTopKPortable(corpusDf, queryDf, "embedding",
+                                       "vec_id", "vec_id", k = 5,
+                                       dim = 16, m = 4, ksub = 16)
       .collect()
-    // every query returns exactly k ranked results
     assert(pq.length == 16 * 5)
     assert(pq.groupBy(_.getLong(0)).values
       .forall(_.map(_.getInt(3)).sorted.toSeq == (1 to 5).toSeq))
-    // ADC ranking respects cluster membership: the top-5 for query i are
-    // from cluster i % 8 (clusters are far apart, PQ noise is small)
-    val clusterHit = pq.count(r =>
-      (r.getLong(1) % 8) == ((r.getLong(0) - 1000) % 8))
-    assert(clusterHit >= 76, s"cluster hits $clusterHit / 80")
 
-    // portable variant: deterministic across invocations, codes stable
+    // deterministic across invocations, codes stable
     val a = Similarity.pqTopKPortable(corpusDf, queryDf, "embedding",
                                       "vec_id", "vec_id", k = 3,
                                       dim = 16, m = 4, ksub = 16)
@@ -213,11 +171,27 @@ class PipelineQualitySpec extends AnyFunSuite {
     assert(cb1.map(_.map(_.toVector).toVector).toVector ==
            cb2.map(_.map(_.toVector).toVector).toVector)
 
+    // IVF-PQ: at most k results per query, ranked 1..n
+    val ivfpq = Similarity.ivfPqTopKPortable(corpusDf, queryDf, "embedding",
+                                             "vec_id", "vec_id", k = 5,
+                                             dim = 16, nLists = 8,
+                                             nProbe = 2)
+      .collect()
+    assert(ivfpq.nonEmpty)
+    assert(ivfpq.groupBy(_.getLong(0)).values.forall { rs =>
+      rs.map(_.getInt(3)).sorted.toSeq == (1 to rs.length).toSeq &&
+        rs.length <= 5 })
+
     // edge cases: empty corpus answers empty (no crash); a dimension
     // not divisible by m is rejected with guidance
-    val empty = Similarity.pqTopK(corpusDf.limit(0), queryDf,
-                                  "embedding", "vec_id", "vec_id", k = 3)
-    assert(empty.collect().isEmpty)
+    assert(Similarity.pqTopKPortable(corpusDf.limit(0), queryDf,
+                                     "embedding", "vec_id", "vec_id",
+                                     k = 3, dim = 16)
+      .collect().isEmpty)
+    assert(Similarity.ivfPqTopKPortable(corpusDf.limit(0), queryDf,
+                                        "embedding", "vec_id", "vec_id",
+                                        k = 3, dim = 16)
+      .collect().isEmpty)
     val err = intercept[IllegalArgumentException] {
       Similarity.pqTopKPortable(corpusDf, queryDf, "embedding",
                                 "vec_id", "vec_id", k = 3, dim = 16,
@@ -225,34 +199,17 @@ class PipelineQualitySpec extends AnyFunSuite {
     }
     assert(err.getMessage.contains("divisible"))
 
-    // IVF-PQ composition: coarse cells bound the scan, ADC scores the
-    // probed fraction; on well-separated clusters the top-5 stays in
-    // the query's cluster
-    val ivfpq = Similarity.ivfPqTopK(corpusDf, queryDf, "embedding",
-                                     "vec_id", "vec_id", k = 5,
-                                     nLists = 8, nProbe = 2)
-      .collect()
-    assert(ivfpq.length == 16 * 5)
-    assert(ivfpq.groupBy(_.getLong(0)).values
-      .forall(_.map(_.getInt(3)).sorted.toSeq == (1 to 5).toSeq))
-    val ivfpqHit = ivfpq.count(r =>
-      (r.getLong(1) % 8) == ((r.getLong(0) - 1000) % 8))
-    assert(ivfpqHit >= 76, s"ivf-pq cluster hits $ivfpqHit / 80")
-    // empty corpus degrades cleanly here too
-    assert(Similarity.ivfPqTopK(corpusDf.limit(0), queryDf, "embedding",
-                                "vec_id", "vec_id", k = 3)
-      .collect().isEmpty)
-
     // zero-norm query scores 0.0 on every candidate (an unguarded
     // division yields NaN, which desc sort would rank FIRST)
     val zeroQ = Seq((9999L, Array.fill(16)(0.0f)))
       .toDF("vec_id", "embedding")
     for (res <- Seq(
-           Similarity.pqTopK(corpusDf, zeroQ, "embedding", "vec_id",
-                             "vec_id", k = 3),
-           Similarity.ivfPqTopK(corpusDf, zeroQ, "embedding", "vec_id",
-                                "vec_id", k = 3, nLists = 8,
-                                nProbe = 2))) {
+           Similarity.pqTopKPortable(corpusDf, zeroQ, "embedding", "vec_id",
+                                     "vec_id", k = 3, dim = 16),
+           Similarity.ivfPqTopKPortable(corpusDf, zeroQ, "embedding",
+                                        "vec_id", "vec_id", k = 3,
+                                        dim = 16, nLists = 8,
+                                        nProbe = 2))) {
       val scores = res.collect().map(_.getDouble(2))
       assert(scores.nonEmpty && scores.forall(_ == 0.0),
              s"zero-norm query scores: ${scores.mkString(",")}")
@@ -267,48 +224,40 @@ class PipelineQualitySpec extends AnyFunSuite {
     // this pins the refine stage in isolation: whatever order the ADC
     // scan hands over, the exact re-rank must reproduce the brute-force
     // ranking — including the within-region order PQ quantization ties
-    // cannot see. (ADC pool recall on larger corpora is covered by the
-    // trained-codebook PQ test above.)
+    // cannot see.
     val centers = Array.fill(8)(Array.fill(16)(rnd.nextGaussian() * 10))
     val corpusDf = (0 until 40).map { i =>
       val c = centers(i % 8)
       (i.toLong, c.map(v => (v + 0.05 * rnd.nextGaussian()).toFloat))
     }.toDF("vec_id", "embedding")
-    val queryDf = (0 until 8).map { i =>
+    val queries = (0 until 8).map { i =>
       val c = centers(i)
       (1000L + i, c.map(v => (v + 0.05 * rnd.nextGaussian()).toFloat))
-    }.toDF("vec_id", "embedding")
+    }
+    val queryDf = queries.toDF("vec_id", "embedding")
 
-    val refined = Similarity.pqTopKRefined(corpusDf, queryDf,
-        "embedding", "vec_id", "vec_id", k = 5, refineFactor = 8)
+    val refined = Similarity.pqTopKRefinedPortable(corpusDf, queryDf,
+        "embedding", "vec_id", "vec_id", k = 5, dim = 16, refineFactor = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3)))
       .toSet
-    // exact ranking per query via a full cross join on this small data
-    val c = corpusDf.select(col("vec_id").as("cid"),
-      col("embedding").cast("array<double>").as("cemb"))
-    val q = queryDf.select(col("vec_id").as("qid"),
-      col("embedding").cast("array<double>").as("qemb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(desc("cos"), col("cid"))
-    val exact = c.crossJoin(q)
-      .withColumn("cos", Similarity.cosine(col("cemb"), col("qemb")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 5)
-      .select("qid", "cid", "rank")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      .toSet
-    // well-separated clusters + refineFactor 8 -> the true top-5 all
-    // survive the ADC pool, so refine restores the exact ranking
+    // exact ranking per query: bruteForceTopK against each query vector
+    val exact = queries.flatMap { case (qid, qv) =>
+      Similarity.bruteForceTopK(corpusDf, "embedding", "vec_id", qv, 5)
+        .collect().zipWithIndex
+        .map { case (r, i) => (qid, r.getLong(0), i + 1) }
+    }.toSet
     assert(refined == exact,
            s"refined missed ${(exact -- refined).size} of ${exact.size}")
 
     // the refined scores are true cosines (not ADC approximations)
-    val withScores = Similarity.pqTopKRefined(corpusDf, queryDf,
-        "embedding", "vec_id", "vec_id", k = 3, refineFactor = 8)
-      .join(c.withColumnRenamed("cid", "cid2"),
-            col("cid") === col("cid2"))
-      .join(q.withColumnRenamed("qid", "qid2"),
-            col("qid") === col("qid2"))
+    val c = corpusDf.select(col("vec_id").as("cid2"),
+      col("embedding").cast("array<double>").as("cemb"))
+    val q = queryDf.select(col("vec_id").as("qid2"),
+      col("embedding").cast("array<double>").as("qemb"))
+    val withScores = Similarity.pqTopKRefinedPortable(corpusDf, queryDf,
+        "embedding", "vec_id", "vec_id", k = 3, dim = 16, refineFactor = 8)
+      .join(c, col("cid") === col("cid2"))
+      .join(q, col("qid") === col("qid2"))
       .withColumn("truecos", Similarity.cosine(col("cemb"), col("qemb")))
       .select(col("cosine"), col("truecos")).collect()
     assert(withScores.nonEmpty)
@@ -357,7 +306,7 @@ class PipelineQualitySpec extends AnyFunSuite {
 
     // simhash: custom expression vs HOF oracle
     val sh = df.select(Dedup.simhash(col("text")).as("fast"),
-                       Dedup.simhashHof(col("text")).as("ref")).collect()
+                       HofReferences.simhash(col("text")).as("ref")).collect()
     sh.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
 
     // minhash signature: custom expression vs HOF oracle
@@ -497,7 +446,7 @@ class PipelineQualitySpec extends AnyFunSuite {
     val d = df.select(
       Similarity.cosine(col("a").cast("array<double>"),
                         col("b").cast("array<double>")).as("native"),
-      Similarity.cosineHof(col("a").cast("array<double>"),
+      HofReferences.cosine(col("a").cast("array<double>"),
                            col("b").cast("array<double>")).as("hof"))
       .collect()
     d.foreach(r => assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12,
@@ -505,7 +454,7 @@ class PipelineQualitySpec extends AnyFunSuite {
     // native float path (no cast) stays within float rounding of the ref
     val f = df.select(
       Similarity.cosine(col("a"), col("b")).as("native"),
-      Similarity.cosineHof(col("a").cast("array<double>"),
+      HofReferences.cosine(col("a").cast("array<double>"),
                            col("b").cast("array<double>")).as("hof"))
       .collect()
     f.foreach(r => assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-5,
@@ -527,14 +476,14 @@ class PipelineQualitySpec extends AnyFunSuite {
     val df = rows.toDF("id", "emb")
     val r = df.select(
       Similarity.lshSignature(col("emb"), 12).as("native"),
-      Similarity.lshSignatureHof(col("emb"), 12).as("hof")).collect()
+      HofReferences.lshSignature(col("emb"), 12).as("hof")).collect()
     r.foreach(x => assert(x.getLong(0) == x.getLong(1), x.toString))
     // float input path agrees with the double-cast HOF form
     val fdf = rows.map { case (i, a) => (i, a.map(_.toFloat)) }
       .toDF("id", "emb")
     val rf = fdf.select(
       Similarity.lshSignature(col("emb"), 12).as("native"),
-      Similarity.lshSignatureHof(col("emb"), 12).as("hof")).collect()
+      HofReferences.lshSignature(col("emb"), 12).as("hof")).collect()
     rf.foreach(x => assert(x.getLong(0) == x.getLong(1), x.toString))
   }
 
@@ -553,13 +502,13 @@ class PipelineQualitySpec extends AnyFunSuite {
     val r = df.select(
       graft.functions.VectorExprs.pqEncode(col("emb"), codebooks)
         .as("code_n"),
-      Similarity.pqCodeExprHof(codebooks)(col("emb")).as("code_h"),
+      HofReferences.pqCode(codebooks)(col("emb")).as("code_h"),
       graft.functions.VectorExprs.nearestCells(col("emb"), centroids, 1)(0)
         .as("cell_n"),
-      Similarity.nearestCellExprHof(centroids)(col("emb")).as("cell_h"),
+      HofReferences.nearestCell(centroids)(col("emb")).as("cell_h"),
       graft.functions.VectorExprs.nearestCells(col("emb"), centroids, 3)
         .as("probe_n"),
-      Similarity.probeCellsExprHof(centroids, 3)(col("emb")).as("probe_h"))
+      HofReferences.probeCells(centroids, 3)(col("emb")).as("probe_h"))
       .collect()
     r.foreach { x =>
       assert(x.getSeq[Int](0) == x.getSeq[Int](1), s"codes $x")
@@ -572,7 +521,7 @@ class PipelineQualitySpec extends AnyFunSuite {
     val rf = fdf.select(
       graft.functions.VectorExprs
         .pqEncode(col("emb").cast("array<double>"), codebooks).as("code_n"),
-      Similarity.pqCodeExprHof(codebooks)(col("emb").cast("array<double>"))
+      HofReferences.pqCode(codebooks)(col("emb").cast("array<double>"))
         .as("code_h")).collect()
     rf.foreach(x => assert(x.getSeq[Int](0) == x.getSeq[Int](1), x.toString))
   }

@@ -270,13 +270,18 @@ class PlanShapeSpec extends AnyFunSuite {
     val e = spark.read.parquet(s"${TestSpark.sf0001}/embeddings.parquet")
     val q = e.where(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("embedding"))
-    val res = Similarity.ivfTopK(e, q, "embedding", "vec_id", "qid",
-                                 k = 3, nLists = 4, nProbe = 2)
+    val dim = e.select(size(col("embedding"))).head.getInt(0)
+    val res = Similarity.ivfTopKPortable(e, q, "embedding", "vec_id", "qid",
+                                         k = 3, dim = dim, nLists = 4,
+                                         nProbe = 2)
     val plan = physical(res)
     // probe join broadcasts the exploded query side; corpus not shuffled
     // before the join (only the window ranking shuffles candidates)
     assert(plan.contains("BroadcastHashJoin") ||
            plan.contains("BroadcastExchange"), plan)
+    val shuffles = plan.linesIterator
+      .filter(_.contains("Exchange hashpartitioning")).toSeq
+    assert(shuffles.length == 1 && shuffles.head.contains("qid"), plan)
   }
 
   test("BM25: broadcast-only joins, top-k bound, no token-dump shuffle") {

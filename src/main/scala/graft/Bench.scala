@@ -101,8 +101,14 @@ object Bench {
     // moves one statistic or the calibration, a plan regression
     // moves both. Suspects still need a git-diff check (Bench cannot
     // see code changes) — but the list makes triage mechanical.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_times.json")
-    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV", outPath)
+    // A filtered run writes under target/ (git-ignored) unless told
+    // otherwise, so a few queries never replace the committed full map;
+    // triage still compares against that committed map.
+    val committed = "bench_times.json"
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      if (only.isDefined) "target/bench_times_filtered.json" else committed)
+    val prevPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREV",
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", committed))
     val driftSuspects: Seq[String] = try {
       val f = new java.io.File(prevPath)
       if (!f.isFile) Nil else {
@@ -233,7 +239,9 @@ object Bench {
         s""""medians":${m(meds)},"passes_sec":$passes}"""
     }
     try {
-      val w = new java.io.PrintWriter(new java.io.File(outPath), "UTF-8")
+      val f = new java.io.File(outPath)
+      Option(f.getParentFile).foreach(_.mkdirs())
+      val w = new java.io.PrintWriter(f, "UTF-8")
       try w.println(fullJson) finally w.close()
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")

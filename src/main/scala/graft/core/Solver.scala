@@ -11,11 +11,21 @@ import scala.collection.mutable
   * per-candidate-bin or adjacent-pair checks, so the DP is optimal for
   * trends none/ascending/descending/peak_heuristic/valley_heuristic
   * (pairwise monotonicity over a totally ordered scalar reduces to
-  * adjacent pairs). Free peak/valley solve the heuristic DP for every
-  * change point (mirrors the CP auxiliary change-point variable `t`,
-  * `cp.py:141-148`). Concave/convex and max_pvalue_policy="all" require
-  * non-adjacent pair/triple constraints and use a DFS enumeration with
-  * identical semantics (`cp.py:433-459`: all-triples midpoint condition).
+  * adjacent pairs).
+  *
+  * Free peak/valley (the CP's change-point variable `t`, `cp.py:141-148`)
+  * add a phase to the state, in one pass. A peak partition starts rising;
+  * its first pair with rA > rB is the one free crossing and moves it to
+  * falling, where every later pair needs rA >= rB (valley mirrored). This
+  * is exactly the union over every change point of the heuristic feasible
+  * sets, and the phase is a function of the prefix: staying rising
+  * dominates switching early, because from rising any next pair is
+  * allowed while from falling only a falling one is.
+  *
+  * Concave/convex and max_pvalue_policy="all" require non-adjacent
+  * pair/triple constraints and use a DFS enumeration with identical
+  * semantics (`cp.py:433-459`: all-triples midpoint condition), carrying
+  * the same phase.
   */
 object Solver {
 
@@ -72,82 +82,23 @@ object Solver {
             cons: Constraints,
             adjacentViolations: Array[((Int, Int), (Int, Int))],
             allViolations: Array[((Int, Int), (Int, Int))]): Result = {
-
     val deadline = System.nanoTime() + cons.timeLimitMs * 1000000L
-
-    // prefix sums for O(1) candidate-bin stats
-    val cumRec = prefix(nRecords)
-    val cumEv = if (nEvent.nonEmpty) prefix(nEvent) else null
-    val cumNe = if (nNonevent.nonEmpty) prefix(nNonevent) else null
-
-    val fixed = cons.userSplitsFixed.getOrElse(Array.fill(math.max(n - 1, 0))(false))
-    // Fixed split i forces x[i, i] == 1 in the reference CP
-    // (`cp.py:580-584`): the prebin ENDING at that split is a bin on its
-    // own. Any bin containing a fixed prebin i must be the singleton
-    // (i, i).
-    def violatesFixed(s: Int, e: Int): Boolean = {
-      var i = s
-      val hi = math.min(e, fixed.length - 1)
-      while (i <= hi) {
-        if (fixed(i) && (s != i || e != i)) return true
-        i += 1
-      }
-      false
-    }
-
-    def binFeasible(s: Int, e: Int): Boolean = {
-      if (violatesFixed(s, e)) return false
-      val size = cumRec(e + 1) - cumRec(s)
-      if (cons.minBinSize.exists(size < _)) return false
-      if (cons.maxBinSize.exists(size > _)) return false
-      if (cumEv != null) {
-        val ev = cumEv(e + 1) - cumEv(s)
-        if (cons.minBinNEvent.exists(ev < _)) return false
-        if (cons.maxBinNEvent.exists(ev > _)) return false
-      }
-      if (cumNe != null) {
-        val ne = cumNe(e + 1) - cumNe(s)
-        if (cons.minBinNNonevent.exists(ne < _)) return false
-        if (cons.maxBinNNonevent.exists(ne > _)) return false
-      }
-      true
-    }
-
-    val adjViol = new mutable.HashSet[Long]
-    adjacentViolations.foreach { case ((i, r), (j, k)) =>
-      adjViol += pack(i, r, j, k)
-    }
-
-    val binFeasibleFinal: (Int, Int) => Boolean =
+    val banned =
       if (cons.monoPreprocess &&
-          (trend.contains("ascending") || trend.contains("descending"))) {
-        val banned = singletonBans(n, d, trend.contains("ascending"))
-        (s, e) => !(s == e && banned(s)) && binFeasible(s, e)
-      } else binFeasible
-
-    def binRecords(s: Int, e: Int): Long = cumRec(e + 1) - cumRec(s)
-    val needDfs = allViolations.nonEmpty || cons.gammaReg > 0
-
+          (trend.contains("ascending") || trend.contains("descending")))
+        singletonBans(n, d, trend.contains("ascending"))
+      else null
+    val t = new Tables(n, cons, nRecords, nEvent, nNonevent, banned,
+                       adjacentViolations)
+    val rule = pairRule(trend, trendChange, d)
     trend match {
-      case Some("concave") | Some("convex") =>
-        dfsSolve(n, d, v, trend.get, 0, binFeasibleFinal, binRecords,
-                 adjViol, allViolations, cons, deadline)
-      case Some("peak") | Some("valley") =>
-        val h = if (trend.contains("peak")) "peak_heuristic"
-                else "valley_heuristic"
-        if (needDfs)
-          bestOverChangePointsBy(n, deadline, tc =>
-            dfsSolve(n, d, v, h, tc, binFeasibleFinal, binRecords, adjViol,
-                     allViolations, cons, deadline))
-        else
-          bestOverChangePoints(n, d, v, h, binFeasibleFinal, adjViol, cons,
-                               deadline)
-      case _ if needDfs =>
-        dfsSolve(n, d, v, trend.orNull, trendChange, binFeasibleFinal,
-                 binRecords, adjViol, allViolations, cons, deadline)
+      case Some(c @ ("concave" | "convex")) =>
+        dfsSolve(n, d, v, rule, if (c == "concave") 1 else -1, t,
+                 allViolations, cons, deadline)
+      case _ if allViolations.nonEmpty || cons.gammaReg > 0 =>
+        dfsSolve(n, d, v, rule, 0, t, allViolations, cons, deadline)
       case _ =>
-        dpSolve(n, d, v, trend.orNull, trendChange, binFeasibleFinal,
-                adjViol, cons)
+        dpSolve(n, v, Array(rule), t, cons)
     }
   }
 
@@ -167,7 +118,7 @@ object Solver {
       : Result = {
     val nClasses = d.length
     // fail fast on trends the pairwise transition check cannot express:
-    // monoOk's default branch would silently skip an unsupported trend,
+    // pairRule's default branch would silently skip an unsupported trend,
     // and a *_heuristic trend without a resolved change point (-1)
     // degenerates to pure descending/ascending
     trends.zipWithIndex.foreach { case (t, c) =>
@@ -184,30 +135,8 @@ object Solver {
           "concave/convex need the single-variable solver")
       }
     }
-    val cumRec = prefix(nRecords)
-    val fixed =
-      cons.userSplitsFixed.getOrElse(Array.fill(math.max(n - 1, 0))(false))
-
-    def binFeasible(s: Int, e: Int): Boolean = {
-      // singleton fixed-prebin rule, as in `solve` (`cp.py:580-584`)
-      var i = s
-      val hi = math.min(e, fixed.length - 1)
-      while (i <= hi) {
-        if (fixed(i) && (s != i || e != i)) return false
-        i += 1
-      }
-      val size = cumRec(e + 1) - cumRec(s)
-      !(cons.minBinSize.exists(size < _) || cons.maxBinSize.exists(size > _))
-    }
-
-    val adjViol = new mutable.HashSet[Long]
-    adjacentViolations.foreach { case ((i, r), (j, k)) =>
-      adjViol += pack(i, r, j, k)
-    }
-
-    // summed objective; per-class monotonic check via a combined V and a
-    // custom mono function — reuse dpSolve by building a synthetic "class"
-    // closure
+    val t = new Tables(n, cons, nRecords, Array.empty, Array.empty, null,
+                       adjacentViolations)
     val vSum = Array.tabulate(n) { i =>
       Array.tabulate(i + 1) { j =>
         var acc = 0L
@@ -216,21 +145,10 @@ object Solver {
         acc
       }
     }
-
-    def monoAllOk(sA: Int, eA: Int, eB: Int): Boolean = {
-      var c = 0
-      while (c < nClasses) {
-        trends(c) match {
-          case Some(t) =>
-            if (!monoOk(t, trendChanges(c), d(c), sA, eA, eB)) return false
-          case None => ()
-        }
-        c += 1
-      }
-      true
-    }
-
-    dpSolveGeneric(n, vSum, monoAllOk, binFeasible, adjViol, cons)
+    val rules = (0 until nClasses).collect {
+      case c if trends(c).isDefined => pairRule(trends(c), trendChanges(c), d(c))
+    }.toArray
+    dpSolve(n, vSum, rules, t, cons)
   }
 
   /** Reference CP dominance preprocessing (`cp.py:404-431`): for plain
@@ -270,169 +188,216 @@ object Solver {
     ((i.toLong & 0xffff) << 48) | ((r.toLong & 0xffff) << 32) |
       ((j.toLong & 0xffff) << 16) | (k.toLong & 0xffff)
 
-  /** Adjacent-pair monotonicity check between bin A=(sA..eA) and the
-    * immediately following bin B=(eA+1..eB). */
-  @inline private def monoOk(trend: String, tc: Int,
-                             d: Array[Array[Long]],
-                             sA: Int, eA: Int, eB: Int): Boolean = {
-    if (trend == null) return true
-    val rA = d(eA)(sA)
-    val rB = d(eB)(eA + 1)
-    trend match {
-      case "ascending"  => rA <= rB
-      case "descending" => rA >= rB
-      case "peak_heuristic" =>
-        // ascending among bins ending < tc, descending among bins ending
-        // >= tc, free across the change point (`cp.py:498-530`)
-        if (eA < tc && eB < tc) rA <= rB
-        else if (eA >= tc && eB >= tc) rA >= rB
-        else true
-      case "valley_heuristic" =>
-        if (eA < tc && eB < tc) rA >= rB
-        else if (eA >= tc && eB >= tc) rA <= rB
-        else true
-      case _ => true
+  /** Per-solve tables shared by the DP and the DFS, built once from
+    * prefix sums: `feasible(s)(e)` says whether candidate bin s..e passes
+    * every per-bin check, and `banned(sA, eA, eB)` whether the adjacent
+    * pair (sA..eA, eA+1..eB) is a listed violation (one bitset over
+    * (sA, eB) per eA). */
+  private final class Tables(n: Int, cons: Constraints,
+                             nRecords: Array[Long], nEvent: Array[Long],
+                             nNonevent: Array[Long],
+                             bannedSingletons: Array[Boolean],
+                             adjacentViolations: Array[((Int, Int), (Int, Int))]) {
+    private val cumRec = prefix(nRecords)
+
+    def records(s: Int, e: Int): Long = cumRec(e + 1) - cumRec(s)
+
+    val feasible: Array[Array[Boolean]] = {
+      // prefix sums and [min, max] of each bounded count; an empty count
+      // array (continuous, multiclass) carries no event bounds
+      val limited = Seq((nRecords, cons.minBinSize, cons.maxBinSize),
+                        (nEvent, cons.minBinNEvent, cons.maxBinNEvent),
+                        (nNonevent, cons.minBinNNonevent, cons.maxBinNNonevent))
+        .filter { case (c, lo, hi) => c.nonEmpty && (lo.isDefined || hi.isDefined) }
+      val cums = limited.map(l => prefix(l._1)).toArray
+      val los = limited.map(_._2.getOrElse(Long.MinValue)).toArray
+      val his = limited.map(_._3.getOrElse(Long.MaxValue)).toArray
+      def countsOk(s: Int, e: Int): Boolean = {
+        var k = 0
+        while (k < cums.length && {
+                 val x = cums(k)(e + 1) - cums(k)(s)
+                 x >= los(k) && x <= his(k)
+               }) k += 1
+        k == cums.length
+      }
+      // Fixed split i forces x[i, i] == 1 in the reference CP
+      // (`cp.py:580-584`): the prebin ENDING at that split is a bin on its
+      // own, so a bin of two or more prebins may contain no fixed one.
+      val fixed = cons.userSplitsFixed.getOrElse(Array.empty[Boolean])
+      val cumFixed = prefix(fixed.map(f => if (f) 1L else 0L))
+      Array.tabulate(n) { s =>
+        val row = new Array[Boolean](n)
+        var e = s
+        while (e < n) {
+          val hi = math.min(e, fixed.length - 1)
+          row(e) =
+            !(e > s && hi >= s && cumFixed(hi + 1) > cumFixed(s)) &&
+            !(e == s && bannedSingletons != null && bannedSingletons(s)) &&
+            countsOk(s, e)
+          e += 1
+        }
+        row
+      }
+    }
+
+    private val adj: Array[Array[Long]] = {
+      val out = new Array[Array[Long]](n)
+      adjacentViolations.foreach { case ((eA, sA), (eB, sB)) =>
+        if (sB == eA + 1) {
+          if (out(eA) == null) out(eA) = new Array[Long]((n * n + 63) >>> 6)
+          val i = sA * n + eB
+          out(eA)(i >>> 6) |= 1L << i
+        }
+      }
+      out
+    }
+
+    def banned(sA: Int, eA: Int, eB: Int): Boolean = {
+      val row = adj(eA)
+      row != null && (row((sA * n + eB) >>> 6) & (1L << (sA * n + eB))) != 0
     }
   }
 
-  /** Exact DP. States (e, s) = partition of prebins 0..e whose last bin is
-    * (s..e); optional bin-count dimension when min/max n_bins set. */
-  private def dpSolve(n: Int, d: Array[Array[Long]], v: Array[Array[Long]],
-                      trend: String, trendChange: Int,
-                      binFeasible: (Int, Int) => Boolean,
-                      adjViol: mutable.HashSet[Long],
-                      cons: Constraints): Result =
-    dpSolveGeneric(n, v,
-                   (sA, eA, eB) => monoOk(trend, trendChange, d, sA, eA, eB),
-                   binFeasible, adjViol, cons)
+  /** A trend resolved once per solve into an adjacent-pair rule:
+    * `next(phase, sA, eA, eB)` is the phase after bin A = (sA..eA) is
+    * followed by bin B = (eA+1..eB), or -1 when the pair breaks the trend.
+    * A sense is 1 (rising, rA <= rB), -1 (falling) or 0 (free). Pairs of
+    * bins ending before `tc` follow `first`, pairs of bins ending at or
+    * after it `second`, and the pair across it is free (`cp.py:498-530`).
+    * Every trend has the single phase 0 except free peak/valley
+    * (`freeTurn`), which move from 0 (`first`) to 1 (`second`) on their one
+    * free crossing pair. */
+  private final class PairRule(first: Int, second: Int, tc: Int,
+                               val freeTurn: Boolean, d: Array[Array[Long]]) {
+    def next(phase: Int, sA: Int, eA: Int, eB: Int): Int =
+      if (first == 0 && second == 0) 0
+      else {
+        val c = java.lang.Long.compare(d(eB)(eA + 1), d(eA)(sA))
+        if (freeTurn) {
+          if (phase == 0) { if (c * first >= 0) 0 else 1 }
+          else if (c * second >= 0) 1 else -1
+        } else {
+          val sense = if (eB < tc) first else if (eA >= tc) second else 0
+          if (c * sense >= 0) 0 else -1
+        }
+      }
+  }
 
-  private def dpSolveGeneric(n: Int, v: Array[Array[Long]],
-                             monoCheck: (Int, Int, Int) => Boolean,
-                             binFeasible: (Int, Int) => Boolean,
-                             adjViol: mutable.HashSet[Long],
-                             cons: Constraints): Result = {
+  /** Phase after the pair under every rule (one per class), or -1. */
+  private def step(rules: Array[PairRule], phase: Int,
+                   sA: Int, eA: Int, eB: Int): Int = {
+    var ph = phase
+    var c = 0
+    while (ph >= 0 && c < rules.length) {
+      ph = rules(c).next(phase, sA, eA, eB)
+      c += 1
+    }
+    ph
+  }
+
+  private def pairRule(trend: Option[String], tc: Int,
+                       d: Array[Array[Long]]): PairRule = trend match {
+    case Some("ascending")        => new PairRule(1, 1, tc, false, d)
+    case Some("descending")       => new PairRule(-1, -1, tc, false, d)
+    case Some("peak_heuristic")   => new PairRule(1, -1, tc, false, d)
+    case Some("valley_heuristic") => new PairRule(-1, 1, tc, false, d)
+    case Some("peak")             => new PairRule(1, -1, tc, true, d)
+    case Some("valley")           => new PairRule(-1, 1, tc, true, d)
+    case _                        => new PairRule(0, 0, tc, false, d)
+  }
+
+  /** Exact DP. States (e, s, b, phase) = partition of prebins 0..e whose
+    * last bin is (s..e), with b+1 bins (only when min/max n_bins are set)
+    * and the trend phase after its last pair. */
+  private def dpSolve(n: Int, v: Array[Array[Long]], rules: Array[PairRule],
+                      t: Tables, cons: Constraints): Result = {
+    val phases = if (rules.exists(_.freeTurn)) 2 else 1
     val needCount = cons.minNBins.isDefined || cons.maxNBins.isDefined
     val maxB = if (needCount) math.min(cons.maxNBins.getOrElse(n), n) else 1
     val NEG = Long.MinValue / 4
-
-    // dp(e)(s)(b-1): best objective; parent pointer for reconstruction
-    val dp = Array.fill(n, n, maxB)(NEG)
-    val par = Array.fill(n, n, maxB)(-1) // packed (sPrev, bPrev)
+    // slot (s, b, phase) = (s * maxB + b) * phases + phase within dp(e),
+    // s <= e; par(e)(slot) is the predecessor's slot within dp(s - 1)
+    val width = maxB * phases
+    val dp = Array.tabulate(n)(e => Array.fill((e + 1) * width)(NEG))
+    val par = Array.tabulate(n)(e => new Array[Int]((e + 1) * width))
 
     var e = 0
     while (e < n) {
-      if (binFeasible(0, e)) dp(e)(0)(0) = v(e)(0)
+      if (t.feasible(0)(e)) dp(e)(0) = v(e)(0)
       e += 1
     }
 
     e = 0
     while (e < n - 1) {
-      var s = 0
-      while (s <= e) {
-        var b = 0
-        while (b < maxB) {
-          val cur = dp(e)(s)(b)
-          if (cur > NEG && (!needCount || b + 1 < maxB)) {
-            val b2 = if (needCount) b + 1 else 0
-            var e2 = e + 1
-            while (e2 < n) {
-              if (binFeasible(e + 1, e2) &&
-                  monoCheck(s, e, e2) &&
-                  !adjViol.contains(pack(e, s, e2, e + 1))) {
+      val row = t.feasible(e + 1)
+      var slot = 0
+      while (slot < (e + 1) * width) {
+        val cur = dp(e)(slot)
+        val s = slot / width
+        val b = slot % width / phases
+        if (cur > NEG && (!needCount || b + 1 < maxB)) {
+          val next = (if (needCount) (e + 1) * maxB + b + 1
+                      else e + 1) * phases
+          var e2 = e + 1
+          while (e2 < n) {
+            if (row(e2) && !t.banned(s, e, e2)) {
+              val ph = step(rules, slot % phases, s, e, e2)
+              if (ph >= 0) {
                 val cand = cur + v(e2)(e + 1)
-                if (cand > dp(e2)(e + 1)(b2)) {
-                  dp(e2)(e + 1)(b2) = cand
-                  par(e2)(e + 1)(b2) = s * maxB + b
+                if (cand > dp(e2)(next + ph)) {
+                  dp(e2)(next + ph) = cand
+                  par(e2)(next + ph) = slot
                 }
               }
-              e2 += 1
             }
+            e2 += 1
           }
-          b += 1
         }
-        s += 1
+        slot += 1
       }
       e += 1
     }
 
     // answer: full cover must end at prebin n-1
     var best = NEG
-    var bestS = -1
-    var bestB = -1
-    var s = 0
-    while (s < n) {
-      var b = 0
-      while (b < maxB) {
-        val nb = b + 1
-        val okCount = !needCount ||
-          (cons.minNBins.forall(nb >= _) && cons.maxNBins.forall(nb <= _))
-        if (okCount && dp(n - 1)(s)(b) > best) {
-          best = dp(n - 1)(s)(b); bestS = s; bestB = b
-        }
-        b += 1
+    var bestSlot = -1
+    var slot = 0
+    while (slot < n * width) {
+      val nb = slot % width / phases + 1
+      val okCount = !needCount ||
+        (cons.minNBins.forall(nb >= _) && cons.maxNBins.forall(nb <= _))
+      if (okCount && dp(n - 1)(slot) > best) {
+        best = dp(n - 1)(slot); bestSlot = slot
       }
-      s += 1
+      slot += 1
     }
 
-    if (bestS < 0) {
-      val sol = Array.fill(n)(false)
+    val sol = Array.fill(n)(false)
+    if (bestSlot < 0) {
       sol(n - 1) = true
       Result("INFEASIBLE", sol, 0L)
     } else {
-      val sol = Array.fill(n)(false)
-      var ce = n - 1; var cs = bestS; var cb = bestB
+      var ce = n - 1
+      slot = bestSlot
       while (ce >= 0) {
         sol(ce) = true
+        val cs = slot / width
         if (cs == 0) ce = -1
-        else {
-          val p = par(ce)(cs)(cb)
-          val pe = cs - 1
-          val ps = p / maxB
-          val pb = p % maxB
-          ce = pe; cs = ps; cb = pb
-        }
+        else { slot = par(ce)(slot); ce = cs - 1 }
       }
       Result("OPTIMAL", sol, best)
     }
   }
 
-  private def bestOverChangePoints(n: Int, d: Array[Array[Long]],
-                                   v: Array[Array[Long]], heuristicTrend: String,
-                                   binFeasible: (Int, Int) => Boolean,
-                                   adjViol: mutable.HashSet[Long],
-                                   cons: Constraints,
-                                   deadline: Long): Result =
-    bestOverChangePointsBy(n, deadline,
-      tc => dpSolve(n, d, v, heuristicTrend, tc, binFeasible, adjViol, cons))
-
-  /** Free peak/valley = best heuristic solve over every change point
-    * (mirrors the CP auxiliary variable `t`, `cp.py:141-148`). */
-  private def bestOverChangePointsBy(n: Int, deadline: Long,
-                                     solveAt: Int => Result): Result = {
-    var best: Result = null
-    var tc = 0
-    while (tc <= n && (best == null || System.nanoTime() < deadline)) {
-      val r = solveAt(tc)
-      if (r.status == "OPTIMAL" &&
-          (best == null || best.status != "OPTIMAL" ||
-           r.objective > best.objective)) best = r
-      else if (best == null) best = r
-      tc += 1
-    }
-    best
-  }
-
   /** DFS over bin-end subsets for the constraint families the DP cannot
     * express: concave/convex all-triples midpoint conditions
-    * (`cp.py:433-459`) and non-adjacent p-value violation pairs
-    * (policy "all"). Exact for the default max_n_prebins=20; budget-guarded
-    * beyond that (returns best found with status FEASIBLE on timeout).
+    * (`cp.py:433-459`, `triples` = 1 concave, -1 convex, 0 none), non-
+    * adjacent p-value violation pairs (policy "all") and the global gamma
+    * term. Exact for the default max_n_prebins=20; budget-guarded beyond
+    * that (returns best found with status FEASIBLE on timeout).
     */
   private def dfsSolve(n: Int, d: Array[Array[Long]], v: Array[Array[Long]],
-                       trend: String, trendChange: Int,
-                       binFeasible: (Int, Int) => Boolean,
-                       binRecords: (Int, Int) => Long,
-                       adjViol: mutable.HashSet[Long],
+                       rule: PairRule, triples: Int, t: Tables,
                        allViolations: Array[((Int, Int), (Int, Int))],
                        cons: Constraints, deadline: Long): Result = {
     val allViol = new mutable.HashSet[Long]
@@ -453,10 +418,8 @@ object Solver {
       while (b < m) {
         var a = 0
         while (a < b) {
-          if (trend == "concave" && rates(a) + newRate > 2 * rates(b))
-            return true
-          if (trend == "convex" && rates(a) + newRate < 2 * rates(b))
-            return true
+          if (triples > 0 && rates(a) + newRate > 2 * rates(b)) return true
+          if (triples < 0 && rates(a) + newRate < 2 * rates(b)) return true
           a += 1
         }
         b += 1
@@ -471,20 +434,10 @@ object Solver {
         if (allViol.contains(pack(pe, ps, e, s))) return true
         i += 1
       }
-      if (bins.nonEmpty) {
-        val (ps, pe) = bins.last
-        if (pe == s - 1 && adjViol.contains(pack(pe, ps, e, s))) return true
-      }
-      false
+      bins.nonEmpty && t.banned(bins.last._1, s - 1, e)
     }
 
-    def monoPairOk(e: Int): Boolean =
-      bins.isEmpty || {
-        val (ps, pe) = bins.last
-        monoOk(trend, trendChange, d, ps, pe, e)
-      }
-
-    def rec(start: Int, obj: Long): Unit = {
+    def rec(start: Int, obj: Long, phase: Int): Unit = {
       if (System.nanoTime() > deadline) { timedOut = true; return }
       if (start == n) {
         val nb = bins.length
@@ -496,7 +449,7 @@ object Solver {
           var mn = Long.MaxValue
           var mx = Long.MinValue
           bins.foreach { case (s, e) =>
-            val sz = binRecords(s, e)
+            val sz = t.records(s, e)
             if (sz < mn) mn = sz
             if (sz > mx) mx = sz
           }
@@ -508,18 +461,19 @@ object Solver {
         }
         return
       }
+      val row = t.feasible(start)
       var e = start
       while (e < n && !timedOut) {
-        if (binFeasible(start, e)) {
+        if (row(e)) {
           val rate = d(e)(start)
-          val trendOk =
-            if (trend == "concave" || trend == "convex")
-              !violatesTriples(rate)
-            else monoPairOk(e)
-          if (trendOk && !violatesPairs(start, e)) {
+          val next =
+            if (triples != 0) { if (violatesTriples(rate)) -1 else 0 }
+            else if (bins.isEmpty) 0
+            else rule.next(phase, bins.last._1, start - 1, e)
+          if (next >= 0 && !violatesPairs(start, e)) {
             bins += ((start, e))
             rates += rate
-            rec(e + 1, obj + v(e)(start))
+            rec(e + 1, obj + v(e)(start), next)
             bins.remove(bins.length - 1)
             rates.remove(rates.length - 1)
           }
@@ -528,14 +482,13 @@ object Solver {
       }
     }
 
-    rec(0, 0L)
+    rec(0, 0L, 0)
 
+    val sol = Array.fill(n)(false)
     if (bestBins == null) {
-      val sol = Array.fill(n)(false)
       sol(n - 1) = true
       Result(if (timedOut) "UNKNOWN" else "INFEASIBLE", sol, 0L)
     } else {
-      val sol = Array.fill(n)(false)
       bestBins.foreach { case (_, e) => sol(e) = true }
       Result(if (timedOut) "FEASIBLE" else "OPTIMAL", sol, bestObj)
     }

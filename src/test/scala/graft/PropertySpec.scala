@@ -25,46 +25,92 @@ class PropertySpec extends AnyFunSuite {
     ev <- Gen.listOfN(n, Gen.choose(1, 50))
   } yield (ne.map(_.toDouble).toArray, ev.map(_.toDouble).toArray)
 
-  /** brute force: enumerate all split subsets, apply the same feasibility
-    * and monotonicity rules, return the best scaled objective. */
-  private def bruteForce(ne: Array[Double], ev: Array[Double],
-                         trend: Option[String]): Long = {
-    val n = ne.length
-    val md = ModelData.binary("iv", ne, ev, None, "consecutive", 0.0)
+  /** One binary solver instance: prebin counts plus the constraints the
+    * oracles below cover, solved exactly as the binary fit calls it. */
+  private final case class Inst(ne: Array[Double], ev: Array[Double],
+                                maxPvalue: Option[Double] = None,
+                                policy: String = "consecutive",
+                                minBinSize: Option[Long] = None,
+                                minNBins: Option[Int] = None,
+                                maxNBins: Option[Int] = None,
+                                gammaReg: Long = 0L) {
+    val n: Int = ne.length
+    val md = ModelData.binary("iv", ne, ev, maxPvalue, policy, 0.0)
+    val records: Array[Long] =
+      ne.zip(ev).map { case (a, b) => math.round(a + b) }
+    val (adjV, allV) =
+      if (policy == "all") (md.minDiffViolations, md.pvalueViolations)
+      else (md.pvalueViolations ++ md.minDiffViolations,
+            Array.empty[((Int, Int), (Int, Int))])
+    def constraints: Solver.Constraints =
+      Solver.Constraints(minNBins = minNBins, maxNBins = maxNBins,
+                         minBinSize = minBinSize, gammaReg = gammaReg)
+    def solve(trend: Option[String], tc: Int = -1,
+              cons: Solver.Constraints = constraints): Solver.Result =
+      Solver.solve(n, md.d, md.v, records, ev.map(math.round),
+                   ne.map(math.round), trend, tc, cons, adjV, allV)
+    def usesDfs: Boolean = allV.nonEmpty || gammaReg > 0
+    override def toString: String =
+      s"ne=${ne.mkString(",")} ev=${ev.mkString(",")} p=$maxPvalue " +
+        s"$policy minSize=$minBinSize nBins=$minNBins..$maxNBins " +
+        s"gamma=$gammaReg"
+  }
+
+  /** brute force: enumerate all split subsets, apply the same per-bin,
+    * bin-count, violation-pair and trend rules, and return the best scaled
+    * objective (gamma penalty included) with every partition reaching it
+    * (Long.MinValue and none when infeasible). "peak" means the bin rates
+    * rise (ties allowed) up to some bin and fall after it; "valley" is
+    * the mirror. */
+  private def bruteForce(inst: Inst, trend: Option[String])
+      : (Long, Seq[Array[Boolean]]) = {
+    import inst._
+    val banned = (adjV ++ allV).toSet
     var best = Long.MinValue
+    val optima = scala.collection.mutable.ArrayBuffer[Array[Boolean]]()
     // subsets of split positions 0..n-2; bins are maximal runs
     for (mask <- 0 until (1 << (n - 1))) {
       val ends = (0 until n - 1).filter(i => (mask & (1 << i)) != 0) :+ (n - 1)
       val starts = 0 +: ends.dropRight(1).map(_ + 1)
       val bins = starts.zip(ends)
+      val k = bins.length
       val rates = bins.map { case (s, e) => md.d(e)(s) }
-      val ok = trend match {
-        case Some("ascending") =>
-          rates.sliding(2).forall(w => w.length < 2 || w(0) <= w(1))
-        case Some("descending") =>
-          rates.sliding(2).forall(w => w.length < 2 || w(0) >= w(1))
+      val sizes = bins.map { case (s, e) => (s to e).map(records).sum }
+      def follows(rising: Boolean)(i: Int): Boolean =
+        if (rising) rates(i) <= rates(i + 1) else rates(i) >= rates(i + 1)
+      val trendOk = trend match {
+        case Some("ascending")  => (0 until k - 1).forall(follows(true))
+        case Some("descending") => (0 until k - 1).forall(follows(false))
+        case Some(pv @ ("peak" | "valley")) =>
+          val rising = pv == "peak"
+          (0 until k).exists { top =>
+            (0 until top).forall(follows(rising)) &&
+            (top until k - 1).forall(follows(!rising))
+          }
         case _ => true
       }
+      val ok = trendOk &&
+        minBinSize.forall(m => sizes.forall(_ >= m)) &&
+        minNBins.forall(k >= _) && maxNBins.forall(k <= _) &&
+        !(0 until k).exists(b => (0 until b).exists { a =>
+          banned(((bins(a)._2, bins(a)._1), (bins(b)._2, bins(b)._1)))
+        })
       if (ok) {
-        val obj = bins.map { case (s, e) => md.v(e)(s) }.sum
-        if (obj > best) best = obj
+        val obj = bins.map { case (s, e) => md.v(e)(s) }.sum -
+          gammaReg * (sizes.max - sizes.min)
+        if (obj > best) { best = obj; optima.clear() }
+        if (obj == best) optima += Array.tabulate(n)(ends.contains)
       }
     }
-    best
+    (best, optima.toSeq)
   }
 
   test("DP solver equals exhaustive enumeration (none/asc/desc trends)") {
     forAll(countsGen) { case (ne, ev) =>
       for (trend <- Seq(None, Some("ascending"), Some("descending"))) {
-        val n = ne.length
-        val md = ModelData.binary("iv", ne, ev, None, "consecutive", 0.0)
-        val r = Solver.solve(n, md.d, md.v,
-                             ne.zip(ev).map { case (a, b) =>
-                               math.round(a + b) },
-                             ev.map(math.round), ne.map(math.round),
-                             trend, -1, Solver.Constraints(),
-                             Array.empty, Array.empty)
-        val expected = bruteForce(ne, ev, trend)
+        val inst = Inst(ne, ev)
+        val r = inst.solve(trend)
+        val expected = bruteForce(inst, trend)._1
         assert(r.status == "OPTIMAL")
         assert(r.objective == expected,
                s"trend $trend dp ${r.objective} brute $expected " +
@@ -110,14 +156,9 @@ class PropertySpec extends AnyFunSuite {
   test("monoPreprocess only removes solutions (objective never improves)") {
     forAll(countsGen, n = 60) { case (ne, ev) =>
       for (trend <- Seq(Some("ascending"), Some("descending"))) {
-        val n = ne.length
-        val md = ModelData.binary("iv", ne, ev, None, "consecutive", 0.0)
-        def run(pre: Boolean) = Solver.solve(
-          n, md.d, md.v,
-          ne.zip(ev).map { case (a, b) => math.round(a + b) },
-          ev.map(math.round), ne.map(math.round),
-          trend, -1, Solver.Constraints(monoPreprocess = pre),
-          Array.empty, Array.empty)
+        val inst = Inst(ne, ev)
+        def run(pre: Boolean) =
+          inst.solve(trend, cons = Solver.Constraints(monoPreprocess = pre))
         val plain = run(false)
         val cut = run(true)
         // the dominance cut is a restriction: objective can only drop
@@ -127,60 +168,124 @@ class PropertySpec extends AnyFunSuite {
         // and a cut OPTIMAL solution is valid under the plain model too:
         // same bins must satisfy the trend (checked via brute force bound)
         if (cut.status == "OPTIMAL")
-          assert(cut.objective <= bruteForce(ne, ev, trend))
+          assert(cut.objective <= bruteForce(inst, trend)._1)
       }
     }
-  }
-
-  /** brute force including the gamma bin-size-spread penalty. */
-  private def bruteForceGamma(ne: Array[Double], ev: Array[Double],
-                              trend: Option[String],
-                              gammaReg: Long): Long = {
-    val n = ne.length
-    val md = ModelData.binary("iv", ne, ev, None, "consecutive", 0.0)
-    val rec = ne.zip(ev).map { case (a, b) => math.round(a + b) }
-    var best = Long.MinValue
-    for (mask <- 0 until (1 << (n - 1))) {
-      val ends = (0 until n - 1).filter(i => (mask & (1 << i)) != 0) :+ (n - 1)
-      val starts = 0 +: ends.dropRight(1).map(_ + 1)
-      val bins = starts.zip(ends)
-      val rates = bins.map { case (s, e) => md.d(e)(s) }
-      val ok = trend match {
-        case Some("ascending") =>
-          rates.sliding(2).forall(w => w.length < 2 || w(0) <= w(1))
-        case Some("descending") =>
-          rates.sliding(2).forall(w => w.length < 2 || w(0) >= w(1))
-        case _ => true
-      }
-      if (ok) {
-        val sizes = bins.map { case (s, e) => (s to e).map(rec).sum }
-        val obj = bins.map { case (s, e) => md.v(e)(s) }.sum -
-          gammaReg * (sizes.max - sizes.min)
-        if (obj > best) best = obj
-      }
-    }
-    best
   }
 
   test("gamma DFS solver equals exhaustive enumeration") {
     forAll(countsGen, n = 40) { case (ne, ev) =>
       for (trend <- Seq(None, Some("ascending"));
            gammaReg <- Seq(1L, 50L)) {
-        val n = ne.length
-        val md = ModelData.binary("iv", ne, ev, None, "consecutive", 0.0)
-        val r = Solver.solve(n, md.d, md.v,
-                             ne.zip(ev).map { case (a, b) =>
-                               math.round(a + b) },
-                             ev.map(math.round), ne.map(math.round),
-                             trend, -1,
-                             Solver.Constraints(gammaReg = gammaReg),
-                             Array.empty, Array.empty)
-        val expected = bruteForceGamma(ne, ev, trend, gammaReg)
+        val inst = Inst(ne, ev, gammaReg = gammaReg)
+        val r = inst.solve(trend)
+        val expected = bruteForce(inst, trend)._1
         assert(r.status == "OPTIMAL")
         assert(r.objective == expected,
                s"trend $trend gamma $gammaReg dfs ${r.objective} " +
                  s"brute $expected ne=${ne.mkString(",")} " +
                  s"ev=${ev.mkString(",")}")
+      }
+    }
+  }
+
+  /** Random instances for the free peak/valley oracles. The DFS route
+    * adds p-value policy "all" (non-adjacent violation pairs) and gamma. */
+  private def instGen(nMin: Int, nMax: Int, dfs: Boolean): Gen[Inst] = for {
+    n <- Gen.choose(nMin, nMax)
+    ne <- Gen.listOfN(n, Gen.choose(1, 50))
+    ev <- Gen.listOfN(n, Gen.choose(1, 50))
+    maxP <- Gen.oneOf(None, Some(0.05), Some(0.5))
+    policy <- if (dfs) Gen.const("all") else Gen.const("consecutive")
+    minSizeFrac <- Gen.oneOf(0.0, 0.05, 0.15)
+    minNB <- Gen.oneOf(None, Some(2))
+    maxNB <- Gen.oneOf(None, Some(3), Some(5))
+    gamma <- if (dfs) Gen.oneOf(0L, 1L, 50L) else Gen.const(0L)
+  } yield {
+    val total = ne.sum + ev.sum
+    Inst(ne.map(_.toDouble).toArray, ev.map(_.toDouble).toArray, maxP,
+         policy,
+         Some(math.ceil(minSizeFrac * total).toLong).filter(_ > 0),
+         minNB, maxNB, gamma)
+  }
+
+  /** The change-point loop free peak/valley used to run, rebuilt from
+    * public calls: the heuristic solve at every change point 0..n, keeping
+    * the first strictly better OPTIMAL result. */
+  private def changePointLoop(inst: Inst, trend: String): Solver.Result =
+    (0 to inst.n).map(tc => inst.solve(Some(trend + "_heuristic"), tc))
+      .reduceLeft { (best, r) =>
+        if (r.status == "OPTIMAL" && (best.status != "OPTIMAL" ||
+                                      r.objective > best.objective)) r
+        else best
+      }
+
+  /** Checks free peak/valley against brute force and the change-point
+    * loop; returns the number of ties where the loop chose a different
+    * optimal partition. */
+  private def checkFreePeakValley(inst: Inst): Int = {
+    var ties = 0
+    for (trend <- Seq("peak", "valley")) {
+      val r = inst.solve(Some(trend))
+      val loop = changePointLoop(inst, trend)
+      val (best, optima) = bruteForce(inst, Some(trend))
+      val ctx = s"$trend $inst"
+      assert(r.status == loop.status, ctx)
+      if (optima.isEmpty) assert(r.status == "INFEASIBLE", ctx)
+      else {
+        assert(r.status == "OPTIMAL", ctx)
+        assert(r.objective == best, s"$ctx: ${r.objective} vs brute $best")
+        assert(loop.objective == best, ctx)
+        assert(optima.exists(_.sameElements(r.solution)), ctx)
+        if (optima.size == 1) {
+          assert(r.solution.sameElements(optima.head), ctx)
+          assert(loop.solution.sameElements(optima.head), ctx)
+        } else if (!r.solution.sameElements(loop.solution)) ties += 1
+      }
+    }
+    ties
+  }
+
+  test("free peak/valley (DP) equal brute force and the change-point " +
+       "loop under p-values, min bin size and bin-count bounds") {
+    var ties = 0
+    forAll(instGen(2, 12, dfs = false), n = 120) { inst =>
+      assert(!inst.usesDfs)
+      ties += checkFreePeakValley(inst)
+    }
+    info(s"$ties tied optima where the loop picked another partition")
+  }
+
+  test("free peak/valley (DFS) equal brute force and the change-point " +
+       "loop with gamma and non-adjacent p-value pairs") {
+    var withAll = 0
+    var withGamma = 0
+    forAll(instGen(2, 10, dfs = true), n = 120) { inst =>
+      if (inst.allV.nonEmpty) withAll += 1
+      if (inst.gammaReg > 0) withGamma += 1
+      checkFreePeakValley(inst)
+    }
+    assert(withAll > 20 && withGamma > 20, s"all=$withAll gamma=$withGamma")
+  }
+
+  test("a free peak/valley DFS cut by its deadline does not report " +
+       "OPTIMAL") {
+    val inst = Inst(Array.tabulate(12)(i => 10.0 + i), Array.fill(12)(20.0),
+                    gammaReg = 1L)
+    for (trend <- Seq("peak", "valley")) {
+      val r = inst.solve(Some(trend),
+                         cons = inst.constraints.copy(timeLimitMs = 0L))
+      assert(r.status == "FEASIBLE" || r.status == "UNKNOWN", r.status)
+    }
+  }
+
+  test("free peak/valley equal the change-point loop at n = 30-40") {
+    forAll(instGen(30, 40, dfs = false), n = 20) { inst =>
+      for (trend <- Seq("peak", "valley")) {
+        val r = inst.solve(Some(trend))
+        val loop = changePointLoop(inst, trend)
+        assert(r.status == loop.status, s"$trend $inst")
+        assert(r.objective == loop.objective, s"$trend $inst")
       }
     }
   }

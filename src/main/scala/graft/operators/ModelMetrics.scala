@@ -40,69 +40,41 @@ object ModelMetrics {
     agg
   }
 
-  /** Gini = 2*AUC - 1 over (label, score). Exact when score cardinality
-    * is modest: computed from the per-score (event, nonevent) aggregate
-    * via the rank formula — no ROC materialization. `approx = true`
-    * grid-quantizes scores first (the 100 TB path: bounded aggregate,
-    * bounded collect). */
-  def gini(df: DataFrame, labelCol: String, scoreCol: String,
-           approx: Boolean = false): Double = {
-    val base =
-      if (approx) quantizeScores(df.select(col(scoreCol).cast("double")
-        .as(scoreCol), col(labelCol)), scoreCol)
-      else df
-    val agg = boundedScoreAgg(base.groupBy(col(scoreCol).as("s"))
-      .agg(sum(col(labelCol).cast("double")).as("e"),
-           (count(lit(1)) - sum(col(labelCol).cast("double"))).as("ne"))
-      .orderBy("s"))
-    val ev = agg.map(_.getDouble(1))
-    val ne: Array[Double] = agg.map { r =>
-      r.get(2) match {
-        case l: java.lang.Long   => l.toDouble
-        case d: java.lang.Double => d.toDouble
-      }
-    }
-    // bins ordered by score ascending = ordered by event rate for AUC
-    val te = ev.sum; val tne = ne.sum
-    var cumNe = 0.0
-    var auc = 0.0
-    ev.indices.foreach { i =>
+  /** The Gini/KS kernel over per-score (events, non-events), scores
+    * ascending: Gini = 2*AUC - 1 by the rank formula (no ROC
+    * materialization), KS = the largest gap of the class-conditional
+    * score CDFs (`classification.py:34-67`). A one-class input has
+    * neither: both read 0, not NaN. */
+  private[operators] def giniKs(events: Array[Double],
+                                nonEvents: Array[Double]): (Double, Double) = {
+    val te = events.sum; val tne = nonEvents.sum
+    if (te == 0 || tne == 0) return (0.0, 0.0)
+    var cumE = 0.0; var cumNe = 0.0; var auc = 0.0; var best = 0.0
+    events.indices.foreach { i =>
       // trapezoid: events at this score see cumNe + ne/2 nonevents below
-      auc += ev(i) * (cumNe + ne(i) / 2.0)
-      cumNe += ne(i)
-    }
-    2.0 * (auc / (te * tne)) - 1.0
-  }
-
-  /** KS statistic over scores (`classification.py:34-67`): max gap of the
-    * class-conditional score CDFs; from the same per-score aggregate.
-    * `approx = true` grid-quantizes scores first (bounded at any scale). */
-  def ks(df: DataFrame, labelCol: String, scoreCol: String,
-         approx: Boolean = false): Double = {
-    val base =
-      if (approx) quantizeScores(df.select(col(scoreCol).cast("double")
-        .as(scoreCol), col(labelCol)), scoreCol)
-      else df
-    val agg = boundedScoreAgg(base.groupBy(col(scoreCol).as("s"))
-      .agg(sum(col(labelCol).cast("double")).as("e"),
-           count(lit(1)).cast("double").as("n"))
-      .orderBy("s"))
-    val te = agg.map(_.getDouble(1)).sum
-    val tn = agg.map(_.getDouble(2)).sum
-    val tne = tn - te
-    var cumE = 0.0; var cumNe = 0.0; var best = 0.0
-    agg.foreach { r =>
-      cumE += r.getDouble(1)
-      cumNe += r.getDouble(2) - r.getDouble(1)
+      auc += events(i) * (cumNe + nonEvents(i) / 2.0)
+      cumNe += nonEvents(i)
+      cumE += events(i)
       best = math.max(best, math.abs(cumNe / tne - cumE / te))
     }
-    best
+    (2.0 * (auc / (te * tne)) - 1.0, best)
   }
 
-  /** Gini and KS from ONE per-score aggregate (they share the same
-    * sufficient statistic — the score-conditional class histogram).
-    * Use for monitoring reports that need both: halves the scan count
-    * vs calling [[gini]] and [[ks]] separately. */
+  /** Gini = 2*AUC - 1 over (label, score): the first component of
+    * [[giniAndKs]]. */
+  def gini(df: DataFrame, labelCol: String, scoreCol: String,
+           approx: Boolean = false): Double =
+    giniAndKs(df, labelCol, scoreCol, approx)._1
+
+  /** KS statistic over scores: the second component of [[giniAndKs]]. */
+  def ks(df: DataFrame, labelCol: String, scoreCol: String,
+         approx: Boolean = false): Double =
+    giniAndKs(df, labelCol, scoreCol, approx)._2
+
+  /** Gini and KS from ONE per-score (event, nonevent) aggregate, the
+    * sufficient statistic both share. Exact when score cardinality is
+    * modest; `approx = true` grid-quantizes scores first (the 100 TB
+    * path: bounded aggregate, bounded collect). */
   def giniAndKs(df: DataFrame, labelCol: String, scoreCol: String,
                 approx: Boolean = false): (Double, Double) = {
     val base =
@@ -113,20 +85,8 @@ object ModelMetrics {
       .agg(sum(col(labelCol).cast("double")).as("e"),
            count(lit(1)).cast("double").as("n"))
       .orderBy("s"))
-    val ev = agg.map(_.getDouble(1))
-    val ne = agg.map(r => r.getDouble(2) - r.getDouble(1))
-    val te = ev.sum; val tne = ne.sum
-    // one-class cohort: gini/ks are undefined — report 0 (not NaN/Inf)
-    if (te == 0 || tne == 0) return (0.0, 0.0)
-    var cumNe = 0.0; var auc = 0.0
-    var cumE = 0.0; var cumNeF = 0.0; var best = 0.0
-    ev.indices.foreach { i =>
-      auc += ev(i) * (cumNe + ne(i) / 2.0)
-      cumNe += ne(i)
-      cumE += ev(i); cumNeF += ne(i)
-      best = math.max(best, math.abs(cumNeF / tne - cumE / te))
-    }
-    (2.0 * (auc / (te * tne)) - 1.0, best)
+    giniKs(agg.map(_.getDouble(1)),
+           agg.map(r => r.getDouble(2) - r.getDouble(1)))
   }
 
   /** Imbalanced binary classification metrics from a prediction column

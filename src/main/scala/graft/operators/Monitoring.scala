@@ -1,13 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Population-stability monitoring (`optbinning/scorecard/monitoring.py`):
   * PSI between an expected (train) and actual (production) cohort, and the
   * supporting significance tests. Data plane: one groupBy per cohort (or a
-  * single groupBy(cohort, bin)) + a broadcast-size full-outer join on bin.
+  * single groupBy(cohort, bin)); the bins-sized counts align and go
+  * through [[psiTerms]] on the driver.
   */
 object Monitoring {
 
@@ -23,24 +25,41 @@ object Monitoring {
     // align/totals/psi arithmetic runs driver-side. (The previous
     // full-outer-join formulation cost two extra total-count jobs and
     // re-evaluated both aggregate branches inside the join.)
-    import scala.jdk.CollectionConverters._
-    val spark = expected.sparkSession
-    val binType = expected.schema(binCol).dataType
-    def counts(df: DataFrame, cc: String): Map[Any, Double] =
-      df.select(col(binCol).as("bin"), col(countCol).cast("double").as(cc))
+    def counts(df: DataFrame): Map[Any, Double] =
+      df.select(col(binCol), col(countCol).cast("double"))
         .collect().map(r => r.get(0) -> r.getDouble(1)).toMap
-    val e = counts(expected, "count_e")
-    val a = counts(actual, "count_a")
-    val te = e.values.sum
-    val ta = a.values.sum
-    val rows = (e.keySet ++ a.keySet).toSeq.map { b =>
-      val ce = e.getOrElse(b, 0.0)
-      val ca = a.getOrElse(b, 0.0)
-      val pe = ce / te
-      val pa = ca / ta
-      val psi = if (pe > 0 && pa > 0) (pa - pe) * math.log(pa / pe)
-                else 0.0
-      org.apache.spark.sql.Row(b, ce, ca, pe, pa, psi)
+    val e = counts(expected)
+    val a = counts(actual)
+    val bins = (e.keySet ++ a.keySet).toSeq
+    psiFrame(expected.sparkSession, expected.schema(binCol).dataType, bins,
+             bins.map(e.getOrElse(_, 0.0)).toArray,
+             bins.map(a.getOrElse(_, 0.0)).toArray)
+  }
+
+  /** The PSI kernel: per-bin terms (p_a - p_e) * ln(p_a / p_e) of two
+    * count vectors aligned by bin, p = count / total. A bin empty in
+    * either cohort (or a cohort with no rows) contributes 0. */
+  private[graft] def psiTerms(countE: Array[Double],
+                             countA: Array[Double]): Array[Double] = {
+    val te = countE.sum
+    val ta = countA.sum
+    countE.indices.map { i =>
+      val pe = countE(i) / te
+      val pa = countA(i) / ta
+      if (pe > 0 && pa > 0) (pa - pe) * math.log(pa / pe) else 0.0
+    }.toArray
+  }
+
+  /** The [[psiTable]] frame of aligned per-bin counts, ordered by bin. */
+  private[operators] def psiFrame(spark: SparkSession, binType: DataType,
+                                  bins: Seq[Any], countE: Array[Double],
+                                  countA: Array[Double]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    val (te, ta) = (countE.sum, countA.sum)
+    val psi = psiTerms(countE, countA)
+    val rows = bins.indices.map { i =>
+      Row(bins(i), countE(i), countA(i), countE(i) / te, countA(i) / ta,
+          psi(i))
     }
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(

@@ -88,16 +88,8 @@ final class StreamingDriftMonitor(
   def expectedTotals: Array[Double] = expectedCounts.clone()
 
   /** Total PSI of the accumulated actual distribution vs expected. */
-  def psiTotal: Double = {
-    val te = expectedCounts.sum
-    val ta = actual.sum
-    if (te <= 0 || ta <= 0) 0.0
-    else expectedCounts.indices.map { i =>
-      val pe = expectedCounts(i) / te
-      val pa = actual(i) / ta
-      if (pe > 0 && pa > 0) (pa - pe) * math.log(pa / pe) else 0.0
-    }.sum
-  }
+  def psiTotal: Double =
+    graft.operators.Monitoring.psiTerms(expectedCounts, actual).sum
 
   /** Traffic-light verdict (`monitoring.py:560-571`). */
   def verdict: String = graft.operators.Monitoring.psiVerdict(psiTotal)

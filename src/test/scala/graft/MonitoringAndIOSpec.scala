@@ -78,10 +78,10 @@ class MonitoringAndIOSpec extends AnyFunSuite {
   }
 
   test("cart psi splits are call-order independent beyond 10k rows") {
-    // >10k expected rows triggers the score-grid compression in
-    // computeScoreBins; stabilityStats must apply the SAME compression
-    // so the cached splits (and every downstream report) are identical
-    // whichever entry point runs first
+    // >10k expected rows: psiTotal and stabilityStats fit their cart
+    // splits on the same expected slice with the same grid rule, so
+    // every downstream report is identical whichever entry point runs
+    // first
     val spark = TestSpark.spark
     val df = spark.read
       .parquet(s"${TestSpark.sf001}/lineitem.parquet")
@@ -93,10 +93,10 @@ class MonitoringAndIOSpec extends AnyFunSuite {
     def mkMon() = new ScorecardMonitoring(sc, psiNBins = 10,
       psiMethod = "cart", psiYCol = Some("y"))
     val monA = mkMon()
-    val psiA = monA.psiTotal(expected, actual) // cache via computeScoreBins
+    val psiA = monA.psiTotal(expected, actual)
     val stA = monA.stabilityStats(expected, actual, "y")
     val monB = mkMon()
-    val stB = monB.stabilityStats(expected, actual, "y") // cache via stats
+    val stB = monB.stabilityStats(expected, actual, "y")
     assert(stA.psiBins.toSeq == stB.psiBins.toSeq,
            s"${stA.psiBins.toSeq} vs ${stB.psiBins.toSeq}")
     assert(math.abs(stB.psiTotal - psiA) < 1e-9)

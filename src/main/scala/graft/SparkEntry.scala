@@ -823,12 +823,7 @@ object SparkEntry {
         .collect()
       val ne = agg.sortBy(_.getInt(0)).map(_.getDouble(1))
       val ev = agg.sortBy(_.getInt(0)).map(_.getDouble(2))
-      val tne = ne.sum; val te = ev.sum
-      var cumNe = 0.0; var cumE = 0.0; var ks = 0.0
-      ne.indices.foreach { i =>
-        cumNe += ne(i) / tne; cumE += ev(i) / te
-        ks = math.max(ks, math.abs(cumE - cumNe))
-      }
+      val ks = ModelMetrics.giniKs(ev, ne)._2
       val gini = graft.core.Metrics.gini(ev, ne)
       import s.implicits._
       Seq((scale6(ks), scale6(gini))).toDF("ks", "gini")

@@ -29,6 +29,71 @@ object Prebinning {
   final case class HistBucket(value: Double, n: Long, y0: Double, y1: Double,
                               sum: Double = 0.0, ssum: Double = 0.0)
 
+  /** Candidate splits of every 1-D fit (`binning.py` `_fit_prebinning`):
+    * the sorted user splits when given, else `method` over the sorted
+    * histogram — "cart" through the fit's own tree (`cart` receives the
+    * minimum leaf count), "quantile", "uniform", or "mdlp" where the
+    * target is binary — rounded half-even to `splitDigits` decimals. */
+  def candidateSplits(hist: Array[HistBucket],
+                      userSplits: Option[Array[Double]], method: String,
+                      maxNPrebins: Int, minPrebinCount: Long,
+                      splitDigits: Option[Int], mdlp: Boolean = true)
+                     (cart: Long => Array[Double]): Array[Double] =
+    roundSplits(userSplits match {
+      case Some(us) => us.sorted
+      case None => method match {
+        case "cart" => cart(minPrebinCount)
+        case "quantile" => quantileSplits(hist, maxNPrebins)
+        case "uniform" =>
+          if (hist.isEmpty) Array.empty[Double]
+          else uniformSplits(hist.head.value, hist.last.value, maxNPrebins)
+        case "mdlp" if mdlp => mdlpSplits(hist)
+        case other => throw new IllegalArgumentException(
+          s"prebinning method $other not supported")
+      }
+    }, splitDigits)
+
+  /** Splits rounded half-even to `digits` decimals (`split_digits`). */
+  def roundSplits(splits: Array[Double],
+                  digits: Option[Int]): Array[Double] = digits match {
+    case Some(d) => splits.map(s =>
+      BigDecimal(s).setScale(d, BigDecimal.RoundingMode.HALF_EVEN).toDouble)
+    case None => splits
+  }
+
+  /** Prebin refinement shared by every 1-D fit (`binning.py:1085-1145`):
+    * while `remove` flags a prebin of `counts(splits)` (pure for binary
+    * and multiclass targets, empty for continuous ones), drop the split
+    * that closes it — a flagged last prebin merges the last two — and
+    * recount. The user_splits_fixed mask is filtered alongside, so it
+    * stays aligned with the kept splits; dropping a fixed split raises.
+    * Returns the kept splits, their fixed mask and their counts. */
+  def refine[C](splits: Array[Double], fixed: Option[Array[Boolean]])
+               (counts: Array[Double] => C)(remove: C => Array[Boolean])
+      : (Array[Double], Option[Array[Boolean]], C) = {
+    var kept = splits
+    var keptFixed = fixed
+    var c = counts(kept)
+    def flagged: Array[Boolean] =
+      if (kept.isEmpty) Array.empty else remove(c)
+    var maskRemove = flagged
+    while (maskRemove.exists(identity)) {
+      val nB = maskRemove.length
+      val maskSplits = maskRemove.take(nB - 2) :+
+        (maskRemove(nB - 2) || maskRemove(nB - 1))
+      def keep[T: scala.reflect.ClassTag](xs: Array[T]): Array[T] =
+        xs.zip(maskSplits).collect { case (x, false) => x }
+      if (keptFixed.exists(_.zip(maskSplits).exists { case (f, m) => f && m }))
+        throw new IllegalArgumentException(
+          "Fixed user_splits are removed because they produce pure prebins.")
+      keptFixed = keptFixed.map(keep(_))
+      kept = keep(kept)
+      c = counts(kept)
+      maskRemove = flagged
+    }
+    (kept, keptFixed, c)
+  }
+
   /** Equal-frequency candidate splits with numpy-style linear interpolation
     * over the expanded sorted sample. Exact when the histogram is exact.
     */

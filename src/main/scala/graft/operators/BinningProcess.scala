@@ -11,10 +11,11 @@ import graft.core.Prebinning
 /** Multi-variable binning process
   * (`optbinning/binning/binning_process.py:438`), Spark-native
   * two-pass data plane per SURVEY §3.2. It is the one data plane of
-  * every binary fit and of every continuous numeric fit: a
-  * single-variable `OptimalBinning.fit` or
-  * `ContinuousOptimalBinning.fit` runs as a one-variable batch, so a
-  * `BinningConfig` parameter means the same thing in both entry points.
+  * every 1-D fit: a single-variable `OptimalBinning.fit` or
+  * `ContinuousOptimalBinning.fit` runs as a one-variable batch, and the
+  * multiclass, scenario, MDLP and piecewise fits read [[aggregate]] with
+  * their own aggregate columns, so a `BinningConfig` parameter means the
+  * same thing in every entry point.
   *
   *  - Row preparation ([[Rows]]): each variable's class column carries
   *    its special codes and its row filters (outlier detector,
@@ -26,8 +27,8 @@ import graft.core.Prebinning
   *    per partition — chunked into <= ~256-expression aggregates that
   *    run as CONCURRENT driver actions, so each generated method stays
   *    under HotSpot's JIT ceiling at any batch width and each chunk's
-  *    scan prunes to its own columns. Continuous: one melted
-  *    `groupBy(var, cls)`.
+  *    scan prunes to its own columns. Every other numeric fit:
+  *    [[aggregate]]'s melted `groupBy(var, cls)`.
   *  - Pass B (value histograms) melts all variables to long format via
   *    [[chunkedMelt]] (a union of small stack() generators, same JIT
   *    reasoning) and aggregates in ONE shuffle (`groupBy(variable,
@@ -38,7 +39,7 @@ import graft.core.Prebinning
   *    grids first (`Histograms.gridSnap`).
   *  - Batches whose every variable has user splits skip Pass A: one
   *    aggregate keyed by in-bin representative gives totals and
-  *    histograms at once ([[pinnedAggregate]]).
+  *    histograms at once ([[aggregate]]).
   *
   * The per-variable solve loop runs on the driver over the collected
   * aggregates in parallel (replaces the reference's joblib threading).
@@ -192,7 +193,8 @@ object BinningProcess {
   private final class Rows(df: DataFrame,
                            vs: Seq[(String, BinningConfig)],
                            yCol: String, weightCol: Option[String],
-                           isNumeric: Boolean) {
+                           isNumeric: Boolean,
+                           fittedCls: Option[IndexedSeq[Column]] = None) {
     val vars: IndexedSeq[(String, BinningConfig)] = vs.toIndexedSeq
     private val y = col(yCol).cast(DoubleType)
     private val w =
@@ -209,17 +211,30 @@ object BinningProcess {
       Preprocess.missingClassIndex(cfg(i).specialCodes) + 1
     def x(i: Int): Column =
       col(name(i)).cast(if (isNumeric) DoubleType else StringType)
-    /** User splits of each variable, sorted; None when it has none. */
+    /** User splits of each variable, sorted and rounded to its
+      * `splitDigits` as the driver's candidates are, so every in-bin
+      * representative re-digitizes into its own bin; None when it has
+      * none. */
     val pinned: IndexedSeq[Option[Array[Double]]] =
-      vars.map(_._2.userSplits.filter(_.nonEmpty).map(_.sorted))
+      vars.map { case (_, c) =>
+        c.userSplits.filter(_.nonEmpty)
+          .map(us => Prebinning.roundSplits(us.sorted, c.splitDigits))
+      }
 
-    val cls: IndexedSeq[Column] = vars.indices.map { i =>
+    val cls: IndexedSeq[Column] = fittedCls.getOrElse(vars.indices.map { i =>
       val base = Preprocess.rowClass(x(i), isNumeric, cfg(i).specialCodes)
       val keep = if (isNumeric) rowFilters(i, base) else Nil
       if (keep.isEmpty) base
       else when(keep.reduce(_ && _), base)
         .otherwise(lit(Preprocess.FilteredClass))
-    }
+    })
+
+    /** The same rows with every user split dropped, so value
+      * histograms run over the actual values; the row classes, and so
+      * the fitted outlier detectors, are shared. */
+    def unpinned: Rows =
+      new Rows(df, vars.map { case (v, c) => v -> c.copy(userSplits = None) },
+               yCol, weightCol, isNumeric, Some(cls))
 
     val weight: IndexedSeq[Column] = vars.indices.map { i =>
       cfg(i).classWeight.fold(col("__w"))(_.foldLeft(col("__w")) {
@@ -310,36 +325,117 @@ object BinningProcess {
     }
   }
 
-  /** All-pinned fast path, shared by both targets: one
-    * `groupBy(var, cls, rep)` aggregate of `aggs` feeds BOTH the
-    * per-(var, cls) totals (margins over rep) and the exact per-prebin
-    * histogram (clean rows keyed by the in-bin representative).
-    * Non-clean rows collapse to a null rep, so the shuffle key space
-    * stays `vars x (splits + row classes)` — bounded by config, not
-    * data — and each non-clean class aggregates in ONE row. Rows:
-    * 0 var, 1 cls, 2 rep, then `aggs`; grouped by variable index,
-    * filtered rows dropped. */
-  private def pinnedAggregate(r: Rows, aggs: Seq[Column])
-      : Map[Int, Array[Row]] = {
-    val rep = when(col("cls") === Preprocess.CleanClass, col("x"))
-      .otherwise(lit(null).cast(DoubleType))
-    r.byVar(r.melt(r.rep(Map.empty))
-      .select(col("var"), col("cls"), rep.as("rep"), col("y"), col("w"))
-      .groupBy("var", "cls", "rep")
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .filter(_.getInt(1) != Preprocess.FilteredClass))
+  /** One variable's slice of [[aggregate]]: the rows of each row class
+    * (one row, or one per in-bin representative when pinned) and the
+    * clean-row value histogram sorted by value. Every row holds only the
+    * aggregate columns, in the order they were given. */
+  private[graft] final case class VarAggregate(
+      classes: Map[Int, Array[Row]], hist: Array[(Double, Row)])
+
+  /** Numeric variable `xCol` of `df` prepared once under `config`: the
+    * binary or continuous fit and the clean value histogram (user
+    * splits dropped) of the piecewise fits read the same rows, so an
+    * outlier detector is fitted once. */
+  private[graft] final class Prepared(df: DataFrame, xCol: String,
+                                      yCol: String, config: BinningConfig) {
+    private lazy val r = new Rows(df, Seq(xCol -> config), yCol, None,
+                                  isNumeric = true)
+    def binary: FittedOptimalBinning = fitNumericBatch(r)(xCol)
+    def continuous: FittedContinuousBinning = fitContinuousBatch(r)(xCol)
+    def valueHistogram(aggs: Seq[Column]): Array[(Double, Row)] =
+      aggregate(r.unpinned, aggs)(0).hist
   }
 
+  /** The numeric histogram plane of every 1-D fit: [[aggregate]] of
+    * variable `xCol` of `df` under `config` (its special codes, row
+    * filters, class weights, grid budget and user splits). */
+  private[graft] def aggregate(df: DataFrame, xCol: String, yCol: String,
+                               config: BinningConfig,
+                               aggs: Seq[Column]): VarAggregate =
+    aggregate(new Rows(df, Seq(xCol -> config), yCol, None,
+                       isNumeric = true), aggs)(0)
+
+  /** The one melted aggregate of a numeric batch over caller-given
+    * aggregate columns of the melted (x, cls, y, w). Pass A is
+    * `groupBy(var, cls)`: every class's row, plus the clean ndv/min/max
+    * that snaps each variable with more distinct values than its
+    * `histogramMaxBuckets` onto its uniform grid (`Histograms.gridSnap`);
+    * Pass B ([[histogramRows]]) gives the value histograms. A batch
+    * whose every variable has user splits runs one
+    * `groupBy(var, cls, rep)` instead: it feeds BOTH the class rows
+    * (one per representative) and the exact per-prebin histogram
+    * (clean rows keyed by their in-bin representative). Its non-clean
+    * rows collapse to a null rep, so the shuffle key space stays
+    * `vars x (splits + row classes)` — bounded by config, not data.
+    * Indexed by variable; a variable without rows is empty. */
+  private def aggregate(r: Rows, aggs: Seq[Column])
+      : IndexedSeq[VarAggregate] = {
+    val k = aggs.length
+    val (classRows, hist) =
+      if (allPinned(r)) {
+        // rows: 0 var, 1 cls, 2 rep, then aggs
+        val rep = when(col("cls") === Preprocess.CleanClass, col("x"))
+          .otherwise(lit(null).cast(DoubleType))
+        val byVar = r.byVar(r.melt(r.rep(Map.empty))
+          .select(col("var"), col("cls"), rep.as("rep"), col("y"), col("w"))
+          .groupBy("var", "cls", "rep")
+          .agg(aggs.head, aggs.tail: _*)
+          .collect()
+          .filter(_.getInt(1) != Preprocess.FilteredClass))
+        (byVar.map { case (i, rs) =>
+           i -> rs.map(row => row.getInt(1) -> slice(row, 3, k)) },
+         byVar.map { case (i, rs) =>
+           i -> rs.filter(_.getInt(1) == Preprocess.CleanClass)
+             .map(row => row.getDouble(2) -> slice(row, 3, k))
+             .sortBy(_._1)
+         })
+      } else {
+        // rows: 0 var, 1 cls, then aggs, ndv, minx, maxx
+        val statsRows = r.melt(r.x)
+          .groupBy("var", "cls")
+          .agg(aggs.head, aggs.tail :+
+            approx_count_distinct(col("x")).as("ndv") :+
+            min(col("x")).as("minx") :+ max(col("x")).as("maxx"): _*)
+          .collect()
+          .filter(_.getInt(1) != Preprocess.FilteredClass)
+        val grid = statsRows.filter(_.getInt(1) == Preprocess.CleanClass)
+          .flatMap { row =>
+            val i = r.index(row.getString(0))
+            if (row.getLong(2 + k) > r.cfg(i).histogramMaxBuckets &&
+                r.pinned(i).isEmpty && !row.isNullAt(3 + k))
+              Some(i -> ((row.getDouble(3 + k), row.getDouble(4 + k))))
+            else None
+          }.toMap
+        (r.byVar(statsRows).map { case (i, rs) =>
+           i -> rs.map(row => row.getInt(1) -> slice(row, 2, k)) },
+         histogramRows(r, grid, aggs))
+      }
+    r.vars.indices.map { i =>
+      VarAggregate(
+        classRows.getOrElse(i, Array.empty[(Int, Row)]).groupBy(_._1)
+          .map { case (c, rs) => c -> rs.map(_._2) },
+        hist.getOrElse(i, Array.empty[(Double, Row)]))
+    }
+  }
+
+  /** Columns `from until from + k` of `row`. */
+  private def slice(row: Row, from: Int, k: Int): Row =
+    Row.fromSeq(row.toSeq.slice(from, from + k))
+
   /** Pass B: the clean-row histogram shuffle for every variable at
-    * once, rows grouped by variable index (0 var, 1 x, then `aggs`). */
+    * once, as (value, `aggs` row) per variable index, sorted by value. */
   private def histogramRows(r: Rows, grid: Map[Int, (Double, Double)],
-                            aggs: Seq[Column]): Map[Int, Array[Row]] =
+                            aggs: Seq[Column])
+      : Map[Int, Array[(Double, Row)]] =
     r.byVar(r.melt(r.rep(grid))
       .where(col("cls") === Preprocess.CleanClass)
       .groupBy("var", "x")
       .agg(aggs.head, aggs.tail: _*)
       .collect())
+      .map { case (i, rs) =>
+        i -> rs.map(row => row.getDouble(1) -> slice(row, 2, aggs.length))
+          .sortBy(_._1)
+      }
 
   private def allPinned(r: Rows): Boolean =
     r.pinned.forall(_.isDefined)
@@ -352,43 +448,40 @@ object BinningProcess {
     sum(when(col("y") =!= 0.0, col("w")).otherwise(0.0)).as("w1")
   private val wtAgg = sum(col("w")).as("wt")
 
+  /** Binary histogram columns (n, w0, w1) and their buckets. */
+  private[graft] val binaryAggs: Seq[Column] = Seq(nAgg, w0Agg, w1Agg)
+  private[graft] def binaryHist(hist: Array[(Double, Row)])
+      : Array[Prebinning.HistBucket] =
+    hist.map { case (v, row) =>
+      Prebinning.HistBucket(v, row.getLong(0), row.getDouble(1),
+                            row.getDouble(2))
+    }
+
   private def fitNumericBatch(r: Rows): Map[String, FittedOptimalBinning] = {
     val (totalsByVar, histByVar) =
       if (allPinned(r)) {
         // one scan + one bounded shuffle replaces the two of the
-        // general path. Rows: 0 var, 1 cls, 2 rep, 3 w0, 4 w1, 5 n, 6 wt
-        val byVar = pinnedAggregate(r, Seq(w0Agg, w1Agg, nAgg, wtAgg))
-        val totals = byVar.map { case (i, rs) =>
-          i -> rs.groupBy(_.getInt(1)).map { case (c, cr) =>
-            c -> ClassTotals(cr.map(_.getDouble(3)).sum,
-                             cr.map(_.getDouble(4)).sum,
-                             cr.map(_.getLong(5)).sum,
-                             cr.map(_.getDouble(6)).sum)
-          }
-        }
-        val hist = byVar.map { case (i, rs) =>
-          i -> rs.filter(_.getInt(1) == Preprocess.CleanClass)
-            .map(row => Prebinning.HistBucket(row.getDouble(2),
-              row.getLong(5), row.getDouble(3), row.getDouble(4)))
-        }
-        (totals, hist)
+        // general path
+        val byVar = aggregate(r, binaryAggs :+ wtAgg)
+        (byVar.map(_.classes.map { case (c, rs) =>
+           c -> ClassTotals(rs.map(_.getDouble(1)).sum,
+                            rs.map(_.getDouble(2)).sum,
+                            rs.map(_.getLong(0)).sum,
+                            rs.map(_.getDouble(3)).sum)
+         }),
+         byVar.map(a => binaryHist(a.hist)))
       } else {
         val (totals, grid) = binaryPassA(r)
-        // Pass B rows: 0 var, 1 x, 2 n, 3 w0, 4 w1
-        val hist = histogramRows(r, grid, Seq(nAgg, w0Agg, w1Agg))
-          .map { case (i, rs) =>
-            i -> rs.map(row => Prebinning.HistBucket(row.getDouble(1),
-              row.getLong(2), row.getDouble(3), row.getDouble(4)))
-          }
-        (totals, hist)
+        val hist = histogramRows(r, grid, binaryAggs)
+        (r.vars.indices.map(totals.getOrElse(_, Map.empty[Int, ClassTotals])),
+         r.vars.indices.map(i =>
+           binaryHist(hist.getOrElse(i, Array.empty[(Double, Row)]))))
       }
 
     // driver-side parallel solve per variable
     r.vars.indices.par.map { i =>
-      val totals = totalsByVar.getOrElse(i, Map.empty[Int, ClassTotals])
-      r.name(i) -> OptimalBinning.fitFromHistogram(
-        histByVar.getOrElse(i, Array.empty[Prebinning.HistBucket])
-          .sortBy(_.value),
+      val totals = totalsByVar(i)
+      r.name(i) -> OptimalBinning.fitFromHistogram(histByVar(i),
         totals, totals.values.map(_.w).sum, r.cfg(i),
         categories = null, catOthers = null)
     }.toList.toMap
@@ -472,86 +565,38 @@ object BinningProcess {
   }
 
   /** Continuous bucket from the `ContinuousOptimalBinning.aggExprs`
-    * columns starting at `at` (n, w, wy, wy2, ymin, ymax, zeros). */
-  private def contBucket(value: Double, row: Row, at: Int): ContBucket =
-    ContBucket(value, row.getLong(at), row.getDouble(at + 1),
-               row.getDouble(at + 2), row.getDouble(at + 3),
-               row.getDouble(at + 4), row.getDouble(at + 5),
-               row.getLong(at + 6))
+    * columns (n, w, wy, wy2, ymin, ymax, zeros). */
+  private def contBucket(value: Double, row: Row): ContBucket =
+    ContBucket(value, row.getLong(0), row.getDouble(1), row.getDouble(2),
+               row.getDouble(3), row.getDouble(4), row.getDouble(5),
+               row.getLong(6))
+
+  /** Continuous class totals from the class's `aggExprs` rows: one row
+    * carries its exact `stddev_pop`; a pinned clean class (one row per
+    * representative) derives it from the moments — it is not consumed
+    * downstream, data-bin stds come from bucket moments. */
+  private def contTotals(rs: Array[Row]): ContClassTotals = {
+    val w = rs.map(_.getDouble(1)).sum
+    val wy = rs.map(_.getDouble(2)).sum
+    val std =
+      if (rs.length == 1)
+        Option(rs(0).get(7)).map(_.asInstanceOf[Double]).getOrElse(0.0)
+      else if (w > 0) {
+        val wy2 = rs.map(_.getDouble(3)).sum
+        math.sqrt(math.max(wy2 / w - (wy / w) * (wy / w), 0.0))
+      } else 0.0
+    ContClassTotals(w, wy, std, rs.map(_.getDouble(4)).min,
+                    rs.map(_.getDouble(5)).max,
+                    rs.map(_.getLong(6)).sum.toDouble)
+  }
 
   private def fitContinuousBatch(r: Rows)
       : Map[String, FittedContinuousBinning] = {
-    val aggs = ContinuousOptimalBinning.aggExprs
-    val (totalsByVar, histByVar) =
-      if (allPinned(r)) {
-        // rows: 0 var, 1 cls, 2 rep, 3 n, 4 w, 5 wy, 6 wy2, 7 ymin,
-        // 8 ymax, 9 zeros, 10 ystd. Non-clean classes are one row each
-        // (exact stddev_pop); the clean class std is not consumed
-        // downstream — data-bin stds come from bucket moments — and is
-        // derived from the same moment formula here.
-        val byVar = pinnedAggregate(r, aggs)
-        val totals = byVar.map { case (i, rs) =>
-          i -> rs.groupBy(_.getInt(1)).map {
-            case (c, cr) if c == Preprocess.CleanClass =>
-              val w = cr.map(_.getDouble(4)).sum
-              val wy = cr.map(_.getDouble(5)).sum
-              val wy2 = cr.map(_.getDouble(6)).sum
-              val std =
-                if (w > 0)
-                  math.sqrt(math.max(wy2 / w - (wy / w) * (wy / w), 0.0))
-                else 0.0
-              c -> ContClassTotals(w, wy, std, cr.map(_.getDouble(7)).min,
-                                   cr.map(_.getDouble(8)).max,
-                                   cr.map(_.getLong(9)).sum.toDouble)
-            case (c, cr) =>
-              val row = cr.head
-              c -> ContClassTotals(row.getDouble(4), row.getDouble(5),
-                Option(row.get(10)).map(_.asInstanceOf[Double])
-                  .getOrElse(0.0),
-                row.getDouble(7), row.getDouble(8), row.getLong(9).toDouble)
-          }
-        }
-        val hist = byVar.map { case (i, rs) =>
-          i -> rs.filter(_.getInt(1) == Preprocess.CleanClass)
-            .map(row => contBucket(row.getDouble(2), row, 3))
-        }
-        (totals, hist)
-      } else {
-        // Pass A rows: 0 var, 1 cls, 2 n, 3 w, 4 wy, 5 wy2, 6 ymin,
-        // 7 ymax, 8 zeros, 9 ystd, 10 ndv, 11 minx, 12 maxx
-        val statsRows = r.melt(r.x)
-          .groupBy("var", "cls")
-          .agg(aggs.head, aggs.tail :+
-            approx_count_distinct(col("x")).as("ndv") :+
-            min(col("x")).as("minx") :+ max(col("x")).as("maxx"): _*)
-          .collect()
-          .filter(_.getInt(1) != Preprocess.FilteredClass)
-        val totals = r.byVar(statsRows).map { case (i, rs) =>
-          i -> rs.map { row =>
-            row.getInt(1) -> ContClassTotals(row.getDouble(3),
-              row.getDouble(4),
-              Option(row.get(9)).map(_.asInstanceOf[Double]).getOrElse(0.0),
-              row.getDouble(6), row.getDouble(7), row.getLong(8).toDouble)
-          }.toMap
-        }
-        val grid = statsRows.filter(_.getInt(1) == Preprocess.CleanClass)
-          .flatMap { row =>
-            val i = r.index(row.getString(0))
-            if (row.getLong(10) > r.cfg(i).histogramMaxBuckets &&
-                r.pinned(i).isEmpty && !row.isNullAt(11))
-              Some(i -> ((row.getDouble(11), row.getDouble(12))))
-            else None
-          }.toMap
-        val hist = histogramRows(r, grid, aggs).map { case (i, rs) =>
-          i -> rs.map(row => contBucket(row.getDouble(1), row, 2))
-        }
-        (totals, hist)
-      }
-
+    val byVar = aggregate(r, ContinuousOptimalBinning.aggExprs)
     r.vars.indices.par.map { i =>
-      val totals = totalsByVar.getOrElse(i, Map.empty[Int, ContClassTotals])
+      val totals = byVar(i).classes.map { case (c, rs) => c -> contTotals(rs) }
       r.name(i) -> ContinuousOptimalBinning.fitFromHistogram(
-        histByVar.getOrElse(i, Array.empty[ContBucket]).sortBy(_.value),
+        byVar(i).hist.map { case (v, row) => contBucket(v, row) },
         totals, totals.values.map(_.n).sum, r.cfg(i),
         categories = null, catOthers = null)
     }.toList.toMap

@@ -37,12 +37,19 @@ object ContinuousOptimalBinning {
   def fit(df: DataFrame, xCol: String, yCol: String,
           config: BinningConfig = BinningConfig(),
           weightCol: Option[String] = None): FittedContinuousBinning = {
-    val t0 = System.nanoTime()
-    val fitted =
+    withDataPass(
       if (config.dtype == "numerical")
         BinningProcess.fitContinuousVars(df, Seq(xCol -> config), yCol,
                                          weightCol)(xCol)
-      else fitCategorical(df, xCol, yCol, config, weightCol)
+      else fitCategorical(df, xCol, yCol, config, weightCol))
+  }
+
+  /** `fit` timed: its driver-side phases come timed, so the Spark
+    * aggregate passes are the rest of the total. */
+  private[graft] def withDataPass(fit: => FittedContinuousBinning)
+      : FittedContinuousBinning = {
+    val t0 = System.nanoTime()
+    val fitted = fit
     val total = (System.nanoTime() - t0) / 1e9
     val accounted = fitted.timings.values.sum
     fitted.timings ++= Map(
@@ -177,50 +184,16 @@ object ContinuousOptimalBinning {
     val cartHist = hist.map(h =>
       Prebinning.HistBucket(h.value, h.n, h.w, 0.0, h.wy, h.wy2))
 
-    val rawSplits: Array[Double] = config.userSplits match {
-      case Some(us) => us.sorted
-      case None =>
-        val minPrebinCount =
-          math.ceil(config.minPrebinSize * nSamplesWeighted).toLong
-        config.prebinningMethod match {
-          case "cart" =>
-            Prebinning.cartSplits(cartHist, config.maxNPrebins,
-                                  minPrebinCount, classification = false)
-          case "quantile" =>
-            Prebinning.quantileSplits(cartHist, config.maxNPrebins)
-          case "uniform" =>
-            if (hist.isEmpty) Array.empty[Double]
-            else Prebinning.uniformSplits(hist.head.value, hist.last.value,
-                                          config.maxNPrebins)
-          case other => throw new IllegalArgumentException(
-            s"prebinning method $other not supported for continuous target")
-        }
-    }
-    val splitsRounded = config.splitDigits match {
-      case Some(d) => rawSplits.map(s =>
-        BigDecimal(s).setScale(d, BigDecimal.RoundingMode.HALF_EVEN).toDouble)
-      case None => rawSplits
-    }
-
-    // prebin stats + empty-prebin refinement
-    // (`continuous_binning.py:919-977`: only empty prebins removed)
-    var splits = splitsRounded
-    var stats = prebinStats(hist, splits)
-    var refining = splits.nonEmpty
-    while (refining) {
-      val maskRemove = stats.map(_._1 == 0.0)
-      if (!maskRemove.exists(identity)) refining = false
-      else {
-        val nB = maskRemove.length
-        val maskSplits =
-          if (nB < 2) maskRemove.take(splits.length)
-          else maskRemove.take(nB - 2) :+
-            (maskRemove(nB - 2) || maskRemove(nB - 1))
-        splits = splits.zip(maskSplits).collect { case (s, false) => s }
-        stats = prebinStats(hist, splits)
-        refining = splits.nonEmpty && stats.exists(_._1 == 0.0)
-      }
-    }
+    // continuous refinement drops only empty prebins
+    // (`continuous_binning.py:919-977`)
+    val (splits, fixed, stats) = Prebinning.refine(
+      Prebinning.candidateSplits(cartHist, config.userSplits,
+        config.prebinningMethod, config.maxNPrebins,
+        math.ceil(config.minPrebinSize * nSamplesWeighted).toLong,
+        config.splitDigits, mdlp = false)(
+        Prebinning.cartSplits(cartHist, config.maxNPrebins, _,
+                              classification = false)),
+      config.userSplitsFixed)(prebinStats(hist, _))(_.map(_._1 == 0.0))
 
     val nRecords = stats.map(_._1)
     val sums = stats.map(_._2)
@@ -248,7 +221,7 @@ object ContinuousOptimalBinning {
             math.ceil(f * nSamplesWeighted).toLong),
           maxBinSize = config.maxBinSize.map(f =>
             math.ceil(f * nSamplesWeighted).toLong),
-          userSplitsFixed = config.userSplitsFixed,
+          userSplitsFixed = fixed,
           gammaReg = OptimalBinning.gammaRegOf(
             config.gamma, math.round(nRecords.sum)),
           timeLimitMs = config.timeLimitMs)

@@ -44,14 +44,6 @@ object Histograms {
     if (width > 0 && java.lang.Double.isFinite(width)) Some(width) else None
   }
 
-  /** Replace column `xCol` with its [[gridSnap]] representative. No
-    * Spark job is launched here; the caller feeds min/max from its
-    * pass-1 stats aggregate.
-    */
-  def gridCompress(df: DataFrame, xCol: String, minX: Double, maxX: Double,
-                   maxBuckets: Int): DataFrame =
-    df.withColumn(xCol, gridSnap(col(xCol), minX, maxX, maxBuckets))
-
   /** EXACT per-group lower median — the discrete quantile Spark's
     * built-ins don't give you at scale (`percentile` interpolates,
     * `percentile_approx` is approximate): the k-th smallest VALUE of
@@ -66,7 +58,7 @@ object Histograms {
     * k. A group's window partition is bounded by its DISTINCT values —
     * for real-world measure columns (prices, quantities, scores) that
     * is orders of magnitude below its row count; for truly continuous
-    * unbounded columns, quantize upstream ([[gridCompress]]) or accept
+    * unbounded columns, quantize upstream ([[gridSnap]]) or accept
     * a sketch (`percentile_approx`). Null values are excluded (SQL
     * aggregate semantics); all-null/empty groups emit no row.
     *
@@ -107,7 +99,7 @@ object Histograms {
     * — a near-unique numeric column makes that one task sorting the
     * group's full distinct-value set (the 100 TB killer). This one
     * collapses the histogram onto an adaptive 4096-cell uniform grid
-    * per group first (same trick as [[gridCompress]]): the crossing
+    * per group first (same trick as [[gridSnap]]): the crossing
     * CELL is found on a window over ≤4096 bucket rows per group, and
     * only the single target cell's values see the second window — so
     * no sort ever exceeds max(4096, one cell's occupancy) rows per

@@ -1,44 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.DataFrame
 
 import graft.core.Prebinning
 
 /** Standalone MDLP discretizer facade (`optbinning/binning/mdlp.py:34`):
   * entropy-minimizing recursive binary splits with the MDL stopping
-  * criterion against a binary target. One value-histogram aggregate
-  * (grid-compressed beyond the bucket budget), then the driver-side
-  * recursion — the same engine `prebinningMethod = "mdlp"` uses inside
-  * the optimal-binning fits.
+  * criterion against a binary target. Data plane: the binary value
+  * histogram of the one histogram plane (`BinningProcess.aggregate`,
+  * gridded beyond `histogramMaxBuckets` distinct values), then the
+  * driver-side recursion — the same histogram and engine
+  * `prebinningMethod = "mdlp"` uses inside the optimal-binning fits.
   */
 object MDLP {
 
   def fit(df: DataFrame, xCol: String, yCol: String,
           minSamplesSplit: Long = 2, minSamplesLeaf: Long = 2,
           maxCandidates: Int = 32,
-          histogramMaxBuckets: Int = 10000): Array[Double] = {
-    val x = col(xCol).cast(DoubleType)
-    val y = col(yCol).cast(DoubleType)
-    val clean = df.where(!x.isNull && !isnan(x))
-      .select(x.as("x"), y.as("y"))
-    val stats = clean.agg(approx_count_distinct(col("x")).as("ndv"),
-                          min(col("x")).as("mn"),
-                          max(col("x")).as("mx")).head
-    val keyed =
-      if (stats.getLong(0) <= histogramMaxBuckets) clean
-      else Histograms.gridCompress(clean, "x", stats.getDouble(1),
-                                   stats.getDouble(2), histogramMaxBuckets)
-    val hist = keyed.groupBy("x")
-      .agg(sum(when(col("y") === 0.0, 1.0).otherwise(0.0)).as("y0"),
-           sum(when(col("y") =!= 0.0, 1.0).otherwise(0.0)).as("y1"),
-           count(lit(1)).as("n"))
-      .collect()
-      .map(r => Prebinning.HistBucket(r.getDouble(0), r.getLong(3),
-                                      r.getDouble(1), r.getDouble(2)))
-      .sortBy(_.value)
-    Prebinning.mdlpSplits(hist, minSamplesSplit, minSamplesLeaf,
-                          maxCandidates)
-  }
+          histogramMaxBuckets: Int = 10000): Array[Double] =
+    Prebinning.mdlpSplits(
+      BinningProcess.binaryHist(BinningProcess.aggregate(df, xCol, yCol,
+        BinningConfig(histogramMaxBuckets = histogramMaxBuckets),
+        BinningProcess.binaryAggs).hist),
+      minSamplesSplit, minSamplesLeaf, maxCandidates)
 }

@@ -19,15 +19,15 @@ object ModelMetrics {
   private val MaxScoreValues = 2000000
 
   /** Snap scores onto a bounded uniform grid (one min/max pass +
-    * Histograms.gridCompress) so the per-score aggregate — and the
+    * `Histograms.gridSnap`) so the per-score aggregate — and the
     * driver collect — stay O(grid) at any data scale. Rank-formula
     * AUC/KS on the quantized distribution is the standard histogram
     * approximation; error is bounded by the grid width. */
   private def quantizeScores(df: DataFrame, s: String): DataFrame = {
     val st = df.agg(min(col(s)), max(col(s))).head
     if (st.isNullAt(0)) df
-    else Histograms.gridCompress(df, s, st.getDouble(0), st.getDouble(1),
-                                 100000)
+    else df.withColumn(s, Histograms.gridSnap(col(s), st.getDouble(0),
+                                              st.getDouble(1), 100000))
   }
 
   private def boundedScoreAgg(df: DataFrame): Array[org.apache.spark.sql.Row] = {
@@ -45,8 +45,8 @@ object ModelMetrics {
     * materialization), KS = the largest gap of the class-conditional
     * score CDFs (`classification.py:34-67`). A one-class input has
     * neither: both read 0, not NaN. */
-  private[operators] def giniKs(events: Array[Double],
-                                nonEvents: Array[Double]): (Double, Double) = {
+  private[graft] def giniKs(events: Array[Double],
+                            nonEvents: Array[Double]): (Double, Double) = {
     val te = events.sum; val tne = nonEvents.sum
     if (te == 0 || tne == 0) return (0.0, 0.0)
     var cumE = 0.0; var cumNe = 0.0; var auc = 0.0; var best = 0.0

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -10,8 +10,11 @@ import graft.core._
   * (`optbinning/binning/multiclass_binning.py:186`): one-vs-rest event
   * counts per class share one bin structure; objective is the summed
   * per-class IV with an independent monotonicity constraint per class.
-  * Data plane: one groupBy(x) with per-class pivoted counts (single
-  * shuffle); solver: `Solver.solveMulti`.
+  * Data plane: one bounded `distinct` discovers the classes, then the
+  * shared histogram plane (`BinningProcess.aggregate`) carries per-class
+  * counts, so special codes, row filters and the grid mean what they
+  * mean in the binary fit. Prebinning and refinement: the shared
+  * `Prebinning` kernel; solver: `Solver.solveMulti`.
   */
 object MulticlassOptimalBinning {
 
@@ -23,22 +26,17 @@ object MulticlassOptimalBinning {
     */
   def fit(df: DataFrame, xCol: String, yCol: String,
           config: BinningConfig = BinningConfig(),
-          weightCol: Option[String] = None,
           trendPerClass: Option[Seq[Option[String]]] = None)
       : FittedMulticlassBinning = {
     val tFit0 = System.nanoTime()
-    val x = col(xCol).cast(DoubleType)
-    val y = col(yCol).cast(DoubleType)
-    val cls = Preprocess.rowClass(x, isNumeric = true, config.specialCodes)
-    val base = df.select(x.as("x"), y.as("y"), cls.as("cls"))
 
     // classes discovered from data (sorted, like np.unique); the limit
     // probe keeps the collect bounded when a continuous column is passed
     // as y by mistake (one-vs-rest binning is only meaningful for a
     // small label set)
     val maxClasses = 100
-    val classRows = base.select("y").distinct().limit(maxClasses + 1)
-      .collect()
+    val classRows = df.select(col(yCol).cast(DoubleType)).distinct()
+      .limit(maxClasses + 1).collect()
     require(classRows.length <= maxClasses,
             s"multiclass target has > $maxClasses distinct labels — " +
             "is y a continuous column?")
@@ -46,65 +44,18 @@ object MulticlassOptimalBinning {
     val k = classes.length
     require(k >= 2, "multiclass target needs >= 2 classes")
 
-    val classCountExprs = classes.zipWithIndex.map { case (c, i) =>
-      sum(when(col("y") === c, 1L).otherwise(0L)).as(s"c$i")
-    }
-
-    val statsRows = base.groupBy("cls")
-      .agg(classCountExprs.head, classCountExprs.tail :+
-        count(lit(1)).as("n") :+
-        approx_count_distinct(col("x")).as("ndv") :+
-        min(col("x")).as("minx") :+
-        max(col("x")).as("maxx"): _*)
-      .collect()
-    def classCounts(r: org.apache.spark.sql.Row): Array[Double] =
-      (0 until k).map(i => r.getLong(1 + i).toDouble).toArray
-    val totalsByCls = statsRows.map(r => r.getInt(0) ->
-      (classCounts(r), r.getLong(1 + k))).toMap
-    val nSamples = statsRows.map(_.getLong(1 + k)).sum
-
-    val cleanRow = statsRows.find(_.getInt(0) == Preprocess.CleanClass)
+    // per-class counts, then the row count
+    val agg = BinningProcess.aggregate(df, xCol, yCol, config,
+      classes.zipWithIndex.map { case (c, i) =>
+        sum(when(col("y") === c, 1L).otherwise(0L)).as(s"c$i")
+      }.toSeq :+ count(lit(1)).as("n"))
+    def classCounts(rs: Array[Row]): Array[Double] =
+      Array.tabulate(k)(c => rs.map(_.getLong(c)).sum.toDouble)
+    val totalsByCls = agg.classes.map { case (c, rs) => c -> classCounts(rs) }
+    val nSamples = agg.classes.values.map(_.map(_.getLong(k)).sum).sum
     // value histogram with per-class counts
-    val hist: Array[(Double, Long, Array[Double])] = cleanRow match {
-      case None => Array.empty
-      case Some(r) =>
-        val baseClean = base.where(col("cls") === Preprocess.CleanClass)
-        val ndv = r.getLong(2 + k)
-        val keyed =
-          if (ndv <= config.histogramMaxBuckets) baseClean
-          else Histograms.gridCompress(baseClean, "x", r.getDouble(3 + k),
-                                       r.getDouble(4 + k),
-                                       config.histogramMaxBuckets)
-        keyed.groupBy("x")
-          .agg(classCountExprs.head,
-               classCountExprs.tail :+ count(lit(1)).as("n"): _*)
-          .collect()
-          .map(r2 => (r2.getDouble(0), r2.getLong(1 + k), classCounts(r2)))
-          .sortBy(_._1)
-    }
-
-    // candidate splits: k-class CART / quantile / uniform
-    val rawSplits: Array[Double] = config.userSplits match {
-      case Some(us) => us.sorted
-      case None =>
-        val minPrebinCount =
-          math.ceil(config.minPrebinSize * nSamples).toLong
-        config.prebinningMethod match {
-          case "cart" =>
-            Prebinning.cartSplitsK(hist.map(_._1), hist.map(_._3),
-                                   hist.map(_._2), config.maxNPrebins,
-                                   minPrebinCount)
-          case "quantile" =>
-            Prebinning.quantileSplits(
-              hist.map(h => Prebinning.HistBucket(h._1, h._2, 0, 0)),
-              config.maxNPrebins)
-          case "uniform" =>
-            if (hist.isEmpty) Array.empty[Double]
-            else Prebinning.uniformSplits(hist.head._1, hist.last._1,
-                                          config.maxNPrebins)
-          case other => throw new IllegalArgumentException(
-            s"prebinning method $other unsupported for multiclass")
-        }
+    val hist: Array[(Double, Long, Array[Double])] = agg.hist.map {
+      case (v, row) => (v, row.getLong(k), classCounts(Array(row)))
     }
 
     // prebin counts + refinement: any class pure in a bin -> drop split
@@ -122,32 +73,20 @@ object MulticlassOptimalBinning {
       }
       (ev, nRows)
     }
-
-    var splits = config.splitDigits match {
-      case Some(d) => rawSplits.map(s =>
-        BigDecimal(s).setScale(d, BigDecimal.RoundingMode.HALF_EVEN).toDouble)
-      case None => rawSplits
-    }
-    var (nEvent, nRows) = prebinCounts(splits)
-    var refining = splits.nonEmpty
-    while (refining) {
-      val totals = nEvent.map(_.sum)
-      val maskRemove = nEvent.zip(totals).map { case (row, t) =>
-        row.exists(c => c == 0.0 || t - c == 0.0)
+    val (splits, fixed, (nEvent, nRows)) = Prebinning.refine(
+      Prebinning.candidateSplits(
+        hist.map(h => Prebinning.HistBucket(h._1, h._2, 0, 0)),
+        config.userSplits, config.prebinningMethod, config.maxNPrebins,
+        math.ceil(config.minPrebinSize * nSamples).toLong,
+        config.splitDigits, mdlp = false)(
+        Prebinning.cartSplitsK(hist.map(_._1), hist.map(_._3),
+                               hist.map(_._2), config.maxNPrebins, _)),
+      config.userSplitsFixed)(prebinCounts) { case (ev, _) =>
+        ev.map { row =>
+          val t = row.sum
+          row.exists(c => c == 0.0 || t - c == 0.0)
+        }
       }
-      if (!maskRemove.exists(identity)) refining = false
-      else {
-        val nB = maskRemove.length
-        val maskSplits =
-          if (nB < 2) maskRemove.take(splits.length)
-          else maskRemove.take(nB - 2) :+
-            (maskRemove(nB - 2) || maskRemove(nB - 1))
-        splits = splits.zip(maskSplits).collect { case (s, false) => s }
-        val c2 = prebinCounts(splits)
-        nEvent = c2._1; nRows = c2._2
-        refining = splits.nonEmpty
-      }
-    }
 
     val n = nEvent.length
     val nNonevent = nEvent.map { row =>
@@ -199,7 +138,7 @@ object MulticlassOptimalBinning {
             math.ceil(f * nSamples).toLong),
           maxBinSize = config.maxBinSize.map(f =>
             math.ceil(f * nSamples).toLong),
-          userSplitsFixed = config.userSplitsFixed,
+          userSplitsFixed = fixed,
           timeLimitMs = config.timeLimitMs)
         val r = Solver.solveMulti(n, mds.map(_.d), mds.map(_.v),
                                   nRows, trends, trendChanges, cons, adjV)
@@ -234,11 +173,10 @@ object MulticlassOptimalBinning {
     }
     val specialEv = (1 to nSpecialBins).map { g =>
       if (config.specialCodes.isDefined)
-        totalsByCls.get(g).map(_._1).getOrElse(Array.fill(k)(0.0))
+        totalsByCls.getOrElse(g, Array.fill(k)(0.0))
       else Array.fill(k)(0.0)
     }
-    val missEv = totalsByCls.get(missingIdx).map(_._1)
-      .getOrElse(Array.fill(k)(0.0))
+    val missEv = totalsByCls.getOrElse(missingIdx, Array.fill(k)(0.0))
     val allEv = (mergedEv.toSeq ++ specialEv :+ missEv).toArray
 
     val edges = Double.NegativeInfinity +: splitsOptimal :+

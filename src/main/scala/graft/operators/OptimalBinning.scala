@@ -79,9 +79,16 @@ object OptimalBinning {
           config: BinningConfig = BinningConfig(),
           weightCol: Option[String] = None): FittedOptimalBinning = {
     require(config.dtype == "numerical" || config.dtype == "categorical")
+    withDataPass(BinningProcess.fitBinary(df, Seq(xCol -> config), yCol,
+                                          weightCol)(xCol))
+  }
+
+  /** `fit` timed: its driver-side phases come timed, so the Spark
+    * aggregate passes are the rest of the total. */
+  private[graft] def withDataPass(fit: => FittedOptimalBinning)
+      : FittedOptimalBinning = {
     val t0 = System.nanoTime()
-    val fitted = BinningProcess.fitBinary(df, Seq(xCol -> config), yCol,
-                                          weightCol)(xCol)
+    val fitted = fit
     val total = (System.nanoTime() - t0) / 1e9
     val accounted = fitted.timings.values.sum
     fitted.timings ++= Map(
@@ -243,43 +250,26 @@ object OptimalBinning {
       categories: Array[String],
       catOthers: Array[String],
       othersTotals: Option[ClassTotals] = None,
-      othersCatchAll: Boolean = false): FittedOptimalBinning = {
-
-    // candidate splits
-    val rawSplits: Array[Double] = config.userSplits match {
-      case Some(us) => us.sorted
-      case None =>
-        val minPrebinCount =
-          math.ceil(config.minPrebinSize * nSamplesWeighted).toLong
-        config.prebinningMethod match {
-          case "cart" =>
-            Prebinning.cartSplits(hist, config.maxNPrebins, minPrebinCount,
-                                  classification = true)
-          case "quantile" =>
-            Prebinning.quantileSplits(hist, config.maxNPrebins)
-          case "uniform" =>
-            if (hist.isEmpty) Array.empty[Double]
-            else Prebinning.uniformSplits(hist.head.value, hist.last.value,
-                                          config.maxNPrebins)
-          case "mdlp" =>
-            Prebinning.mdlpSplits(hist)
-          case other =>
-            throw new IllegalArgumentException(
-              s"prebinning method $other not supported")
-        }
-    }
-    fitFromCounts(rawSplits, s => prebinCounts(hist, s), totals,
-                  nSamplesWeighted, config, categories, catOthers,
-                  othersTotals, othersCatchAll = othersCatchAll)
-  }
+      othersCatchAll: Boolean = false): FittedOptimalBinning =
+    fitFromCounts(
+      Prebinning.candidateSplits(hist, config.userSplits,
+        config.prebinningMethod, config.maxNPrebins,
+        math.ceil(config.minPrebinSize * nSamplesWeighted).toLong,
+        config.splitDigits)(
+        Prebinning.cartSplits(hist, config.maxNPrebins, _,
+                              classification = true)),
+      s => prebinCounts(hist, s), totals, nSamplesWeighted, config,
+      categories, catOthers, othersTotals, othersCatchAll = othersCatchAll)
 
   /** Driver-side phase shared by the histogram fit and the sketch fit:
+    * `split_digits` rounding of `candidates` (idempotent, so candidates
+    * `Prebinning.candidateSplits` already rounded are unchanged) +
     * refinement + solve + table, with a pluggable per-split-set count
     * function (`countFn` recomputes (n_nonevent, n_event) after each
     * refinement drop — histogram re-digitize or sketch `bins()`).
     */
   private[graft] def fitFromCounts(
-      rawSplits: Array[Double],
+      candidates: Array[Double],
       countFn: Array[Double] => (Array[Double], Array[Double]),
       totals: Map[Int, ClassTotals],
       nSamplesWeighted: Double,
@@ -291,51 +281,19 @@ object OptimalBinning {
       othersCatchAll: Boolean = false): FittedOptimalBinning = {
 
     val isCategorical = categories != null || ordinalGroups != null
-    val splitsRounded = config.splitDigits match {
-      case Some(d) =>
-        rawSplits.map(s => BigDecimal(s)
-          .setScale(d, BigDecimal.RoundingMode.HALF_EVEN).toDouble)
-      case None => rawSplits
-    }
-
-    // prebin counts + pure-bin refinement (`binning.py:1085-1145`)
-    var splits = splitsRounded
-    var (nNonevent, nEvent) = countFn(splits)
-    var flagMinNEventNonevent = false
-    var fixed = config.userSplitsFixed
-    var refining = splits.nonEmpty
-    while (refining) {
-      val maskRemove = nNonevent.zip(nEvent).map { case (ne, e) =>
-        ne == 0.0 || e == 0.0
-      }
-      if (!maskRemove.exists(identity)) refining = false
-      else if (config.divergence == "hellinger" ||
-               config.divergence == "triangular") {
-        flagMinNEventNonevent = true
-        refining = false
-      } else {
-        // drop split i for pure bin i; merge the last two bins
-        val nB = maskRemove.length
-        val maskSplits =
-          if (nB < 2) maskRemove.take(splits.length)
-          else maskRemove.take(nB - 2) :+ (maskRemove(nB - 2) || maskRemove(nB - 1))
-        fixed.foreach { f =>
-          val fr = f.zip(maskSplits).exists { case (a, b) => a && b }
-          if (fr) throw new IllegalArgumentException(
-            "Fixed user_splits are removed because they produce pure prebins.")
-        }
-        fixed = fixed.map(_.zip(maskSplits).collect { case (v, false) => v })
-        splits = splits.zip(maskSplits).collect { case (s, false) => s }
-        val counts = countFn(splits)
-        nNonevent = counts._1
-        nEvent = counts._2
-        refining = splits.nonEmpty
-      }
-    }
-    if (splits.isEmpty) {
-      val c = countFn(splits)
-      nNonevent = c._1; nEvent = c._2
-    }
+    def pure(c: (Array[Double], Array[Double])): Array[Boolean] =
+      c._1.zip(c._2).map { case (ne, e) => ne == 0.0 || e == 0.0 }
+    // hellinger/triangular keep pure prebins and bound every bin's
+    // event and non-event counts below instead (`binning.py:1085-1145`)
+    val keepPure = config.divergence == "hellinger" ||
+      config.divergence == "triangular"
+    val (splits, fixed, (nNonevent, nEvent)) =
+      Prebinning.refine(Prebinning.roundSplits(candidates,
+                                               config.splitDigits),
+                        config.userSplitsFixed)(countFn)(c =>
+        if (keepPure) Array.empty else pure(c))
+    val flagMinNEventNonevent =
+      keepPure && splits.nonEmpty && pure((nNonevent, nEvent)).exists(identity)
 
     val n = nNonevent.length
 

@@ -11,7 +11,9 @@ import org.apache.spark.sql.types.DoubleType
   * reference delegates to the ropwr convex solver; here every objective
   * reduces to (iteratively re-)weighted least squares on the value
   * histogram — sufficient statistics of the row-level problem, so no
-  * extra data pass and no solver dependency:
+  * solver dependency. Data plane: the inner binning fit, then the value
+  * histogram of the shared plane (`BinningProcess.aggregate`) over the
+  * same prepared rows (`BinningProcess.Prepared`):
   *
   *  - degree d >= 1, continuous: truncated-power basis
   *    {1, x, .., x^d, (x - s_j)_+^d} gives C^(d-1) continuity
@@ -128,10 +130,11 @@ object PWBinning {
     require(Set("logistic", "empirical")(estimator),
             s"estimator $estimator not supported (logistic|empirical)")
     val tFit0 = System.nanoTime()
-    val binning = OptimalBinning.fit(df, xCol, yCol, config)
+    val prepared = new BinningProcess.Prepared(df, xCol, yCol, config)
+    val binning = OptimalBinning.withDataPass(prepared.binary)
     val tBin = (System.nanoTime() - tFit0) / 1e9
     val tHist0 = System.nanoTime()
-    val hist = valueHistogram(df, xCol, yCol, config)
+    val hist = valueHistogram(prepared)
     val tHist = (System.nanoTime() - tHist0) / 1e9
     val tSolve0 = System.nanoTime()
     val target =
@@ -224,10 +227,11 @@ object PWBinning {
                     monotonicTrend: Option[String] = Some("auto"),
                     continuous: Boolean = true): FittedContPW = {
     val tFit0 = System.nanoTime()
-    val binning = ContinuousOptimalBinning.fit(df, xCol, yCol, config)
+    val prepared = new BinningProcess.Prepared(df, xCol, yCol, config)
+    val binning = ContinuousOptimalBinning.withDataPass(prepared.continuous)
     val tBin = (System.nanoTime() - tFit0) / 1e9
     val tHist0 = System.nanoTime()
-    val hist = valueHistogram(df, xCol, yCol, config)
+    val hist = valueHistogram(prepared)
     val tHist = (System.nanoTime() - tHist0) / 1e9
     val tSolve0 = System.nanoTime()
     val curve = solveCurve(hist, binning.splits, degree, objective,
@@ -243,32 +247,15 @@ object PWBinning {
     fitted
   }
 
-  /** (value, weight, mean target) histogram; grid-compressed beyond the
-    * bucket budget like the fit data plane. */
-  private def valueHistogram(df: DataFrame, xCol: String, yCol: String,
-                             config: BinningConfig)
-      : Array[(Double, Double, Double)] = {
-    val x = col(xCol).cast(DoubleType)
-    val y = col(yCol).cast(DoubleType)
-    val clean = df.where(!x.isNull && !isnan(x))
-      .select(x.as("x"), y.as("y"))
-    val stats = clean.agg(approx_count_distinct(col("x")).as("ndv"),
-                          min(col("x")).as("mn"),
-                          max(col("x")).as("mx")).head
-    val keyed =
-      if (stats.getLong(0) <= config.histogramMaxBuckets) clean
-      else Histograms.gridCompress(clean, "x", stats.getDouble(1),
-                                   stats.getDouble(2),
-                                   config.histogramMaxBuckets)
-    keyed.groupBy("x")
-      .agg(count(lit(1)).cast("double").as("n"), avg(col("y")).as("rate"))
-      .collect()
-      .map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2)))
-      // collect order depends on the shuffle partition count; the
-      // driver-side solves accumulate in array order, so sort to keep
-      // the fitted coefficients identical across Spark configurations
-      .sortBy(_._1)
-  }
+  /** (value, weight, mean target) histogram of the clean rows: the one
+    * histogram plane over the binning's own prepared rows — the same
+    * special codes, row filters (fitted once) and grid — over the
+    * actual values, so user splits are dropped. */
+  private def valueHistogram(prepared: BinningProcess.Prepared)
+      : Array[(Double, Double, Double)] =
+    prepared.valueHistogram(
+      Seq(count(lit(1)).cast("double").as("n"), avg(col("y")).as("rate")))
+      .map { case (v, r) => (v, r.getDouble(0), r.getDouble(1)) }
 
   // ------------------------------------------------------------------
   // solver: (IRLS-)weighted least squares over the histogram

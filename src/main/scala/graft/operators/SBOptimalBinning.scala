@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -11,8 +11,10 @@ import graft.core._
   * bin structure maximizing the weighted sum of per-scenario IVs subject
   * to per-scenario feasibility/monotonicity — the scenario dimension maps
   * onto the same multi-table DP as the multiclass solver. Data plane: the
-  * scenarios are unioned with a scenario id and aggregated in ONE
-  * groupBy(scenario, bin) pass.
+  * scenarios' union, each target tagged with its scenario, on the shared
+  * histogram plane (`BinningProcess.aggregate`) with per-scenario
+  * counts; pooled prebinning and refinement run the shared `Prebinning`
+  * kernel.
   */
 object SBOptimalBinning {
 
@@ -22,68 +24,47 @@ object SBOptimalBinning {
     val weights = scenarios.map(_._2)
     require(math.abs(weights.sum - 1.0) < 1e-9, "weights must sum to 1")
 
-    // union with scenario ids; ONE scan+shuffle aggregates all
-    // scenarios. Null/NaN rows have no bin (the table's Special/Missing
-    // rows are not modeled for scenarios) — unfiltered, a null x would
-    // NPE the histogram collect and a NaN would count into bin 0.
+    // the scenarios' union feeds the one histogram plane, each row's
+    // target tagged with its scenario (2 * sid + event) so the
+    // per-scenario counts ride the same aggregate. Null/NaN rows have no
+    // bin (the table's Special/Missing rows are not modeled for
+    // scenarios), so the plane sees no special codes and no row filters.
+    val nScen = scenarios.size
     val tagged = scenarios.zipWithIndex.map { case ((df, _), i) =>
       df.select(col(xCol).cast(DoubleType).as("x"),
                 col(yCol).cast(DoubleType).as("y"))
         .where(col("x").isNotNull && !isnan(col("x")) &&
                col("y").isNotNull && !isnan(col("y")))
-        .withColumn("sid", lit(i))
+        .select(col("x"), (lit(2.0 * i) +
+          when(col("y") =!= 0.0, 1.0).otherwise(0.0)).as("sy"))
     }.reduce(_ unionByName _)
+    val agg = BinningProcess.aggregate(tagged, "x", "sy",
+      BinningConfig(userSplits = config.userSplits,
+                    splitDigits = config.splitDigits,
+                    histogramMaxBuckets = config.histogramMaxBuckets),
+      (0 until 2 * nScen).map(t =>
+        sum(when(col("y") === t.toDouble, 1.0).otherwise(0.0))) :+
+        count(lit(1)))
+    // per value: row count and per-scenario (non-event, event) counts
+    val rows = agg.hist.map { case (v, r) =>
+      (v, r.getLong(2 * nScen), Array.tabulate(2 * nScen)(r.getDouble))
+    }
 
-    // high-cardinality guard (same design as BinningProcess): beyond
-    // histogramMaxBuckets distinct values, snap x onto a uniform grid so
-    // the collected histogram — and the shuffle feeding it — stays
-    // bounded regardless of data scale
-    val pre = tagged.agg(min("x").as("mn"), max("x").as("mx"),
-                         approx_count_distinct(col("x")).as("ndv")).head
-    val xs: Column =
-      if (!pre.isNullAt(2) && pre.getLong(2) > config.histogramMaxBuckets)
-        Histograms.gridSnap(col("x"), pre.getDouble(0), pre.getDouble(1),
-                            config.histogramMaxBuckets)
-      else col("x")
-
-    val nScen = scenarios.size
-    // pooled value histogram with per-scenario class counts
-    val rows = tagged
-      .groupBy(xs.as("x"))
-      .agg(
-        count(lit(1)).as("n"),
-        sum(when(col("y") === 0.0, 1.0).otherwise(0.0)).as("w0all"),
-        sum(when(col("y") =!= 0.0, 1.0).otherwise(0.0)).as("w1all"),
-        array((0 until nScen).flatMap(i => Seq(
-          sum(when(col("sid") === i && col("y") === 0.0, 1.0)
-            .otherwise(0.0)),
-          sum(when(col("sid") === i && col("y") =!= 0.0, 1.0)
-            .otherwise(0.0)))): _*).as("perScen"))
-      .collect()
-      .map(r => (r.getDouble(0), r.getLong(1), r.getDouble(2),
-                 r.getDouble(3), r.getSeq[Double](4).toArray))
-      .sortBy(_._1)
-
-    // pooled prebinning (CART over all scenarios together,
+    // pooled prebinning (all scenarios together,
     // `binning_scenarios.py:520-560` pools x/y for pre-binning)
-    val pooledHist = rows.map { case (v, n, w0, w1, _) =>
-      Prebinning.HistBucket(v, n, w0, w1)
+    val pooledHist = rows.map { case (v, n, per) =>
+      Prebinning.HistBucket(v, n,
+        (0 until nScen).map(s => per(2 * s)).sum,
+        (0 until nScen).map(s => per(2 * s + 1)).sum)
     }
     val nSamples = rows.map(_._2).sum
-    val rawSplits = config.userSplits match {
-      case Some(us) => us.sorted
-      case None =>
-        val minPrebin = math.ceil(config.minPrebinSize * nSamples).toLong
-        Prebinning.cartSplits(pooledHist, config.maxNPrebins, minPrebin,
-                              classification = true)
-    }
 
     def counts(splits: Array[Double])
         : (Array[Array[Double]], Array[Array[Double]]) = {
       val nBins = splits.length + 1
       val ne = Array.fill(nBins, nScen)(0.0)
       val ev = Array.fill(nBins, nScen)(0.0)
-      rows.foreach { case (v, _, _, _, per) =>
+      rows.foreach { case (v, _, per) =>
         val b = OptimalBinning.upperBound(splits, v)
         (0 until nScen).foreach { s =>
           ne(b)(s) += per(2 * s)
@@ -94,25 +75,18 @@ object SBOptimalBinning {
     }
 
     // refinement: a prebin pure in ANY scenario is merged
-    var splits = rawSplits
-    var (ne, ev) = counts(splits)
-    var refining = splits.nonEmpty
-    while (refining) {
-      val maskRemove = ne.indices.map { i =>
-        (0 until nScen).exists(s => ne(i)(s) == 0.0 || ev(i)(s) == 0.0)
-      }.toArray
-      if (!maskRemove.exists(identity)) refining = false
-      else {
-        val nB = maskRemove.length
-        val maskSplits =
-          if (nB < 2) maskRemove.take(splits.length)
-          else maskRemove.take(nB - 2) :+
-            (maskRemove(nB - 2) || maskRemove(nB - 1))
-        splits = splits.zip(maskSplits).collect { case (s, false) => s }
-        val c = counts(splits); ne = c._1; ev = c._2
-        refining = splits.nonEmpty
+    val (splits, fixed, (ne, ev)) = Prebinning.refine(
+      Prebinning.candidateSplits(pooledHist, config.userSplits,
+        config.prebinningMethod, config.maxNPrebins,
+        math.ceil(config.minPrebinSize * nSamples).toLong,
+        config.splitDigits)(
+        Prebinning.cartSplits(pooledHist, config.maxNPrebins, _,
+                              classification = true)),
+      config.userSplitsFixed)(counts) { case (ne, ev) =>
+        ne.indices.map { i =>
+          (0 until nScen).exists(s => ne(i)(s) == 0.0 || ev(i)(s) == 0.0)
+        }.toArray
       }
-    }
 
     val n = ne.length
     val (status, solution) =
@@ -159,7 +133,7 @@ object SBOptimalBinning {
             math.ceil(f * nSamples).toLong),
           maxBinSize = config.maxBinSize.map(f =>
             math.ceil(f * nSamples).toLong),
-          userSplitsFixed = config.userSplitsFixed,
+          userSplitsFixed = fixed,
           timeLimitMs = config.timeLimitMs)
         val adjV = mds.flatMap(md =>
           md.pvalueViolations ++ md.minDiffViolations)

@@ -221,17 +221,17 @@ object Solver {
         k == cums.length
       }
       // Fixed split i forces x[i, i] == 1 in the reference CP
-      // (`cp.py:580-584`): the prebin ENDING at that split is a bin on its
-      // own, so a bin of two or more prebins may contain no fixed one.
+      // (`cp.py:580-584`): some bin ends at prebin i, so the split is
+      // kept, and no bin s..e holds it strictly inside (s <= i < e).
       val fixed = cons.userSplitsFixed.getOrElse(Array.empty[Boolean])
       val cumFixed = prefix(fixed.map(f => if (f) 1L else 0L))
       Array.tabulate(n) { s =>
         val row = new Array[Boolean](n)
         var e = s
         while (e < n) {
-          val hi = math.min(e, fixed.length - 1)
+          val hi = math.min(e - 1, fixed.length - 1)
           row(e) =
-            !(e > s && hi >= s && cumFixed(hi + 1) > cumFixed(s)) &&
+            !(hi >= s && cumFixed(hi + 1) > cumFixed(s)) &&
             !(e == s && bannedSingletons != null && bannedSingletons(s)) &&
             countsOk(s, e)
           e += 1

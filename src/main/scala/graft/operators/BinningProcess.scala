@@ -1,10 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StringType}
 
 import scala.collection.parallel.CollectionConverters._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.jdk.FutureConverters._
+import scala.util.Try
 
 import graft.core.Prebinning
 
@@ -109,19 +114,43 @@ object BinningProcess {
     overrides.getOrElse(v, config).copy(name = v, dtype = dtype)
 
   /** Binary-target fits of (variable, config) pairs, each config used
-    * as given; `dtype = "categorical"` selects the categorical batch. */
+    * as given; `dtype = "categorical"` selects the categorical batch.
+    * The two batches share nothing, so the categorical batch runs as a
+    * concurrent driver action while the numeric batch runs its passes
+    * and solves. */
   private[graft] def fitBinary(df: DataFrame,
                                vars: Seq[(String, BinningConfig)],
                                yCol: String, weightCol: Option[String])
       : Map[String, FittedOptimalBinning] = {
     val (cat, num) = vars.partition(_._2.dtype == "categorical")
-    (if (num.isEmpty) Map.empty[String, FittedOptimalBinning]
-     else fitNumericBatch(new Rows(df, num, yCol, weightCol,
-                                   isNumeric = true))) ++
-    (if (cat.isEmpty) Map.empty
-     else fitCategoricalBatch(new Rows(df, cat, yCol, weightCol,
-                                       isNumeric = false)))
+    def numeric =
+      if (num.isEmpty) Map.empty[String, FittedOptimalBinning]
+      else fitNumericBatch(new Rows(df, num, yCol, weightCol,
+                                    isNumeric = true))
+    def categorical =
+      if (cat.isEmpty) Map.empty[String, FittedOptimalBinning]
+      else fitCategoricalBatch(new Rows(df, cat, yCol, weightCol,
+                                        isNumeric = false))
+    if (num.isEmpty || cat.isEmpty) numeric ++ categorical
+    else {
+      val catFits = concurrently(df)(categorical)
+      val numFits = try numeric finally Await.ready(catFits, Duration.Inf)
+      numFits ++ Await.result(catFits, Duration.Inf)
+    }
   }
+
+  private lazy val actionPool = ExecutionContext.fromExecutorService(null)
+
+  /** `body` as a concurrent driver action, on a pool thread that takes
+    * on the calling thread's Spark session and local properties (job
+    * group, description, scheduler pool) for the task. A bare pool
+    * thread keeps those of whichever thread created it, so its jobs
+    * would escape the caller's job group. */
+  private def concurrently[T](df: DataFrame)(body: => T): Future[T] =
+    SQLExecution.withThreadLocalCaptured(
+        df.sparkSession.asInstanceOf[classic.SparkSession], actionPool)(
+        Try(body))
+      .asScala.map(_.get)(ExecutionContext.parasitic)
 
   /** Continuous-target fits of numeric (variable, config) pairs, each
     * config used as given. */
@@ -519,7 +548,7 @@ object BinningProcess {
 
     val wide = r.wide
     val groupRows: Seq[(Seq[Int], Row)] =
-      passAChunks.par.map { group =>
+      passAChunks.map { group => concurrently(wide) {
         val aggCols: Seq[Column] = group.flatMap { i =>
           val cls = r.cls(i)
           val w = r.weight(i)
@@ -538,7 +567,7 @@ object BinningProcess {
                           approx_count_distinct(cleanX).as(s"ndv_$i"))
         }
         group -> wide.agg(aggCols.head, aggCols.tail: _*).collect()(0)
-      }.toList
+      }}.map(Await.result(_, Duration.Inf))
 
     val totals = groupRows.flatMap { case (group, row) =>
       group.map { i =>

@@ -250,16 +250,19 @@ object OptimalBinning {
       categories: Array[String],
       catOthers: Array[String],
       othersTotals: Option[ClassTotals] = None,
-      othersCatchAll: Boolean = false): FittedOptimalBinning =
-    fitFromCounts(
-      Prebinning.candidateSplits(hist, config.userSplits,
+      othersCatchAll: Boolean = false): FittedOptimalBinning = {
+    val t0 = System.nanoTime()
+    val candidates = Prebinning.candidateSplits(hist, config.userSplits,
         config.prebinningMethod, config.maxNPrebins,
         math.ceil(config.minPrebinSize * nSamplesWeighted).toLong,
         config.splitDigits)(
         Prebinning.cartSplits(hist, config.maxNPrebins, _,
-                              classification = true)),
-      s => prebinCounts(hist, s), totals, nSamplesWeighted, config,
-      categories, catOthers, othersTotals, othersCatchAll = othersCatchAll)
+                              classification = true))
+    fitFromCounts(candidates, s => prebinCounts(hist, s), totals,
+      nSamplesWeighted, config, categories, catOthers, othersTotals,
+      othersCatchAll = othersCatchAll,
+      candidatesS = (System.nanoTime() - t0) / 1e9)
+  }
 
   /** Driver-side phase shared by the histogram fit and the sketch fit:
     * `split_digits` rounding of `candidates` (idempotent, so candidates
@@ -267,6 +270,8 @@ object OptimalBinning {
     * refinement + solve + table, with a pluggable per-split-set count
     * function (`countFn` recomputes (n_nonevent, n_event) after each
     * refinement drop — histogram re-digitize or sketch `bins()`).
+    * `candidatesS`, the caller's time choosing `candidates`, is reported
+    * with refinement as the "prebinning" phase.
     */
   private[graft] def fitFromCounts(
       candidates: Array[Double],
@@ -278,8 +283,9 @@ object OptimalBinning {
       catOthers: Array[String],
       othersTotals: Option[ClassTotals] = None,
       ordinalGroups: Array[Array[String]] = null,
-      othersCatchAll: Boolean = false): FittedOptimalBinning = {
-
+      othersCatchAll: Boolean = false,
+      candidatesS: Double = 0.0): FittedOptimalBinning = {
+    val tPre0 = System.nanoTime()
     val isCategorical = categories != null || ordinalGroups != null
     def pure(c: (Array[Double], Array[Double])): Array[Boolean] =
       c._1.zip(c._2).map { case (ne, e) => ne == 0.0 || e == 0.0 }
@@ -436,6 +442,7 @@ object OptimalBinning {
                                catsOut, binsOfCats, catOthers, nDataBins,
                                othersCatchAll)
     fitted.timings = Map(
+      "prebinning" -> (candidatesS + (tSolve0 - tPre0) / 1e9),
       "solver" -> tSolve,
       "postprocessing" -> (System.nanoTime() - tPost0) / 1e9)
     fitted
@@ -529,8 +536,9 @@ final class FittedOptimalBinning(
 
   /** Per-phase wall times in seconds — the reference's `information()`
     * breakdown (`binning.py:528-534, 670-702`): "data_pass" (the Spark
-    * aggregate jobs), "solver", "postprocessing", "total". Empty when the
-    * model was loaded from JSON rather than fitted. */
+    * aggregate jobs), "prebinning" (candidate splits and refinement),
+    * "solver", "postprocessing", "total". Empty when the model was
+    * loaded from JSON rather than fitted. */
   @transient var timings: Map[String, Double] = Map.empty
 
   /** Human-readable fit summary (`information()` mirror). */
@@ -542,6 +550,7 @@ final class FittedOptimalBinning(
        |  iv               ${table.iv}%.8f
        |  time total       ${t("total")}%.4f s
        |    data pass      ${t("data_pass")}%.4f s
+       |    prebinning     ${t("prebinning")}%.4f s
        |    solver         ${t("solver")}%.4f s
        |    postprocessing ${t("postprocessing")}%.4f s""".stripMargin
   }

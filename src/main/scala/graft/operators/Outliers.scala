@@ -109,7 +109,10 @@ object Outliers {
         java.util.Arrays.sort(dev)
         (m, interp(dev, 0.5))
       }
-    abs(lit(0.6745) * (x - lit(med)) / lit(mad)) > threshold
+    // a zero MAD gives numpy's inf (x != med, an outlier) or NaN
+    // (x == med, kept), not a division by zero
+    if (mad == 0.0) x =!= lit(med)
+    else abs(lit(0.6745) * (x - lit(med)) / lit(mad)) > threshold
   }
 
   /** Per-x-quantile-bin outlier removal on y (`outlier.py:187-227`):
@@ -156,7 +159,10 @@ object Outliers {
         val madCase = mads.foldLeft(lit(Double.NaN)) {
           case (acc, (b, m)) => when(binIdx(x) === b, lit(m)).otherwise(acc)
         }
-        abs(lit(0.6745) * (y - medCase) / madCase) > 3.5
+        // a zero-MAD bin gives numpy's inf (y != med, an outlier) or
+        // NaN (y == med, kept), not a division by zero
+        when(madCase === 0.0, y =!= medCase)
+          .otherwise(abs(lit(0.6745) * (y - medCase) / madCase) > 3.5)
       case "range" =>
         val bounds = binned.groupBy("bin")
           .agg(percentile(col("y"), array(lit(0.25), lit(0.75))).as("q"))

@@ -96,12 +96,8 @@ object Scorecard {
       .agg(comboW.as("w"))
     val probe: Array[org.apache.spark.sql.Row] =
       if (comboProduct > 1e9) Array.empty
-      else grouped.limit(MaxCombos + 1).collect()
-        // collect order depends on the shuffle partition count; the
-        // driver IRLS/WLS accumulates in row order, so impose a total
-        // order to keep coefficients identical across configurations
-        .sortBy(r => (0 to selected.size)
-          .map(i => numericValue(r.get(i)).toString).mkString("|"))
+      else inKeyOrder(grouped.limit(MaxCombos + 1).collect(),
+                      selected.size + 1)
     val oversized = comboProduct > 1e9 || probe.length > MaxCombos
     val compact =
       if (oversized)
@@ -300,10 +296,7 @@ object Scorecard {
           .agg(avg(col("__y")).as("__ybar"),
                count(lit(1)).cast("double").as("__w"))
           .collect()
-          // deterministic accumulation order (see the binary fit)
-          .sortBy(r => (0 until p).map(i => r.getDouble(i).toString)
-            .mkString("|"))
-        driverGlmFit(compact, p, "continuous")
+        driverGlmFit(inKeyOrder(compact, p), p, "continuous")
       } else {
         val assembler = new VectorAssembler()
           .setInputCols(variables.toArray).setOutputCol("features")
@@ -462,6 +455,18 @@ object Scorecard {
         throw new IllegalArgumentException(s"unknown target $other")
     }
   }
+
+  /** `rows` in the order of their first `nKey` columns' values joined
+    * as strings. Collect order depends on the shuffle partition count,
+    * and the driver IRLS/WLS accumulates in row order, so this total
+    * order keeps coefficients identical across configurations. Each
+    * key is built once: a `sortBy` key function runs on every
+    * comparison. */
+  private def inKeyOrder(rows: Array[org.apache.spark.sql.Row],
+                         nKey: Int): Array[org.apache.spark.sql.Row] =
+    rows.map(r => (0 until nKey).map(i => numericValue(r.get(i)).toString)
+                    .mkString("|") -> r)
+      .sortBy(_._1).map(_._2)
 
   private def numericValue(v: Any): Double = v match {
     case d: java.lang.Double  => d

@@ -131,6 +131,99 @@ class BinningDataPlaneSpec extends AnyFunSuite {
     assert(t.tEvent.toLong == events(li) - events(flagged))
   }
 
+  test("outlierDetector = yquantile over zero-MAD bins drops the rows " +
+       "off their bin's median instead of dividing by zero") {
+    val df = TestSpark.spark.read
+      .parquet(s"${TestSpark.sf001}/lineitem.parquet")
+      .withColumn("y", when(col("l_returnflag") === "R", 1.0).otherwise(0.0))
+    // every x-quintile holds fewer than half events: its y median and
+    // MAD are 0, so numpy's inf/NaN makes every event row an outlier
+    // and keeps every non-event row
+    val shares = df
+      .withColumn("q", ntile(5).over(
+        org.apache.spark.sql.expressions.Window.orderBy("l_extendedprice")))
+      .groupBy("q").agg(avg(col("y"))).collect().map(_.getDouble(1))
+    assert(shares.forall(_ < 0.45), shares.mkString(","))
+    val f = OptimalBinning.fit(df, "l_extendedprice", "y",
+      BinningConfig(outlierDetector = Some("yquantile")))
+    assert(f.status == "OPTIMAL")
+    assert(f.table.tEvent == 0.0)
+    assert(f.table.tRecords.toLong == df.count() - events(df))
+  }
+
+  test("outlierDetector = zscore with a zero MAD drops the rows off the " +
+       "median instead of dividing by zero") {
+    // over half the rows share x = 1, so the median is 1 and the MAD 0
+    val df = li.withColumn("z",
+      when(col("l_quantity") < 35, 1.0).otherwise(col("l_quantity")))
+    val f = OptimalBinning.fit(df, "z", "y",
+      BinningConfig(outlierDetector = Some("zscore")))
+    assert(f.status == "OPTIMAL")
+    val kept = df.where(col("z") === 1.0)
+    assert(kept.count() * 2 > df.count())
+    assert(f.table.tRecords.toLong == kept.count())
+    assert(f.table.tEvent.toLong == events(kept))
+  }
+
+  test("fit timings: data pass, prebinning, solver and postprocessing " +
+       "add up to the total") {
+    for (x <- Seq("l_extendedprice", "l_returnflag")) {
+      val t = OptimalBinning.fit(li, x, "y",
+        BinningConfig(dtype = if (x == "l_returnflag") "categorical"
+                              else "numerical")).timings
+      val phases = Seq("data_pass", "prebinning", "solver", "postprocessing")
+      phases.foreach(k => assert(t.getOrElse(k, -1.0) >= 0.0, s"$x $k"))
+      assert(math.abs(t("total") - phases.map(t).sum) < 1e-6, s"$x $t")
+    }
+  }
+
+  test("a mixed numeric + categorical fit equals the two families " +
+       "fitted apart, in as many jobs") {
+    val df = li.withColumn("linenumber", col("l_linenumber").cast("string"))
+    val num = Seq("l_extendedprice", "l_quantity")
+    val cat = Seq("linenumber", "l_linestatus")
+    BinningProcess.fit(df, num ++ cat, "y") // one-time jobs (footers)
+    var mixed, numOnly, catOnly: FittedBinningProcess = null
+    val jobs = Seq(jobsOf { mixed = BinningProcess.fit(df, num ++ cat, "y") },
+                   jobsOf { numOnly = BinningProcess.fit(df, num, "y") },
+                   jobsOf { catOnly = BinningProcess.fit(df, cat, "y") })
+    info(s"jobs: mixed ${jobs(0)}, numeric ${jobs(1)}, categorical ${jobs(2)}")
+    assert(jobs(0) == jobs(1) + jobs(2))
+    for ((v, apart) <- num.map(_ -> numOnly) ++ cat.map(_ -> catOnly)) {
+      val (a, b) = (mixed.fits(v), apart.fits(v))
+      assert(a.status == b.status, v)
+      assert(a.splits.toSeq == b.splits.toSeq, v)
+      assert(a.table.nRecords.toSeq == b.table.nRecords.toSeq, v)
+      assert(a.table.nEvent.toSeq == b.table.nEvent.toSeq, v)
+      assert(Option(a.catBins).map(_.map(_.toSeq).toSeq) ==
+               Option(b.catBins).map(_.map(_.toSeq).toSeq), v)
+    }
+  }
+
+  test("every job of a mixed fit carries the caller's job group, call " +
+       "after call") {
+    val sc = TestSpark.spark.sparkContext
+    val df = li.withColumn("linenumber", col("l_linenumber").cast("string"))
+    for (round <- 1 to 3) {
+      TestListenerDrain(sc)
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          groups.add(String.valueOf(
+            e.properties.getProperty("spark.jobGroup.id")))
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(s"mixed-$round", "mixed fit")
+      try {
+        BinningProcess.fit(df,
+          Seq("l_quantity", "l_extendedprice", "linenumber"), "y")
+        TestListenerDrain(sc)
+      } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+      assert(!groups.isEmpty)
+      groups.forEach(g => assert(g == s"mixed-$round", groups))
+    }
+  }
+
   test("a varOverrides histogramMaxBuckets = 50 gives the splits of a " +
        "one-variable fit with that config") {
     val cfg = BinningConfig(histogramMaxBuckets = 50)

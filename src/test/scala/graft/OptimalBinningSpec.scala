@@ -159,12 +159,14 @@ class OptimalBinningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.read.parquet(TestSpark.breastCancer)
     val f = OptimalBinning.fit(df, "mean radius", "target", BinningConfig())
     val t = f.timings
-    for (k <- Seq("total", "data_pass", "solver", "postprocessing")) {
+    for (k <- Seq("total", "data_pass", "prebinning", "solver",
+                  "postprocessing")) {
       assert(t.contains(k), s"missing phase $k")
       assert(t(k) >= 0.0, s"$k negative: ${t(k)}")
     }
     assert(t("total") > 0.0)
-    val phaseSum = t("data_pass") + t("solver") + t("postprocessing")
+    val phaseSum = t("data_pass") + t("prebinning") + t("solver") +
+      t("postprocessing")
     assert(math.abs(t("total") - phaseSum) < 1e-6,
            s"phases $phaseSum vs total ${t("total")}")
     assert(f.information().contains("solver"))

@@ -33,7 +33,8 @@ class PropertySpec extends AnyFunSuite {
                                 minBinSize: Option[Long] = None,
                                 minNBins: Option[Int] = None,
                                 maxNBins: Option[Int] = None,
-                                gammaReg: Long = 0L) {
+                                gammaReg: Long = 0L,
+                                fixed: Option[Array[Boolean]] = None) {
     val n: Int = ne.length
     val md = ModelData.binary("iv", ne, ev, maxPvalue, policy, 0.0)
     val records: Array[Long] =
@@ -44,7 +45,8 @@ class PropertySpec extends AnyFunSuite {
             Array.empty[((Int, Int), (Int, Int))])
     def constraints: Solver.Constraints =
       Solver.Constraints(minNBins = minNBins, maxNBins = maxNBins,
-                         minBinSize = minBinSize, gammaReg = gammaReg)
+                         minBinSize = minBinSize, gammaReg = gammaReg,
+                         userSplitsFixed = fixed)
     def solve(trend: Option[String], tc: Int = -1,
               cons: Solver.Constraints = constraints): Solver.Result =
       Solver.solve(n, md.d, md.v, records, ev.map(math.round),
@@ -53,13 +55,15 @@ class PropertySpec extends AnyFunSuite {
     override def toString: String =
       s"ne=${ne.mkString(",")} ev=${ev.mkString(",")} p=$maxPvalue " +
         s"$policy minSize=$minBinSize nBins=$minNBins..$maxNBins " +
-        s"gamma=$gammaReg"
+        s"gamma=$gammaReg" +
+        fixed.fold("")(f => s" fixed=${f.map(if (_) 1 else 0).mkString}")
   }
 
   /** brute force: enumerate all split subsets, apply the same per-bin,
     * bin-count, violation-pair and trend rules, and return the best scaled
     * objective (gamma penalty included) with every partition reaching it
-    * (Long.MinValue and none when infeasible). "peak" means the bin rates
+    * (Long.MinValue and none when infeasible). A fixed split i is one
+    * that some bin ends at prebin i. "peak" means the bin rates
     * rise (ties allowed) up to some bin and fall after it; "valley" is
     * the mirror. */
   private def bruteForce(inst: Inst, trend: Option[String])
@@ -90,6 +94,7 @@ class PropertySpec extends AnyFunSuite {
         case _ => true
       }
       val ok = trendOk &&
+        fixed.forall(_.indices.forall(i => !fixed.get(i) || ends.contains(i))) &&
         minBinSize.forall(m => sizes.forall(_ >= m)) &&
         minNBins.forall(k >= _) && maxNBins.forall(k <= _) &&
         !(0 until k).exists(b => (0 until b).exists { a =>
@@ -276,6 +281,50 @@ class PropertySpec extends AnyFunSuite {
       val r = inst.solve(Some(trend),
                          cons = inst.constraints.copy(timeLimitMs = 0L))
       assert(r.status == "FEASIBLE" || r.status == "UNKNOWN", r.status)
+    }
+  }
+
+  test("fixed user splits on random partial masks: DP and DFS keep " +
+       "every fixed split and equal brute force") {
+    val gen = for {
+      dfs <- Gen.oneOf(false, true)
+      inst <- instGen(2, 9, dfs)
+      mask <- Gen.listOfN(inst.n - 1, Gen.oneOf(false, false, true))
+    } yield inst.copy(fixed = Some(mask.toArray))
+    var partial = 0
+    forAll(gen, n = 150) { inst =>
+      val mask = inst.fixed.get
+      if (mask.contains(true) && mask.contains(false)) partial += 1
+      for (trend <- Seq(None, Some("ascending"), Some("descending"),
+                        Some("peak"), Some("valley"))) {
+        val r = inst.solve(trend)
+        val (best, optima) = bruteForce(inst, trend)
+        val ctx = s"$trend $inst"
+        if (optima.isEmpty) assert(r.status == "INFEASIBLE", ctx)
+        else {
+          assert(r.status == "OPTIMAL", ctx)
+          assert(r.objective == best, s"$ctx: ${r.objective} vs brute $best")
+          assert(optima.exists(_.sameElements(r.solution)), ctx)
+        }
+      }
+    }
+    assert(partial > 50, s"$partial partial masks")
+  }
+
+  test("a fixed user split keeps its split and nothing more: user " +
+       "splits 1/2/3 over four prebins, max 2 bins, one split fixed") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val df = Seq((0.5, 1.0), (0.6, 2.0), (1.5, 9.0), (1.6, 8.0),
+                 (2.5, 3.0), (2.6, 1.0), (3.5, 7.0), (3.6, 9.0))
+      .toDF("x", "y")
+    for (k <- 0 until 3) {
+      val f = ContinuousOptimalBinning.fit(df, "x", "y",
+        BinningConfig(userSplits = Some(Array(1.0, 2.0, 3.0)),
+                      userSplitsFixed = Some(Array.tabulate(3)(_ == k)),
+                      maxNBins = Some(2)))
+      assert(f.status == "OPTIMAL", s"split ${k + 1} fixed")
+      assert(f.splits.toSeq == Seq(k + 1.0), s"split ${k + 1} fixed")
     }
   }
 
